@@ -27,9 +27,20 @@ object GraftFunctions {
     "vec_dot" -> ((es: Seq[Expression]) => VecDot(es(0), es(1))),
     "text_shingles" -> ((es: Seq[Expression]) => TextShingles(es(0), es(1))),
     "text_simhash" -> ((es: Seq[Expression]) => TextSimhash(es.head)),
+    "text_hash_set" -> ((es: Seq[Expression]) => TextHashSet(es(0), es(1))),
+    "minhash_bands" -> ((es: Seq[Expression]) =>
+      MinhashBands(es(0), constant(es(1)).toInt, constant(es(2)).toInt, constant(es(3)))),
+    "sorted_intersect_size" -> ((es: Seq[Expression]) => SortedIntersectSize(es(0), es(1))),
     "url_surt" -> ((es: Seq[Expression]) => UrlSurt(es.head)),
     "url_tld" -> ((es: Seq[Expression]) => PublicSuffixOf(es.head))
   )
+
+  /** The value of a constant integral argument (a literal in SQL text or
+    * `lit(...)` in the Column API). */
+  private def constant(e: Expression): Long = {
+    require(e.foldable, s"${e.sql} must be a constant")
+    e.eval().asInstanceOf[Number].longValue
+  }
 
   // sessions already registered — createOrReplaceTempFunction WARNs on every
   // replace, so a per-query register() call must be a no-op after the first

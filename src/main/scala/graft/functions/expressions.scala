@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.url.{Urls, UrlFilters}
@@ -195,33 +196,36 @@ case class UrlAccept(child: Expression) extends UnaryExpression {
   override def prettyName: String = "url_accept"
 }
 
-/** Allocation-light substring occurrence count — the leftmost non-overlapping
+/** Allocation-free substring occurrence count — the leftmost non-overlapping
   * scan, exactly what `(length(s) - length(replace(s, n, ''))) / length(n)`
   * counts, WITHOUT materializing a replaced copy of the text per needle per
   * row (the marker-word scorers run a dozen needles over every document).
   *
-  * One forward pass over the haystack bytes. (UTF8String.indexOf takes a
-  * CHAR start position and re-walks the string from byte 0 to find it on
-  * every call, so an indexOf loop is O(matches × position) — quadratic for
-  * a dense needle like a single space. Byte-pattern matching is exact for
-  * UTF-8: a valid needle's first byte is never a continuation byte, so a
-  * byte match can only start on a codepoint boundary, and advancing by the
-  * needle's byte length past a match reproduces the non-overlapping
-  * char-based count.) */
+  * One forward pass over the haystack bytes, read in place through the
+  * string's base object and offset (no getBytes copy). (UTF8String.indexOf
+  * takes a CHAR start position and re-walks the string from byte 0 to find
+  * it on every call, so an indexOf loop is O(matches × position) —
+  * quadratic for a dense needle like a single space. Byte-pattern matching
+  * is exact for UTF-8: a valid needle's first byte is never a continuation
+  * byte, so a byte match can only start on a codepoint boundary, and
+  * advancing by the needle's byte length past a match reproduces the
+  * non-overlapping char-based count.) */
 object TextNative {
   def countSubstr(s: UTF8String, n: UTF8String): Long = {
     val nlen = n.numBytes()
     if (nlen == 0) return 0L
-    val hb = s.getBytes
-    val nb = n.getBytes
-    val limit = hb.length - nlen
-    val first = nb(0)
+    val hBase = s.getBaseObject
+    val hOff = s.getBaseOffset
+    val nBase = n.getBaseObject
+    val nOff = n.getBaseOffset
+    val limit = s.numBytes() - nlen
+    val first = Platform.getByte(nBase, nOff)
     var c = 0L
     var i = 0
     while (i <= limit) {
-      if (hb(i) == first) {
+      if (Platform.getByte(hBase, hOff + i) == first) {
         var j = 1
-        while (j < nlen && hb(i + j) == nb(j)) j += 1
+        while (j < nlen && Platform.getByte(hBase, hOff + i + j) == Platform.getByte(nBase, nOff + j)) j += 1
         if (j == nlen) { c += 1; i += nlen } else i += 1
       } else i += 1
     }

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -107,7 +107,7 @@ object VecNative {
       if (i == len || b(i) == 0x20) {
         val tl = i - start
         if (tl > 0) {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          val h = XXH64.hashUnsafeBytes(
             b, Platform.BYTE_ARRAY_OFFSET + start, tl, 42L)
           total += 1
           var bit = 0
@@ -122,6 +122,118 @@ object VecNative {
     var bit = 0
     while (bit < 64) { if (2L * ones(bit) > total) fp |= 1L << bit; bit += 1 }
     fp
+  }
+
+  /** Sorted, distinct 64-bit hash set of a text's word n-grams — the exact
+    * twin of
+    * `array_sort(array_distinct(transform(text_shingles(text, n), s -> xxhash64(s))))`
+    * for n ≥ 2. For n = 1 the elements are the hashes of the non-empty
+    * whitespace tokens (the DedupOps.docTokens contract: empty tokens from
+    * runs of spaces are dropped, and a blank text gives the empty set).
+    *
+    * Each element is catalyst XXH64 (seed 42) of the shingle's UTF-8 bytes,
+    * hashed in place over the text's own buffer: shingle k is the byte span
+    * from the start of token k to the end of token min(k+n-1, m-1) of the
+    * trimmed text (see [[shingles]]), so no shingle string is ever built.
+    * Ascending signed order, as array_sort orders bigint. */
+  def hashSet(s: UTF8String, n: Int): ArrayData = {
+    require(n >= 1, s"n-gram size must be positive, got $n")
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
+    // trim = StringTrim: ASCII 0x20 both ends
+    var lo = 0
+    var hi = s.numBytes
+    while (lo < hi && at(lo) == 0x20) lo += 1
+    while (hi > lo && at(hi - 1) == 0x20) hi -= 1
+    var m = 1
+    var i = lo
+    while (i < hi) { if (at(i) == 0x20) m += 1; i += 1 }
+    // token t spans [starts(t), starts(t + 1) - 1)
+    val starts = new Array[Int](m + 1)
+    var t = 1
+    i = lo
+    while (i < hi) { if (at(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
+    starts(0) = lo
+    starts(m) = hi + 1
+    val count = math.max(m - n, 0) + 1
+    val hs = new Array[Long](count)
+    var d = 0
+    var k = 0
+    while (k < count) {
+      val start = starts(k)
+      val end = starts(math.min(k + n, m)) - 1
+      if (n > 1 || end > start) {
+        hs(d) = XXH64.hashUnsafeBytes(base, off + start, end - start, 42L)
+        d += 1
+      }
+      k += 1
+    }
+    java.util.Arrays.sort(hs, 0, d)
+    var u = 0
+    k = 0
+    while (k < d) {
+      if (u == 0 || hs(k) != hs(u - 1)) { hs(u) = hs(k); u += 1 }
+      k += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(if (u == count) hs else java.util.Arrays.copyOf(hs, u))
+  }
+
+  /** MinHash band buckets of a hash set — the exact twin of the
+    * aggregation form over the set's exploded elements `sh`:
+    *   mh_i = min(xxhash64(sh, seed + i))                 for i < numHashes
+    *   bucket_b = xxhash64(mh_{b·r}, …, mh_{b·r+r-1})     r = numHashes / bands
+    * (catalyst XXH64 with seed 42 chained through each argument, as
+    * HashOracles.minhashLshSql mirrors). The min over a set equals the min
+    * over any multiset of the same elements, so the signature is row-local.
+    * XXH64.hashLong(sh, 42), the first link of every chain, does not
+    * depend on i and is computed once per element. Null for an empty set
+    * (the aggregation form has no row to take a min over). */
+  def minhashBands(set: ArrayData, numHashes: Int, bands: Int, seed: Long): ArrayData = {
+    val len = set.numElements()
+    if (len == 0) return null
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var k = 0
+    while (k < len) {
+      val h = XXH64.hashLong(set.getLong(k), 42L)
+      var i = 0
+      while (i < numHashes) {
+        val v = XXH64.hashLong(seed + i, h)
+        if (v < mins(i)) mins(i) = v
+        i += 1
+      }
+      k += 1
+    }
+    val rows = numHashes / bands
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var i = b * rows
+      while (i < (b + 1) * rows) { h = XXH64.hashLong(mins(i), h); i += 1 }
+      out(b) = h
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** |a ∩ b| of two sorted, distinct bigint arrays (the [[hashSet]] shape)
+    * by one merge pass — equal to `size(array_intersect(a, b))` on such
+    * inputs, without the hash set array_intersect builds per row. */
+  def intersectSize(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (x > y) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
   }
 }
 
@@ -198,4 +310,60 @@ case class TextSimhash(child: Expression) extends UnaryExpression {
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "text_simhash"
+}
+
+/** Codegen'd sorted distinct n-gram hash set (see [[VecNative.hashSet]]). */
+case class TextHashSet(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = left.nullable || right.nullable
+  override protected def nullSafeEval(s: Any, n: Any): Any =
+    VecNative.hashSet(s.asInstanceOf[UTF8String], n.asInstanceOf[Int])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (s, n) => s"graft.functions.VecNative.hashSet($s, $n)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(l, r)
+  override def prettyName: String = "text_hash_set"
+}
+
+/** Codegen'd row-local MinHash band buckets of a hash set (see
+  * [[VecNative.minhashBands]]); null for a null or empty set. The shape
+  * arguments are constants, fixed when the expression is built. */
+case class MinhashBands(child: Expression, numHashes: Int, bands: Int, seed: Long)
+    extends UnaryExpression {
+  require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
+    s"bands ($bands) must divide numHashes ($numHashes)")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) null
+    else VecNative.minhashBands(v.asInstanceOf[ArrayData], numHashes, bands, seed)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      if (!${c.isNull}) {
+        ${ev.value} = graft.functions.VecNative.minhashBands(
+          ${c.value}, $numHashes, $bands, ${seed}L);
+      }
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "minhash_bands"
+}
+
+/** Codegen'd merge intersection size of two sorted distinct bigint arrays
+  * (see [[VecNative.intersectSize]]). */
+case class SortedIntersectSize(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = left.nullable || right.nullable
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecNative.intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecNative.intersectSize($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(l, r)
+  override def prettyName: String = "sorted_intersect_size"
 }

@@ -1,30 +1,39 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Deduplication operators for training-data pipelines.
   *
-  * Four tiers, trading exactness for scale:
-  *  - exact:        hash-groupBy on content digest — one shuffle.
-  *  - unigramJaccard: exact set-similarity via token inverted index —
-  *    the oracle-mirrorable baseline (quadratic only within shared tokens).
-  *  - minhashLsh:   MinHash signatures + banded LSH buckets — candidates
-  *    are verified against exact shingle Jaccard; this is the 100 TB path:
-  *    cost is O(docs × hashes) + bucket-local joins, never all-pairs.
-  *  - simhash:      64-bit fingerprints + chunk-banding for hamming ≤ k —
+  * Tiers, trading exactness for scale:
+  *  - exact: hash-groupBy on the content digest, one shuffle.
+  *  - set similarity: unigramJaccardPairs and ngramJaccardPairs (exact) and
+  *    minhashLshPairs (approximate) share one core. Its per-document value
+  *    is the sorted, distinct `array<bigint>` of the document's token or
+  *    shingle hashes ([[docHashSets]], built row-local by the codegen'd
+  *    `text_hash_set` kernel and cached). Every pair operator filters, then
+  *    verifies:
+  *      - exact Jaccard: prefix filtering on the sorted hash order;
+  *      - MinHash: row-local `minhash_bands` signatures, then (band, bucket)
+  *        self-joins — O(docs × hashes) plus bucket-local joins, never
+  *        all-pairs;
+  *      - verification ([[verified]]): one merge-intersect per candidate
+  *        pair (`sorted_intersect_size`), set sizes from `size(set)`.
+  *  - simhash: 64-bit fingerprints + chunk-banding for hamming ≤ k —
   *    near-dup at one long per doc.
+  *
+  * Hash identity: a token or shingle is its 64-bit XXH64 (seed 42). Over N
+  * distinct shingles the chance that any two share a hash is at most
+  * N(N−1)/2 · 2⁻⁶⁴ ≈ N²/2⁶⁵ (about 3·10⁻⁸ at N = 10⁶, 3·10⁻² at N = 10⁹).
+  * Without a collision the hash-set Jaccard equals the raw-string Jaccard,
+  * so the exact operators stay exact against their raw-string oracles
+  * (DedupSetSpec checks injectivity over the sf0.001 and sf0.01 corpora).
+  *
+  * Contract: doc_id is unique per row (true of every corpus table). The set
+  * is a function of one row's text, so two rows sharing an id are two
+  * documents here, where a per-id distinct would have merged them.
   */
 object DedupOps {
-
-  /** persist unless this exact plan is already cached — re-persisting an
-    * already-cached plan is a no-op that spams CacheManager warnings when
-    * two queries share a lineage (e.g. clusters over the pair graph). */
-  private def persistSpillable(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
 
   /** Exact duplicate groups by content digest. */
   def exactDups(docs: DataFrame): DataFrame =
@@ -40,73 +49,97 @@ object DedupOps {
       .filter(length(col("token")) > 0)
       .distinct()
 
-  /** Document-frequency cut: drop tokens/shingles present in more than
-    * maxDfFraction × nDocs documents BEFORE an inverted-index self-join.
+  /** (doc_id, set): the sorted, distinct hashes of each document's word
+    * n-grams (n = 1: its non-empty whitespace tokens), persisted. The plan
+    * is the same for every call with the same (docs, n), so the n-gram,
+    * MinHash and cluster queries over one corpus share one cached set. */
+  def docHashSets(docs: DataFrame, n: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    persistSpillable(docs.select(col("doc_id"),
+      call_function("text_hash_set", col("text"), lit(n)).as("set")))
+  }
+
+  /** Document-frequency cut: drop terms present in more than
+    * maxDfFraction × nDocs documents BEFORE the candidate self-join.
     *
     * Without it the self-join is quadratic in the hottest key: one
     * boilerplate shingle shared by a million pages joins 10^6 × 10^6 rows.
     * Ubiquitous terms contribute almost nothing to Jaccard (they appear in
     * both sets of nearly every pair), so cutting them bounds the join while
     * barely moving scores — the standard df/positional-filtering trade.
+    * Hot hashes leave the sets before sizes and prefixes are taken, so
+    * scores are over the cut sets.
     *
     * NOT silent: the dropped-term count is surfaced on a named spark
-    * accumulator (`dedup_df_cut_dropped_<keyCol>`) and returned via the
+    * accumulator (`dedup_df_cut_dropped_<term>`) and returned via the
     * optional callback. maxDfFraction >= 1.0 disables the cut (df can never
-    * exceed nDocs), skipping the extra df pass entirely. The hot set is by
-    * construction tiny (high df ⇒ few distinct terms), hence broadcast. */
-  private def dfCut(items: DataFrame, nDocs: => Long, keyCol: String,
-                    maxDfFraction: Double,
+    * exceed nDocs), skipping the count and the df pass entirely. The hot set
+    * is by construction tiny (Σ df = total (doc, term) occurrences, so at
+    * most avgTermsPerDoc / maxDfFraction terms exceed the cut), hence
+    * collected and removed row-local. */
+  private def dfCut(sets: DataFrame, term: String, maxDfFraction: Double,
                     onDropped: Long => Unit): DataFrame = {
-    if (maxDfFraction >= 1.0) return items // nDocs (a count job) never evaluated
-    val spark = items.sparkSession
-    val maxDf = maxDfFraction * nDocs
-    // the hot set is mathematically bounded tiny: Σ df = total distinct
-    // (doc, term) occurrences, so at most avgTermsPerDoc / maxDfFraction
-    // terms can exceed the cut — collect to the driver (same discipline as
-    // HostDb.hotHostSalt) instead of persisting a second dataset
-    val hotKeys = items.groupBy(keyCol).agg(count(lit(1)).as("df"))
+    if (maxDfFraction >= 1.0) return sets
+    val maxDf = maxDfFraction * sets.count()
+    val hot = sets.select(explode(col("set")).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
-      .select(keyCol)
-      .collect().map(_.getString(0))
-    val dropped = hotKeys.length.toLong
-    spark.sparkContext.longAccumulator(s"dedup_df_cut_dropped_$keyCol").add(dropped)
+      .collect().map(_.getLong(0))
+    val dropped = hot.length.toLong
+    sets.sparkSession.sparkContext.longAccumulator(s"dedup_df_cut_dropped_$term").add(dropped)
     onDropped(dropped)
-    if (dropped == 0L) items
-    else {
-      import spark.implicits._
-      val hot = spark.createDataset(hotKeys.toSeq).toDF(keyCol)
-      items.join(broadcast(hot), Seq(keyCol), "left_anti")
-    }
+    if (dropped == 0L) sets
+    else sets.withColumn("set", array_except(col("set"), typedLit(hot)))
   }
 
-  /** Exact unigram-Jaccard pairs ≥ threshold (a < b). Inverted-index join:
-    * only documents sharing a token ever meet; tokens above the df cut are
-    * dropped first (see [[dfCut]] — the 100 TB hot-key guard). */
+  /** Candidate pairs (id_a < id_b) → (id_a, id_b, jaccard) with
+    * jaccard = round(|a ∩ b| / |a ∪ b|, 4) ≥ threshold, for pairs sharing at
+    * least one element: one merge-intersect of the two sorted sets per pair,
+    * sizes from size(set). */
+  private def verified(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+    def side(s: String) = sets.select(col("doc_id").as(s"id_$s"), col("set").as(s"set_$s"))
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        call_function("sorted_intersect_size", col("set_a"), col("set_b")).as("inter"),
+        (size(col("set_a")) + size(col("set_b"))).as("sz"))
+      .filter(col("inter") > 0)
+      .select(col("id_a"), col("id_b"),
+        round(col("inter").cast("double") / (col("sz") - col("inter")), 4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** Exact Jaccard pairs ≥ threshold over the (df-cut) n-gram hash sets.
+    *
+    * Candidates by prefix filtering: J(x, y) ≥ t implies
+    * |x ∩ y| ≥ ⌈t·|x|⌉, and then under any one global order the first
+    * |x| − ⌈t·|x|⌉ + 1 elements of x and of y share an element. The sorted
+    * hash order is such an order, so the prefix is a row-local slice. The
+    * output keeps round(J, 4) ≥ threshold, i.e. J ≥ threshold − 5·10⁻⁵, so
+    * the prefixes are taken at threshold − 10⁻⁴ (slightly longer; still
+    * exact, also against floating-point rounding of t·|x|). */
+  private def setJaccardPairs(docs: DataFrame, n: Int, term: String, threshold: Double,
+                              maxDfFraction: Double, onDropped: Long => Unit): DataFrame = {
+    val sets = dfCut(docHashSets(docs, n), term, maxDfFraction, onDropped)
+    val sz = size(col("set"))
+    val prefixLen = greatest(sz - ceil(lit(threshold - 1e-4) * sz) + 1, lit(0)).cast("int")
+    val pre = sets.select(col("doc_id"), explode(slice(col("set"), lit(1), prefixLen)).as("h"))
+    val cand = pre.as("x")
+      .join(pre.as("y"), col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      .distinct()
+    verified(cand, sets, threshold)
+  }
+
+  /** Exact unigram-Jaccard pairs ≥ threshold (a < b) over whitespace-token
+    * sets; tokens above the df cut are dropped first (see [[dfCut]] — the
+    * hot-key guard). */
   def unigramJaccardPairs(docs: DataFrame, threshold: Double,
                           maxDfFraction: Double = 0.5,
-                          onDropped: Long => Unit = _ => ()): DataFrame = {
-    val toks0 = persistSpillable(docTokens(docs))
-    val toks = dfCut(toks0, docs.count(), "token", maxDfFraction, onDropped)
-    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = toks.as("a")
-      .join(toks.as("b"), col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+                          onDropped: Long => Unit = _ => ()): DataFrame =
+    setJaccardPairs(docs, 1, "token", threshold, maxDfFraction, onDropped)
 
-  /** Exploded (doc_id, shingle-string) pairs WITHOUT the distinct — the
-    * shared scan for consumers that dedup later (or not at all). Shingling
-    * runs through the codegen'd TextShingles kernel (one byte scan per doc)
-    * instead of the former transform/slice/concat_ws HOF pipeline, which is
-    * CodegenFallback — interpreted per shingle per row. Identical output
-    * (differential-spec'd: VecExpressionsSpec). */
+  /** Exploded (doc_id, shingle-string) pairs WITHOUT the distinct, through
+    * the codegen'd TextShingles kernel (one byte scan per doc). */
   private def docShinglesExploded(docs: DataFrame, n: Int): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
@@ -114,57 +147,23 @@ object DedupOps {
         explode(call_function("text_shingles", col("text"), lit(n))).as("shingle"))
   }
 
-  /** Distinct (doc_id, shingle-string) pairs — raw strings so exact Jaccard
-    * is engine-neutral (the hashed form is minhash's domain). */
+  /** Distinct (doc_id, shingle-string) pairs. */
   def docShinglesRaw(docs: DataFrame, n: Int): DataFrame =
     docShinglesExploded(docs, n).distinct()
 
-  /** Exact word-n-gram Jaccard pairs ≥ threshold via an inverted index on
-    * shingle strings (the quadratic-exact sibling of minhashLshPairs);
-    * shingles above the df cut (shared boilerplate) are dropped first. */
+  /** Exact word-n-gram Jaccard pairs ≥ threshold (the exact sibling of
+    * minhashLshPairs); shingles above the df cut (shared boilerplate) are
+    * dropped first. */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                         maxDfFraction: Double = 0.5,
-                        onDropped: Long => Unit = _ => ()): DataFrame = {
-    val sh0 = persistSpillable(docShinglesRaw(docs, n)) // corpus-scale shingles must spill, not OOM
-    val sh = dfCut(sh0, docs.count(), "shingle", maxDfFraction, onDropped)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Word n-gram shingles, hashed to 64 bits. The distinct runs on the
-    * HASHED form: (doc_id, long) shuffles a fraction of the raw-string
-    * bytes, and every consumer (minhash signatures, LSH verify) already
-    * treats hash equality as shingle identity — the 64-bit space makes a
-    * collision astronomically unlikely and the operator's contract is
-    * hash-set Jaccard either way. */
-  def docShingles(docs: DataFrame, n: Int): DataFrame =
-    docShinglesExploded(docs, n)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-      .distinct()
-
-  /** MinHash signature matrix: the i-th "permutation" is xxhash64(sh, seed+i)
-    * — re-hashing beats affine (a*x+b) permutations here: better mixing, and
-    * no 64-bit multiply to trip ANSI overflow checking. One aggregation,
-    * numHashes min-columns wide (codegen'd). */
-  def minhashSignatures(shingles: DataFrame, numHashes: Int, seed: Long): DataFrame = {
-    val mins = (0 until numHashes).map { i =>
-      min(xxhash64(col("sh"), lit(seed + i))).as(s"mh_$i")
-    }
-    shingles.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
+                        onDropped: Long => Unit = _ => ()): DataFrame =
+    setJaccardPairs(docs, n, "shingle", threshold, maxDfFraction, onDropped)
 
   /** MinHash + banded LSH candidate pairs, verified against exact shingle
-    * Jaccard ≥ threshold. bands × rowsPerBand must equal numHashes. */
+    * Jaccard ≥ threshold. bands × rowsPerBand must equal numHashes. The
+    * i-th "permutation" is xxhash64(sh, seed+i) — re-hashing beats affine
+    * (a*x+b) permutations here: better mixing, and no 64-bit multiply to
+    * trip ANSI overflow checking. */
   def minhashLshPairs(
       docs: DataFrame,
       threshold: Double,
@@ -173,42 +172,16 @@ object DedupOps {
       bands: Int = 16,
       seed: Long = 42L
   ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val shingles = persistSpillable(docShingles(docs, shingleN)) // reused: signatures + verify; spill-tolerant at corpus scale
-    val sig = minhashSignatures(shingles, numHashes, seed)
-
-    // band buckets: hash of each band's minhash slice
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((b * rows until (b + 1) * rows).map(i => col(s"mh_$i")): _*).as("bucket"))
-    }
-    val buckets = sig
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-
-    // bucket-local pair generation (self-join within band+bucket)
+    val sets = docHashSets(docs, shingleN)
+    val buckets = sets.select(col("doc_id"), posexplode(call_function("minhash_bands",
+      col("set"), lit(numHashes), lit(bands), lit(seed))).as(Seq("band", "bucket")))
     val cand = buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
-
-    // exact verification on candidates only (the LSH contract)
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(shingles.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(shingles.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .filter(col("sh_a") === col("sh_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verified(cand, sets, threshold)
   }
 
   /** 64-bit SimHash per doc over token hashes weighted by frequency.

@@ -16,13 +16,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object SimilarityOps {
 
-  /** persist unless this exact plan is already cached (no CacheManager WARN
-    * when the bench re-runs a query over the same lineage). */
-  private def persistSpillable(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-
   /** Strict left-to-right dot product of two array<float|double> columns (as
     * double) — the codegen'd VecDot kernel, IEEE-identical to the former
     * `aggregate(zip_with(...))` fold (HOFs are CodegenFallback: interpreted

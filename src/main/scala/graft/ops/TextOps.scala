@@ -13,14 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Occurrences of ` needle ` in the space-padded text (replace-count trick:
-    * identical semantics in Spark and DuckDB, no regex dialect risk). */
-  def occurrences(padded: Column, needle: String): Column =
-    (length(padded) - length(regexp_replace(padded, java.util.regex.Pattern.quote(needle), ""))) / needle.length
-
-  /** Plain-needle occurrence count via the allocation-free codegen'd
-    * scanner (functions.TextCountSubstr) — the replace-count formula copies
-    * the whole text once per needle per row; the scanner walks it in place.
+  /** Plain-needle occurrence count via the codegen'd scanner
+    * (functions.TextCountSubstr) — the replace-count formula copies the
+    * whole text once per needle per row; the scanner reads the text's bytes
+    * in place and allocates nothing.
     * Same leftmost non-overlapping count, cast to the double the replace
     * formula's division produced. Callers must have GraftFunctions
     * registered (every DataFrame-level entry point here does). */
