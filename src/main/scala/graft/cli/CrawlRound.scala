@@ -51,8 +51,7 @@ object CrawlRound {
   ): Long = {
     import spark.implicits._
     import org.apache.spark.sql.Observation
-    val existing = store.load(spark, "frontier")
-      .map(_.as[FrontierEntry])
+    val existing = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(spark.emptyDataset[FrontierEntry])
     val merged = Inject.run(existing, seedLines, cfg, now, overwrite, update)
     val obs = Observation("inject" + System.nanoTime())
@@ -65,12 +64,31 @@ object CrawlRound {
   /** One full crawl round over the given fetcher. Reads the frontier at the
     * last committed snapshot, commits frontier/fetched/parsed at `round`.
     *
-    * Action economy (the 100 TB discipline): one round = 3 core Spark jobs —
-    * fetched write (materializes generate→fetch), parsed write (from cached
-    * pages), and the frontier write (updatedb shuffle + dedup) — plus the
-    * update-sized seen-bloom merge. The mark-back broadcast build runs ONLY
-    * under generate.update.crawldb=true. Every row count rides on the writes
-    * as an `Observation`; there are NO standalone .count() passes. */
+    * Materialization: the round computes three frames once each and cuts
+    * their lineage there with `localCheckpoint` — the fetched `pages`, the
+    * aggregated `linked` updates and the merged frontier. Every later
+    * consumer (parse, the merge, dedup, the frontier write, the seen-bloom
+    * delta, hostdb) then plans from a `LogicalRDD` leaf instead of
+    * re-analysing the generate → fetch → parse → merge lineage. Each
+    * checkpoint is created inside the timed stage that first consumes it and
+    * released ([[graft.ops.release]]) after its last consumer: `linked`
+    * right after the merge, the others at round end. Trade-off: a
+    * checkpoint block lost with its executor fails the round instead of
+    * being recomputed; the crawl then resumes from the last committed
+    * snapshot. Local mode is unaffected (its executor shares the one JVM).
+    *
+    * Jobs of a warm loaded round (perfbench `loaded_round`, `local[4]`;
+    * AQE runs one job per shuffle-map stage), 25 in all: the hot-host salt
+    * (1); generate+fetch+write (2: generate's exchange, run when the `pages`
+    * checkpoint is created, and the fetched write); parse+write (1);
+    * updatedb_materialize (11: the link explode/pre-aggregation stages, run
+    * when the `linked` checkpoint is created, the merge's stages and the
+    * one materialize pass, the merged frontier's eager checkpoint);
+    * updatedb+dedup+write (3); seen_bloom (1, update-sized); hostdb (5);
+    * the metrics append (1). Row counts ride on the writes as
+    * `Observation`s; the materialize pass is the only standalone count.
+    * The mark-back broadcast build runs ONLY under
+    * generate.update.crawldb=true. */
   def run(
       spark: SparkSession,
       store: TableStore,
@@ -95,18 +113,24 @@ object CrawlRound {
       stageMs.update(name, (System.nanoTime() - s) / 1000000)
       r
     }
+    // every frame the round materializes, released at round end
+    val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def checkpoint[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
+      val cp = localCheckpointAsCached(spark, ds, eager)
+      held += cp
+      cp
+    }
 
-    val frontier = store.load(spark, "frontier")
+    // snapshots load by their known schema (no footer-inference job), once
+    val frontier = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(throw new IllegalStateException("no frontier — run inject first"))
-      .as[FrontierEntry]
 
     // hot-host salting from the previous round's host stats (data-driven
     // generate-domain-limits): hosts with big pending mass spread over k keys
-    val prevHostStats = if (cfg.updateHostDb) store.load(spark, "host_stats") else None
+    val prevHostStats = if (cfg.updateHostDb) store.loadAs[HostStats](spark, "host_stats") else None
     val hostSalt: Map[String, Int] =
       prevHostStats
-        .map(df => graft.frontier.HostDb.hotHostSalt(
-          df.as[graft.schema.HostStats],
+        .map(ds => graft.frontier.HostDb.hotHostSalt(ds,
           hotThreshold = math.max(cfg.maxPerHost.toLong * 4, cfg.topN / math.max(1, cfg.numFetchPartitions)),
           perPartitionTarget = math.max(1L, cfg.topN / math.max(1, cfg.numFetchPartitions))))
         .getOrElse(Map.empty)
@@ -120,7 +144,6 @@ object CrawlRound {
       cfg.fetchDelayExpr.flatMap(e => prevHostStats.map(
         _.select(col("host"), expr(e).as("delay_ms")).filter(col("delay_ms").isNotNull)))
 
-    // --- generate ---
     // domain mode's exactness-vs-skew lineage warning: count domains whose
     // eligible run exceeded the per-partition target (no extra job — the
     // accumulator rides the existing generate mapPartitions)
@@ -128,37 +151,42 @@ object CrawlRound {
       if (cfg.generateCountMode == "domain")
         Some(spark.sparkContext.longAccumulator(s"generate_domain_skew_r$round"))
       else None
-    val (fetchlist0, markedFrontier) =
-      Generator.generate(frontier, cfg, now, round, hostSalt, badHosts, hostDelays, domainSkewAcc)
-    // two consumers (fetch input + mark-back broadcast) ONLY when the
-    // mark-back runs; on the default path pages is the sole consumer and a
-    // persist would just materialize 4M rows twice
-    val fetchlist =
-      if (cfg.generateUpdateDb) fetchlist0.persist(StorageLevel.MEMORY_AND_DISK) else fetchlist0
-
-    // --- fetch (politeness executor, partition-local) ---
     val metricsAcc: CollectionAccumulator[FetchPartitionMetrics] =
       spark.sparkContext.collectionAccumulator[FetchPartitionMetrics]("fetch_metrics")
-    val pages0: Dataset[FetchedPage] = fetchlist.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      PolitenessExecutor.run(pid, it, fetcher, cfg, now, round, metricsAcc.add(_))
-    }
-    // scoring-similarity: parsed pages re-scored by cosine vs the gold
-    // standard BEFORE anything consumes them (passScoreAfterParsing) — the
-    // gold model is driver-tiny and rides the task closure
-    val pages: Dataset[FetchedPage] = (cfg.scoringSimilarityGold match {
-      case Some(goldText) =>
-        graft.score.SimilarityScoring.rescorePages(pages0,
-          graft.score.SimilarityScoring.goldModel(goldText))
-      case None => pages0
-    }).persist(StorageLevel.MEMORY_AND_DISK)
 
     // job 1: write fetched (materializes generate → fetch → pages; counts observed)
     // fetched/parsed/side tables are per-round derived outputs: history replay
     // after an explicit frontier resetTo legitimately re-commits them
     // (allowRewind); the frontier commit itself keeps the strict guard.
     val obsFetch = Observation(s"fetch_r$round")
-    timed("generate+fetch+write") {
+    val (markedFrontier, pages) = timed("generate+fetch+write") {
+      // --- generate ---
+      val (fetchlist0, marked) =
+        Generator.generate(frontier, cfg, now, round, hostSalt, badHosts, hostDelays, domainSkewAcc)
+      // two consumers (fetch input + mark-back broadcast) ONLY when the
+      // mark-back runs; on the default path pages is the sole consumer and a
+      // persist would just materialize 4M rows twice
+      val fetchlist =
+        if (cfg.generateUpdateDb) { val p = fetchlist0.persist(StorageLevel.MEMORY_AND_DISK); held += p; p }
+        else fetchlist0
+
+      // --- fetch (politeness executor, partition-local) ---
+      val pages0: Dataset[FetchedPage] = fetchlist.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        PolitenessExecutor.run(pid, it, fetcher, cfg, now, round, metricsAcc.add(_))
+      }
+      // scoring-similarity: parsed pages re-scored by cosine vs the gold
+      // standard BEFORE anything consumes them (passScoreAfterParsing) — the
+      // gold model is tiny and rides the task closure
+      val scored = cfg.scoringSimilarityGold match {
+        case Some(goldText) =>
+          graft.score.SimilarityScoring.rescorePages(pages0,
+            graft.score.SimilarityScoring.goldModel(goldText))
+        case None => pages0
+      }
+      // lazy: creating the checkpoint runs generate's exchange; this write
+      // then fetches every page once and keeps it
+      val pages = checkpoint(scored, eager = false)
       graft.functions.GraftFunctions.register(spark)
       store.commit("fetched",
         pages.toDF().observe(obsFetch, count(lit(1)).as("fetched"))
@@ -167,10 +195,11 @@ object CrawlRound {
           // first-class crawl_fetch column, like the reference's parse_data
           .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url"))),
         round, allowRewind = true)
+      (marked, pages)
     }
     val fetchedPages = obsFetch.get("fetched").asInstanceOf[Long]
 
-    // job 2: write parsed (cached pages)
+    // job 2: write parsed (checkpointed pages)
     val obsParse = Observation(s"parse_r$round")
     timed("parse+write") {
       // parsefilter-debug: serialized parser interpretation riding in
@@ -219,11 +248,6 @@ object CrawlRound {
     //     RUNS (markedFrontier is lazy) — one fewer frontier-wide shuffle
     //     per round. When true, the _ngt_ stamp rides in and persists. ---
     val dbIn = if (cfg.generateUpdateDb) markedFrontier else frontier
-    val fetchUpdates = Parse.fetchUpdates(pages, cfg)
-    // with the bloom split the linked aggregation feeds two branches
-    // (seen/new); persist it so the 16M-row explode+canonicalize+pre-agg
-    // pipeline runs once (AQE does not reliably reuse the exchange across
-    // the branches)
     // urlmeta: tagged parents only (tags start from seeds, so this subset
     // is tiny relative to the frontier — a narrow filter off the existing
     // scan, no frontier-wide shuffle; AQE broadcasts the small side)
@@ -236,37 +260,35 @@ object CrawlRound {
               (k, _) => cfg.frontierRelayKeys.map(t => k === lit(t)).reduce(_ || _)).as("urlmeta"))
           .filter(size(col("urlmeta")) > 0))
       }
-    // intermediate caches registered by the parse/link pipeline (the
-    // per-link explode is persisted there to feed two subtrees) — released
-    // with the round's other persists below
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val linked0 = Parse.linkedUpdates(pages, cfg, round, parentMeta, roundCaches += _)
-    val linked = if (seen.isDefined) linked0.persist(StorageLevel.MEMORY_AND_DISK) else linked0
-    val newFrontier0 =
-      if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-      else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-    // dedup consumes the merged frontier three times (candidates, keep-best
-    // aggregation, pass-through rest) and the seen-bloom delta once more:
-    // persist so the merge runs once
-    val persistFrontier = dedupEachRound || seen.isDefined
-    val newFrontier =
-      if (persistFrontier) newFrontier0.persist(StorageLevel.MEMORY_AND_DISK) else newFrontier0
-    // dedup fans the merged frontier into three INDEPENDENT sibling stages
-    // (keep-best agg, candidates exchange, pass-through union): on a cold
-    // lazy cache all three race to materialize it — the block-level compute
-    // locks stop duplicate work, but the waiting stages' tasks hold task
-    // slots while they block, so the merge's wall cost ~triples (measured:
-    // three concurrent ~1.6 s materialization stages in the write job).
-    // Prime the cache EAGERLY in its own job: the merge computes exactly
-    // once; dedup, the frontier write, and the seen-bloom delta then all
-    // stream cached blocks.
-    // plan evidence hook (guide §7.2): dump the merge's physical plan once
-    // per process when asked — the loaded-round twin of PlanDump
-    if (sys.env.contains("GRAFT_EXPLAIN_UPDATEDB") && round == 1)
-      System.err.println("[updatedb plan]\n" + newFrontier.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    if (dedupEachRound) timed("updatedb_materialize") { newFrontier.count() }
-    val finalFrontier = if (dedupEachRound) Dedup.markDuplicates(newFrontier) else newFrontier
+    // The merged frontier feeds dedup's three INDEPENDENT sibling stages
+    // (candidates, keep-best aggregation, pass-through rest), the frontier
+    // write and the seen-bloom delta. Checkpointing it EAGERLY in its own
+    // pass computes the merge exactly once: on a cold lazy materialization
+    // the siblings race for it and their blocked tasks hold slots, ~tripling
+    // the merge's wall cost (measured: three concurrent ~1.6 s stages). The
+    // link updates are checkpointed lazily here too: creating the checkpoint
+    // runs their explode/canonicalize/pre-aggregation stages once, and the
+    // merge (its seen and new branches under the bloom split) reads them
+    // from a leaf. Only the merge reads them, so they and the link
+    // pipeline's own cache are released as soon as the merge is.
+    val newFrontier = timed("updatedb_materialize") {
+      val fetchUpdates = Parse.fetchUpdates(pages, cfg)
+      val linkFrames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+      val linked = localCheckpointAsCached(spark,
+        Parse.linkedUpdates(pages, cfg, round, parentMeta, linkFrames += _), eager = false)
+      linkFrames += linked
+      val merged =
+        if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
+        else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
+      // plan evidence hook (guide §7.2): dump the merge's physical plan once
+      // per process when asked — the loaded-round twin of PlanDump
+      if (sys.env.contains("GRAFT_EXPLAIN_UPDATEDB") && round == 1)
+        System.err.println("[updatedb plan]\n" + merged.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      val cp = checkpoint(merged, eager = true)
+      linkFrames.foreach(graft.ops.release)
+      cp
+    }
     val obsDb = Observation(s"updatedb_r$round")
     // optional storage layout: bucket by url_hash (min/max pruning turns the
     // point lookup into a partial scan) + sort by reversed host (locality —
@@ -279,6 +301,7 @@ object CrawlRound {
           .sortWithinPartitions(reverse(col("host")), col("url_hash"))
       }
     timed("updatedb+dedup+write") {
+      val finalFrontier = if (dedupEachRound) Dedup.markDuplicates(newFrontier) else newFrontier
       store.commit("frontier",
         layout(finalFrontier.toDF()).observe(obsDb,
           count(lit(1)).as("size"),
@@ -288,10 +311,10 @@ object CrawlRound {
     val unfetched = obsDb.get("unfetched").asInstanceOf[Long]
 
     // --- URL-seen bloom maintenance: the delta is exactly the merged
-    //     frontier's bloom-missing hashes — a cache-backed filter over the
-    //     PERSISTED new frontier (zero rows in a steady-state round), then a
-    //     tiny bloom aggregation + blob swap. No link re-canonicalization,
-    //     no committed-parquet re-read. ---
+    //     frontier's bloom-missing hashes — a filter over the CHECKPOINTED
+    //     new frontier (zero rows in a steady-state round), then a tiny
+    //     bloom aggregation + blob swap. No link re-canonicalization, no
+    //     committed-parquet re-read. ---
     seen.foreach { sf =>
       timed("seen_bloom") {
         val newHashes = newFrontier.toDF()
@@ -319,11 +342,12 @@ object CrawlRound {
     if (cfg.updateHostDb) timed("hostdb") {
       // aggregate from the just-committed frontier: a (host, status, score)
       // column-pruned parquet scan — cheaper than re-deriving the dedup'd
-      // frontier from cache, and semantics match the committed snapshot
-      val committed = store.load(spark, "frontier").get.as[FrontierEntry]
+      // frontier, and semantics match the committed snapshot. `prev` is the
+      // round's start snapshot of host_stats (nothing commits it in between)
+      val committed = store.loadAs[FrontierEntry](spark, "frontier").get
       store.commit("host_stats",
         graft.frontier.HostDb.fromFrontier(committed, now, Some(pages.toDF()),
-          prev = store.load(spark, "host_stats")).toDF(),
+          prev = prevHostStats.map(_.toDF())).toDF(),
         round, allowRewind = true)
     }
     if (cfg.invertLinks) timed("invertlinks") {
@@ -339,37 +363,45 @@ object CrawlRound {
     }
 
     // --- per-partition lineage + metrics (north rule; from accumulators,
-    //     no extra pass) ---
-    val fetchMetrics = metricsAcc.value
+    //     no extra pass): the fetch partition rows, the round-level stage
+    //     lineage (wall ms per stage) and the domain-mode skew warning
+    //     (generate_skew row: input_rows = # domains over the per-partition
+    //     target — nonzero means domain mode is stalling partitions on this
+    //     frontier; switch to host mode + salting), written as ONE append
+    //     per round; readers tell the rows apart by `stage` ---
     import scala.jdk.CollectionConverters._
-    val metricRows = fetchMetrics.asScala.toSeq.map(m =>
+    val fetchMetrics = metricsAcc.value.asScala.toSeq
+    val fetchRows = fetchMetrics.map(m =>
       RoundMetric(round, "fetch", m.partition_id, m.input_rows,
         m.fetched + m.robots_denied + m.robots_deferred + m.retries + m.redirects + m.gone,
         m.fetched, m.robots_denied, m.retries, m.virtual_ms))
-    if (metricRows.nonEmpty)
-      store.appendMetrics(spark.createDataset(metricRows).toDF(), round, "fetch")
-    // round-level stage lineage (wall ms per stage) + the domain-mode skew
-    // warning (generate_skew row: input_rows = # domains over the
-    // per-partition target — nonzero means domain mode is stalling
-    // partitions on this frontier; switch to host mode + salting)
     val skewRows = domainSkewAcc.toSeq.filter(_.value > 0).map(acc =>
       RoundMetric(round, "generate_skew", -1, acc.value, 0, 0, 0, 0, 0))
     val stageRows = stageMs.toSeq.map { case (stage, ms) =>
       RoundMetric(round, stage, -1, 0, 0, 0, 0, 0, ms)
-    } ++ skewRows
-    if (stageRows.nonEmpty)
-      store.appendMetrics(spark.createDataset(stageRows).toDF(), round, "stages")
-    val virtualMsMax = if (fetchMetrics.isEmpty) 0L else fetchMetrics.asScala.map(_.virtual_ms).max
-    val generated = fetchMetrics.asScala.map(_.input_rows).sum
+    }
+    store.appendMetrics(
+      spark.createDataset(fetchRows ++ stageRows ++ skewRows).toDF().coalesce(1), round, "round")
+    val virtualMsMax = if (fetchMetrics.isEmpty) 0L else fetchMetrics.map(_.virtual_ms).max
+    val generated = fetchMetrics.map(_.input_rows).sum
 
-    if (cfg.generateUpdateDb) fetchlist.unpersist()
-    pages.unpersist()
-    if (seen.isDefined) linked.unpersist()
-    if (persistFrontier) newFrontier.unpersist()
-    roundCaches.foreach(_.unpersist())
+    held.foreach(graft.ops.release)
 
     RoundStats(round, generated, fetchedPages, parsedCount, frontierSize, unfetched,
       (System.nanoTime() - t0) / 1000000, virtualMsMax, stageMs.toMap)
+  }
+
+  /** `ds.localCheckpoint(eager)` with the partitioning a persisted plan gets:
+    * like CacheManager, AQE leaves the final stage's shuffle partitions as
+    * planned (no coalescing). The layout is part of the round's result: the
+    * next round's generate breaks score ties in scan order, so a coalesced
+    * merged frontier would fetch a different (equally valid) set of URLs. */
+  private def localCheckpointAsCached[T](spark: SparkSession, ds: Dataset[T], eager: Boolean): Dataset[T] = {
+    val key = "spark.sql.adaptive.applyFinalStageShuffleOptimizations"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, false)
+    try ds.localCheckpoint(eager)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Post-commit URL-seen maintenance for out-of-band frontier writers (ARC
@@ -390,7 +422,7 @@ object CrawlRound {
   ): Unit = {
     if (!cfg.useSeenBloom) return
     import graft.seen.UrlSeen
-    val frontierKeys = store.load(spark, "frontier")
+    val frontierKeys = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(return).select(col("url_hash"))
     val snapB = store.current("seen_bloom")
     val cached = snapB.flatMap(s => UrlSeen.cachedFor(store.root, s.path, s.committedAtMs))

@@ -27,6 +27,12 @@ import graft.frontier.CrawlConfig
   */
 object Main {
 
+  /** Spark's generated-class cache size (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). A crawl round generates more distinct classes than 100,
+    * so at the default every round recompiles about 100 of them and runs
+    * them interpreted again while the JIT catches up. */
+  val CodegenCacheEntries = 1000
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) { usage(); sys.exit(2) }
     val verb = args(0)
@@ -41,6 +47,7 @@ object Main {
     val builder = SparkSession.builder()
       .appName(s"graft-$verb")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master(sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
       .getOrCreate()

@@ -12,8 +12,10 @@ import org.apache.spark.storage.StorageLevel
   * Spark realization notes:
   *  - edges are re-used every iteration → persisted once (MEMORY_AND_DISK);
   *  - each iteration is one join + one aggregation (both partial-combining);
-  *  - lineage is cut every `checkpointEvery` iterations via localCheckpoint,
-  *    or the plan grows linearly with iterations;
+  *  - lineage is cut every `checkpointEvery` iterations and after the last
+  *    via localCheckpoint, or the plan grows linearly with iterations; each
+  *    checkpoint is released once its successor is materialized, so the
+  *    returned (materialized) ranks are the only frame the call leaves held;
   *  - dangling nodes (no outlinks) keep contributing their base rank only,
   *    like the reference (no dangling redistribution).
   */
@@ -35,6 +37,7 @@ object LinkRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var ranks = nodes.withColumn("rank", lit(1.0))
+    var held: Option[DataFrame] = None // the live rank checkpoint
     var i = 0
     while (i < iterations) {
       val contribs = withDeg
@@ -47,12 +50,14 @@ object LinkRank {
         .select(col("url"),
           (lit(1.0 - damping) + lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
       i += 1
-      if (i % checkpointEvery == 0 && i < iterations)
+      if (i % checkpointEvery == 0 || i == iterations) {
         ranks = ranks.localCheckpoint(true) // cut lineage, keep data distributed
+        held.foreach(graft.ops.release)
+        held = Some(ranks)
+      }
     }
-    val out = ranks
-    e.unpersist(); withDeg.unpersist()
-    out
+    Seq(e, withDeg, nodes).foreach(_.unpersist())
+    ranks
   }
 
   /** ScoreUpdater twin (reference scoring/webgraph/ScoreUpdater.java

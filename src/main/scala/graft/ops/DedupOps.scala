@@ -258,7 +258,8 @@ object DedupOps {
     * `doc_id == cluster_id`, drop the rest.
     *
     * Iterative min-label propagation as a DataFrame loop (the LinkRank
-    * shape: persisted edges, localCheckpoint lineage cuts, convergence by
+    * shape: persisted edges, localCheckpoint lineage cuts — each one
+    * released once its successor is materialized — convergence by
     * changed-row count): label(n) ← min(label(n), min over neighbours'
     * labels) until a fixed point. Iterations needed = graph diameter —
     * tiny for near-dup graphs (components are quasi-cliques out of LSH
@@ -278,6 +279,7 @@ object DedupOps {
       .distinct())
     var labels = edges.groupBy(col("n"))
       .agg(least(min(col("m")), first(col("n"))).as("lbl"))
+    var held: Option[DataFrame] = None // the live label checkpoint
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -293,6 +295,9 @@ object DedupOps {
         .agg(min(col("lbl")).as("lbl"), min(col("own")).as("prev"))
         .select(col("n"), col("lbl"), (col("lbl") < col("prev")).as("changed"))
         .localCheckpoint(true) // cut lineage, keep data distributed
+      // the predecessor is superseded once its successor is materialized
+      held.foreach(release)
+      held = Some(next)
       converged = next.filter(col("changed")).isEmpty
       labels = next.select(col("n"), col("lbl"))
       iter += 1

@@ -1,6 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 /** One committed table state: the pointer the engine resumes from. */
 case class Snapshot(table: String, round: Int, path: String, committedAtMs: Long)
@@ -43,6 +45,13 @@ trait TableStore extends Serializable {
 
   def load(spark: SparkSession, table: String): Option[DataFrame] =
     current(table).map(s => spark.read.parquet(s.path))
+
+  /** [[load]] by the table's known row type: the read takes `T`'s schema
+    * instead of inferring one from the parquet footers (no inference job). */
+  def loadAs[T <: Product: TypeTag](spark: SparkSession, table: String): Option[Dataset[T]] = {
+    val enc = Encoders.product[T]
+    current(table).map(s => spark.read.schema(enc.schema).parquet(s.path).as(enc))
+  }
 
   /** Read a specific historical round (time travel). */
   def loadRound(spark: SparkSession, table: String, round: Int): Option[DataFrame]
