@@ -192,110 +192,53 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
 
   /** Sitemap stage (reference SitemapProcessor / `bin/crawl --sitemaps-from-hostdb`):
     * fetch the sitemaps advertised by the frontier's hosts and inject their
-    * URLs; committed at the checkpoint round like a mid-crawl inject. */
+    * URLs as seed lines scored `sitemapScore`; committed at the checkpoint
+    * round like any mid-crawl inject. */
   def processSitemaps(sitemapScore: Float = 0.5f): Long = {
-    val merged = graft.frontier.Sitemaps.process(typedFrontier, fetcher, cfg,
-      startTimeMs + lastRound.toLong * roundIntervalMs, sitemapScore)
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions._
-    val obs = Observation("sitemaps" + System.nanoTime())
-    val round = store.lastCompletedRound.getOrElse(0)
-    val tag = if (store.current("frontier").isEmpty) "" else store.freshTag("frontier", round, "sitemaps")
-    store.commit("frontier", merged.toDF().observe(obs, count(lit(1)).as("n")), round, tag)
-    obs.get("n").asInstanceOf[Long]
+    import spark.implicits._
+    val hosts = frontier.select(col("host")).distinct().as[String]
+    val seedLines = graft.frontier.Sitemaps.discover(hosts, fetcher, cfg)
+      .map(u => s"$u\tnutch.score=$sitemapScore")
+    CrawlRound.inject(spark, store, seedLines, cfg, startTimeMs + lastRound.toLong * roundIntervalMs)
   }
 
   /** Import legacy ARC containers as a crawl round (the reference's
-    * ArcSegmentCreator flow: archive records become a fetched segment whose
-    * pages AND outlinks merge into the frontier through updatedb — the
-    * archived URLs enter as db_fetched, their discovered links as
-    * db_unfetched, and the crawl continues from there). Commits
-    * fetched/parsed segments plus the merged frontier at the next round. */
-  def importArc(containers: Dataset[String]): CrawlRound.RoundStats = {
-    val roundNo = lastRound + 1
-    val skippedAcc = spark.sparkContext.longAccumulator(s"arc_skipped_bytes_r$roundNo")
-    importFetchedRound(roundNo,
-      graft.index.ArcImport.toFetched(containers, cfg, roundNo, Some(skippedAcc)),
-      Some(skippedAcc))
-  }
+    * ArcSegmentCreator flow: the archive becomes an ordinary segment). Its
+    * records enter the round tail as fetched pages, so the import commits
+    * fetched/parsed segments and the merged, dedup'd frontier at the next
+    * round, keeps the URL-seen bloom and host_stats current and records
+    * stage timings like any round: the archived URLs enter as db_fetched,
+    * their discovered links as db_unfetched, and the crawl continues from
+    * there. Abandoned container bytes (malformed/truncated tails) ride the
+    * round's metrics as an `arc_skipped_bytes` row. */
+  def importArc(containers: Dataset[String]): CrawlRound.RoundStats =
+    importRound(graft.index.ArcImport.toFetched(containers, cfg, _, _))
 
   /** Binary ARC import — the path for real container files (gzipped or with
     * non-UTF-8 payload bytes): feed `spark.read.format("binaryFile")`
     * content directly, so framing happens on the original bytes (a text
     * read would replace invalid UTF-8 and shift the byte frames). */
-  def importArcBytes(containers: Dataset[Array[Byte]]): CrawlRound.RoundStats = {
-    val roundNo = lastRound + 1
-    val skippedAcc = spark.sparkContext.longAccumulator(s"arc_skipped_bytes_r$roundNo")
-    importFetchedRound(roundNo,
-      graft.index.ArcImport.toFetchedBytes(containers, cfg, roundNo, Some(skippedAcc)),
-      Some(skippedAcc))
-  }
+  def importArcBytes(containers: Dataset[Array[Byte]]): CrawlRound.RoundStats =
+    importRound(graft.index.ArcImport.toFetchedBytes(containers, cfg, _, _))
 
   /** Import serialized WARC/1.1 record text (the engine's own sink format,
     * or any 1.1 archive matching it) as a crawl round: 200-status response
     * records re-enter as fetched pages through the mime registry, their
     * outlinks merge into the frontier — the WARC sibling of [[importArc]]. */
-  def importWarc(warcText: Dataset[String]): CrawlRound.RoundStats = {
-    val roundNo = lastRound + 1
-    importFetchedRound(roundNo,
-      graft.index.WarcImport.toFetched(warcText, cfg, roundNo), None)
-  }
+  def importWarc(warcText: Dataset[String]): CrawlRound.RoundStats =
+    importRound((round, _) => graft.index.WarcImport.toFetched(warcText, cfg, round))
 
-  /** Shared archive-import flow (ArcSegmentCreator + updatedb as one round):
-    * commit fetched/parsed segments, merge pages + outlinks into the
-    * frontier, maintain the URL-seen bloom, surface skipped-byte lineage. */
-  private def importFetchedRound(
-      roundNo: Int,
-      pages0: Dataset[graft.fetch.FetchedPage],
-      skippedAcc: Option[org.apache.spark.util.LongAccumulator]
+  /** The archive head at the next round: `read(round, skippedBytes)` yields
+    * the pages. */
+  private def importRound(
+      read: (Int, Option[org.apache.spark.util.LongAccumulator]) => Dataset[graft.fetch.FetchedPage]
   ): CrawlRound.RoundStats = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val t0 = System.nanoTime()
-    val now = startTimeMs + (roundNo - 1).toLong * roundIntervalMs
-    val pages = pages0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.functions.GraftFunctions.register(spark)
-    // imported-page count rides the fetched commit as an Observation, like
-    // every other count in the engine — no standalone count() job
-    import org.apache.spark.sql.Observation
-    val obsFetch = Observation(s"arc_import_fetched_r$roundNo")
-    store.commit("fetched", pages.toDF().drop("spans")
-      .observe(obsFetch, count(lit(1)).as("fetched"))
-      .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url"))),
-      roundNo, allowRewind = true)
-    store.commit("parsed", graft.parse.Parse.parsedDocs(pages).toDF(), roundNo,
-      allowRewind = true)
-    val frontierDs = {
-      import spark.implicits._
-      store.load(spark, "frontier").map(_.as[FrontierEntry])
-        .getOrElse(spark.emptyDataset[FrontierEntry])
-    }
-    val updates = graft.parse.Parse.fetchUpdates(pages, cfg)
-    val linked = graft.parse.Parse.linkedUpdates(pages, cfg, roundNo)
-    val merged =
-      if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(frontierDs, updates, linked, cfg, now)
-      else graft.frontier.UpdateDb.run(frontierDs, updates, linked, cfg, now)
-    val obs = Observation(s"arc_import_r$roundNo")
-    store.commit("frontier", merged.toDF().observe(obs,
-      count(lit(1)).as("size"),
-      count(when(col("status") === graft.schema.CrawlStatus.DB_UNFETCHED, 1)).as("unfetched")),
-      roundNo)
-    val frontierSize = obs.get("size").asInstanceOf[Long]
-    // keep the URL-seen bloom in sync with the frontier the import just
-    // changed — otherwise the next round's bloom-miss fast path re-inserts
-    // imported URLs rediscovered as outlinks as duplicate frontier rows
-    CrawlRound.maintainSeenBloom(spark, store, cfg, roundNo, frontierSize)
-    // surface abandoned container bytes (malformed/truncated ARC tails) in
-    // the lineage instead of dropping them silently
-    skippedAcc.filter(_.value > 0).foreach { acc =>
-      store.appendMetrics(spark.createDataset(Seq(
-        graft.schema.RoundMetric(roundNo, "arc_skipped_bytes", -1,
-          acc.value, 0, 0, 0, 0, 0))).toDF(), roundNo, "arc_import")
-    }
-    pages.unpersist()
-    CrawlRound.RoundStats(roundNo, 0, obsFetch.get("fetched").asInstanceOf[Long], 0,
-      frontierSize, obs.get("unfetched").asInstanceOf[Long],
-      (System.nanoTime() - t0) / 1000000, 0)
+    val round = lastRound + 1
+    val skipped = spark.sparkContext.longAccumulator(s"arc_skipped_bytes_r$round")
+    CrawlRound.importPages(spark, store, cfg, round,
+      startTimeMs + (round - 1).toLong * roundIntervalMs, read(round, Some(skipped)),
+      Seq(skipped).filter(_.value > 0).map(acc =>
+        graft.schema.RoundMetric(round, "arc_skipped_bytes", -1, acc.value, 0, 0, 0, 0, 0)))
   }
 
   /** WARC-shaped export of a fetched round (the reference's WarcWriter

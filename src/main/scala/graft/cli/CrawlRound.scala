@@ -64,6 +64,23 @@ object CrawlRound {
   /** One full crawl round over the given fetcher. Reads the frontier at the
     * last committed snapshot, commits frontier/fetched/parsed at `round`.
     *
+    * Two heads, one tail. This crawl head generates the fetch list and
+    * fetches it; [[importPages]] is the archive head (ARC/WARC containers,
+    * the reference's ArcSegmentCreator). Each hands its
+    * `Dataset[FetchedPage]` to the same round tail: the fetched and parsed
+    * commits, the updatedb merge, dedup, the frontier write, the seen-bloom
+    * swap, hostdb/invertlinks, the round's one metrics append and the
+    * release of every held frame.
+    *
+    * The URL-seen bloom invariant — the committed filter covers every
+    * frontier `url_hash` — lives in the tail alone. Its load step (session
+    * cache → blob → build from the frontier) merges the frontier's
+    * bloom-missing hashes in once when the blob was committed before the
+    * frontier snapshot, i.e. when inject, the sitemap stage, a maintenance
+    * tool or a `resetTo` wrote the frontier since. Those writers know
+    * nothing of the bloom; without the reconcile the merge would take their
+    * URLs, rediscovered as outlinks, for new ones and insert duplicate rows.
+    *
     * Materialization: the round computes three frames once each and cuts
     * their lineage there with `localCheckpoint` — the fetched `pages`, the
     * aggregated `linked` updates and the merged frontier. Every later
@@ -102,32 +119,15 @@ object CrawlRound {
     // rows, so updatedb may keep its one-fetch-row-per-URL fast plan
     val cfg = cfg0.copy(fetchMultiDoc = fetcher.multiDoc)
     import spark.implicits._
-    import org.apache.spark.sql.Observation
     import org.apache.spark.storage.StorageLevel
-    val t0 = System.nanoTime()
-    val stageMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def timed[A](name: String)(f: => A): A = {
-      val s = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"round$round:$name") // guide §1.5
-      val r = try f finally spark.sparkContext.setJobDescription(null)
-      stageMs.update(name, (System.nanoTime() - s) / 1000000)
-      r
-    }
-    // every frame the round materializes, released at round end
-    val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-    def checkpoint[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
-      val cp = localCheckpointAsCached(spark, ds, eager)
-      held += cp
-      cp
-    }
-
     // snapshots load by their known schema (no footer-inference job), once
     val frontier = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(throw new IllegalStateException("no frontier — run inject first"))
+    val tail = new Tail(spark, store, cfg, round, now, frontier)
 
     // hot-host salting from the previous round's host stats (data-driven
     // generate-domain-limits): hosts with big pending mass spread over k keys
-    val prevHostStats = if (cfg.updateHostDb) store.loadAs[HostStats](spark, "host_stats") else None
+    val prevHostStats = tail.prevHostStats
     val hostSalt: Map[String, Int] =
       prevHostStats
         .map(ds => graft.frontier.HostDb.hotHostSalt(ds,
@@ -154,12 +154,7 @@ object CrawlRound {
     val metricsAcc: CollectionAccumulator[FetchPartitionMetrics] =
       spark.sparkContext.collectionAccumulator[FetchPartitionMetrics]("fetch_metrics")
 
-    // job 1: write fetched (materializes generate → fetch → pages; counts observed)
-    // fetched/parsed/side tables are per-round derived outputs: history replay
-    // after an explicit frontier resetTo legitimately re-commits them
-    // (allowRewind); the frontier commit itself keeps the strict guard.
-    val obsFetch = Observation(s"fetch_r$round")
-    val (markedFrontier, pages) = timed("generate+fetch+write") {
+    tail.run("generate+fetch+write", dedupEachRound) {
       // --- generate ---
       val (fetchlist0, marked) =
         Generator.generate(frontier, cfg, now, round, hostSalt, badHosts, hostDelays, domainSkewAcc)
@@ -167,7 +162,7 @@ object CrawlRound {
       // mark-back runs; on the default path pages is the sole consumer and a
       // persist would just materialize 4M rows twice
       val fetchlist =
-        if (cfg.generateUpdateDb) { val p = fetchlist0.persist(StorageLevel.MEMORY_AND_DISK); held += p; p }
+        if (cfg.generateUpdateDb) { val p = fetchlist0.persist(StorageLevel.MEMORY_AND_DISK); tail.held += p; p }
         else fetchlist0
 
       // --- fetch (politeness executor, partition-local) ---
@@ -184,211 +179,303 @@ object CrawlRound {
             graft.score.SimilarityScoring.goldModel(goldText))
         case None => pages0
       }
-      // lazy: creating the checkpoint runs generate's exchange; this write
-      // then fetches every page once and keeps it
-      val pages = checkpoint(scored, eager = false)
-      graft.functions.GraftFunctions.register(spark)
-      store.commit("fetched",
-        pages.toDF().observe(obsFetch, count(lit(1)).as("fetched"))
-          .drop("spans")
-          // resolved mime (header-normalized | by-extension | default) as a
-          // first-class crawl_fetch column, like the reference's parse_data
-          .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url"))),
-        round, allowRewind = true)
-      (marked, pages)
+      // --- updatedb input. generate.update.crawldb=false (reference
+      //     default): the unmarked frontier feeds the co-group and the
+      //     mark-back join NEVER RUNS (`marked` is lazy) — one fewer
+      //     frontier-wide shuffle per round. When true, the _ngt_ stamp
+      //     rides in and persists. ---
+      (scored, if (cfg.generateUpdateDb) marked else frontier)
+    } {
+      // per-partition fetch lineage (from the accumulator, no extra pass)
+      // and the domain-mode skew warning (generate_skew row: input_rows = #
+      // domains over the per-partition target — nonzero means domain mode
+      // is stalling partitions on this frontier; switch to host mode +
+      // salting)
+      import scala.jdk.CollectionConverters._
+      metricsAcc.value.asScala.toSeq.map(m =>
+        RoundMetric(round, "fetch", m.partition_id, m.input_rows,
+          m.fetched + m.robots_denied + m.robots_deferred + m.retries + m.redirects + m.gone,
+          m.fetched, m.robots_denied, m.retries, m.virtual_ms)) ++
+        domainSkewAcc.toSeq.filter(_.value > 0).map(acc =>
+          RoundMetric(round, "generate_skew", -1, acc.value, 0, 0, 0, 0, 0))
     }
-    val fetchedPages = obsFetch.get("fetched").asInstanceOf[Long]
+  }
 
-    // job 2: write parsed (checkpointed pages)
-    val obsParse = Observation(s"parse_r$round")
-    timed("parse+write") {
-      // parsefilter-debug: serialized parser interpretation riding in
-      // parse_meta["DOM"] (column-pure; off by default)
-      val parsedOut =
-        if (cfg.parseFilterDebug) graft.parse.ParseFilters.stampDom(Parse.parsedDocs(pages).toDF())
-        else Parse.parsedDocs(pages).toDF()
-      store.commit("parsed",
-        parsedOut.observe(obsParse, count(lit(1)).as("parsed")), round,
-        allowRewind = true)
+  /** The archive head: pages read from ARC/WARC containers enter the round
+    * tail like fetched ones, so an import is an ordinary round — commits,
+    * updatedb, dedup, the seen bloom, host_stats and stage timings. The
+    * frontier defaults to empty when none is committed, and `fetchMultiDoc`
+    * stays on because an archive can hold one URL twice. `headRows`
+    * (evaluated at round end) ride the round's metrics append. */
+  private[cli] def importPages(
+      spark: SparkSession,
+      store: TableStore,
+      cfg: CrawlConfig,
+      round: Int,
+      now: Long,
+      pages: Dataset[FetchedPage],
+      headRows: => Seq[RoundMetric]
+  ): RoundStats = {
+    import spark.implicits._
+    val frontier = store.loadAs[FrontierEntry](spark, "frontier")
+      .getOrElse(spark.emptyDataset[FrontierEntry])
+    new Tail(spark, store, cfg.copy(fetchMultiDoc = true), round, now, frontier)
+      .run("import+write", dedupEachRound = true)((pages, frontier))(headRows)
+  }
+
+  /** The post-fetch half of a round, shared by both heads. `frontier` is the
+    * round's start snapshot. */
+  private final class Tail(
+      spark: SparkSession,
+      store: TableStore,
+      cfg: CrawlConfig,
+      round: Int,
+      now: Long,
+      frontier: Dataset[FrontierEntry]
+  ) {
+    import spark.implicits._
+    import org.apache.spark.sql.Observation
+    import graft.seen.UrlSeen
+
+    private val t0 = System.nanoTime()
+    private val frontierSnap = store.current("frontier")
+    val prevHostStats: Option[Dataset[HostStats]] =
+      if (cfg.updateHostDb) store.loadAs[HostStats](spark, "host_stats") else None
+
+    private val stageMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    private def timed[A](name: String)(f: => A): A = {
+      val s = System.nanoTime()
+      spark.sparkContext.setJobDescription(s"round$round:$name") // guide §1.5
+      val r = try f finally spark.sparkContext.setJobDescription(null)
+      stageMs.update(name, (System.nanoTime() - s) / 1000000)
+      r
     }
-    val parsedCount = obsParse.get("parsed").asInstanceOf[Long]
+    /** Every frame the round materializes, released at round end. */
+    val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    private def checkpoint[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
+      val cp = localCheckpointAsCached(spark, ds, eager)
+      held += cp
+      cp
+    }
 
-    // --- URL-seen bloom (north rule): reuse the session-cached broadcast
-    //     when it matches the committed blob (sequential rounds pay the
-    //     delta merge, never a full blob reload + re-broadcast — O(bloom)
-    //     per round otherwise, ~1.2 GB at 10^9 URLs); else load the blob;
-    //     build-once from the frontier if absent (first round / migration).
-    //     Saturated filters rebuild from the frontier at 2× capacity. ---
-    var seenFromCache = false
-    val seen: Option[graft.seen.UrlSeen.SeenSet] =
-      if (!cfg.useSeenBloom) None
-      else {
-        val snap = store.current("seen_bloom")
-        val cached = snap.flatMap(s =>
-          graft.seen.UrlSeen.cachedFor(store.root, s.path, s.committedAtMs))
-        seenFromCache = cached.isDefined
-        val loaded = cached.orElse(
-          store.loadBlob("seen_bloom").map(graft.seen.UrlSeen.fromBytes(spark, _)))
-        loaded match {
-          case Some(sf) if !sf.saturated => Some(sf)
-          case other =>
-            seenFromCache = false
-            val cap = other match {
-              case Some(sf) => math.max(cfg.bloomExpectedItems, sf.approxInserted * 2)
-              case None => cfg.bloomExpectedItems
-            }
-            Some(graft.seen.UrlSeen.build(
-              frontier.toDF().select(col("url_hash")), cap, cfg.bloomFpp,
-              shards = cfg.seenBloomShards))
+    /** Runs `head` (pages + the updatedb input) inside the timed stage
+      * `headStage` together with the fetched write, then the rest of the
+      * round. `headRows` is evaluated after every stage has run. */
+    def run(headStage: String, dedupEachRound: Boolean)(
+        head: => (Dataset[FetchedPage], Dataset[FrontierEntry]))(
+        headRows: => Seq[RoundMetric]): RoundStats = {
+      // job 1: write fetched (materializes the head → pages; counts observed)
+      // fetched/parsed/side tables are per-round derived outputs: history
+      // replay after an explicit frontier resetTo legitimately re-commits
+      // them (allowRewind); the frontier commit itself keeps the strict guard.
+      val obsFetch = Observation(s"fetch_r$round")
+      val (pages, dbIn) = timed(headStage) {
+        val (pages0, dbIn) = head
+        // lazy: creating the checkpoint runs the head's exchange (generate's);
+        // this write then fetches every page once and keeps it
+        val pages = checkpoint(pages0, eager = false)
+        graft.functions.GraftFunctions.register(spark)
+        store.commit("fetched",
+          pages.toDF().observe(obsFetch, count(lit(1)).as("fetched"))
+            .drop("spans")
+            // resolved mime (header-normalized | by-extension | default) as a
+            // first-class crawl_fetch column, like the reference's parse_data
+            .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url"))),
+          round, allowRewind = true)
+        (pages, dbIn)
+      }
+      val fetchedPages = obsFetch.get("fetched").asInstanceOf[Long]
+
+      // job 2: write parsed (checkpointed pages)
+      val obsParse = Observation(s"parse_r$round")
+      timed("parse+write") {
+        // parsefilter-debug: serialized parser interpretation riding in
+        // parse_meta["DOM"] (column-pure; off by default)
+        val parsedOut =
+          if (cfg.parseFilterDebug) graft.parse.ParseFilters.stampDom(Parse.parsedDocs(pages).toDF())
+          else Parse.parsedDocs(pages).toDF()
+        store.commit("parsed",
+          parsedOut.observe(obsParse, count(lit(1)).as("parsed")), round,
+          allowRewind = true)
+      }
+      val parsedCount = obsParse.get("parsed").asInstanceOf[Long]
+
+      // --- URL-seen bloom (north rule): reuse the session-cached broadcast
+      //     when it matches the committed blob (sequential rounds pay the
+      //     delta merge, never a full blob reload + re-broadcast — O(bloom)
+      //     per round otherwise, ~1.2 GB at 10^9 URLs); else load the blob;
+      //     build-once from the frontier if absent (first round / migration).
+      //     Saturated filters rebuild from the frontier at 2× capacity. A
+      //     blob older than the frontier is reconciled first (see run). ---
+      var seenFromCache = false
+      val seen: Option[UrlSeen.SeenSet] =
+        if (!cfg.useSeenBloom) None
+        else {
+          val snap = store.current("seen_bloom")
+          val cached = snap.flatMap(s => UrlSeen.cachedFor(store.root, s.path, s.committedAtMs))
+          seenFromCache = cached.isDefined
+          val loaded = cached.orElse(store.loadBlob("seen_bloom").map(UrlSeen.fromBytes(spark, _)))
+          loaded match {
+            case Some(sf) if !sf.saturated =>
+              val stale = snap.exists(b => frontierSnap.exists(_.committedAtMs > b.committedAtMs))
+              Some(if (stale) reconcile(sf, snap.get, seenFromCache) else sf)
+            case other =>
+              seenFromCache = false
+              val cap = other match {
+                case Some(sf) => math.max(cfg.bloomExpectedItems, sf.approxInserted * 2)
+                case None => cfg.bloomExpectedItems
+              }
+              Some(UrlSeen.build(frontier.toDF().select(col("url_hash")), cap, cfg.bloomFpp,
+                shards = cfg.seenBloomShards))
+          }
+        }
+
+      // urlmeta: tagged parents only (tags start from seeds, so this subset
+      // is tiny relative to the frontier — a narrow filter off the existing
+      // scan, no frontier-wide shuffle; AQE broadcasts the small side)
+      val parentMeta: Option[org.apache.spark.sql.DataFrame] =
+        if (cfg.frontierRelayKeys.isEmpty) None
+        else {
+          Some(frontier.toDF()
+            .select(col("url").as("from_url"),
+              map_filter(col("metadata"),
+                (k, _) => cfg.frontierRelayKeys.map(t => k === lit(t)).reduce(_ || _)).as("urlmeta"))
+            .filter(size(col("urlmeta")) > 0))
+        }
+      // The merged frontier feeds dedup's three INDEPENDENT sibling stages
+      // (candidates, keep-best aggregation, pass-through rest), the frontier
+      // write and the seen-bloom delta. Checkpointing it EAGERLY in its own
+      // pass computes the merge exactly once: on a cold lazy materialization
+      // the siblings race for it and their blocked tasks hold slots, ~tripling
+      // the merge's wall cost (measured: three concurrent ~1.6 s stages). The
+      // link updates are checkpointed lazily here too: creating the checkpoint
+      // runs their explode/canonicalize/pre-aggregation stages once, and the
+      // merge (its seen and new branches under the bloom split) reads them
+      // from a leaf. Only the merge reads them, so they and the link
+      // pipeline's own cache are released as soon as the merge is.
+      val newFrontier = timed("updatedb_materialize") {
+        val fetchUpdates = Parse.fetchUpdates(pages, cfg)
+        val linkFrames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+        val linked = localCheckpointAsCached(spark,
+          Parse.linkedUpdates(pages, cfg, round, parentMeta, linkFrames += _), eager = false)
+        linkFrames += linked
+        val merged =
+          if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
+          else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
+        // plan evidence hook (guide §7.2): dump the merge's physical plan once
+        // per process when asked — the loaded-round twin of PlanDump
+        if (sys.env.contains("GRAFT_EXPLAIN_UPDATEDB") && round == 1)
+          System.err.println("[updatedb plan]\n" + merged.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        val cp = checkpoint(merged, eager = true)
+        linkFrames.foreach(graft.ops.release)
+        cp
+      }
+      val obsDb = Observation(s"updatedb_r$round")
+      // optional storage layout: bucket by url_hash (min/max pruning turns the
+      // point lookup into a partial scan) + sort by reversed host (locality —
+      // SURVEY.md §1.2 partitioning note)
+      def layout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        if (cfg.frontierBuckets <= 0) df
+        else {
+          graft.functions.GraftFunctions.register(spark)
+          df.repartition(cfg.frontierBuckets, pmod(col("url_hash"), lit(cfg.frontierBuckets)))
+            .sortWithinPartitions(reverse(col("host")), col("url_hash"))
+        }
+      timed("updatedb+dedup+write") {
+        val finalFrontier = if (dedupEachRound) Dedup.markDuplicates(newFrontier) else newFrontier
+        store.commit("frontier",
+          layout(finalFrontier.toDF()).observe(obsDb,
+            count(lit(1)).as("size"),
+            count(when(col("status") === CrawlStatus.DB_UNFETCHED, 1)).as("unfetched")), round)
+      }
+      val frontierSize = obsDb.get("size").asInstanceOf[Long]
+      val unfetched = obsDb.get("unfetched").asInstanceOf[Long]
+
+      // --- URL-seen bloom maintenance: the delta is exactly the merged
+      //     frontier's bloom-missing hashes — a filter over the CHECKPOINTED
+      //     new frontier (zero rows in a steady-state round), then a tiny
+      //     bloom aggregation + blob swap. No link re-canonicalization, no
+      //     committed-parquet re-read. ---
+      seen.foreach { sf =>
+        timed("seen_bloom") {
+          val newHashes = newFrontier.toDF()
+            .filter(!UrlSeen.mightContainCol(spark, sf, col("url_hash")))
+            .select(col("url_hash"))
+          val merged = UrlSeen.merged(spark, sf, newHashes, 0L)
+            .withApproxInserted(math.max(sf.approxInserted, frontierSize))
+          // allowRewind: after an explicit frontier resetTo the replayed rounds
+          // re-commit the blob at lower rounds; the bloom is a monotone
+          // superset, so a rewound pointer is still correct
+          val snap = store.commitBlob("seen_bloom", UrlSeen.toBytes(merged), round,
+            allowRewind = true)
+          // broadcast lifecycle: the blob is the durable copy; the MERGED set
+          // becomes the session cache entry (next round reuses it when the
+          // blob identity matches — no reload, no re-broadcast) and every
+          // superseded broadcast not shared with the successor is destroyed
+          // (a sharded merge replaces ONE shard; the other k-1 are shared), so
+          // a crawl session holds at most one live set per store
+          UrlSeen.cacheFor(store.root, snap.path, snap.committedAtMs, merged)
+          if (!seenFromCache) UrlSeen.destroyDiff(sf, merged)
         }
       }
 
-    // --- updatedb. generate.update.crawldb=false (reference default): the
-    //     unmarked frontier feeds the co-group and the mark-back join NEVER
-    //     RUNS (markedFrontier is lazy) — one fewer frontier-wide shuffle
-    //     per round. When true, the _ngt_ stamp rides in and persists. ---
-    val dbIn = if (cfg.generateUpdateDb) markedFrontier else frontier
-    // urlmeta: tagged parents only (tags start from seeds, so this subset
-    // is tiny relative to the frontier — a narrow filter off the existing
-    // scan, no frontier-wide shuffle; AQE broadcasts the small side)
-    val parentMeta: Option[org.apache.spark.sql.DataFrame] =
-      if (cfg.frontierRelayKeys.isEmpty) None
-      else {
-        Some(frontier.toDF()
-          .select(col("url").as("from_url"),
-            map_filter(col("metadata"),
-              (k, _) => cfg.frontierRelayKeys.map(t => k === lit(t)).reduce(_ || _)).as("urlmeta"))
-          .filter(size(col("urlmeta")) > 0))
+      // --- optional per-round side tables ---
+      if (cfg.updateHostDb) timed("hostdb") {
+        // aggregate from the just-committed frontier: a (host, status, score)
+        // column-pruned parquet scan — cheaper than re-deriving the dedup'd
+        // frontier, and semantics match the committed snapshot. `prev` is the
+        // round's start snapshot of host_stats (nothing commits it in between)
+        val committed = store.loadAs[FrontierEntry](spark, "frontier").get
+        store.commit("host_stats",
+          graft.frontier.HostDb.fromFrontier(committed, now, Some(pages.toDF()),
+            prev = prevHostStats.map(_.toDF())).toDF(),
+          round, allowRewind = true)
       }
-    // The merged frontier feeds dedup's three INDEPENDENT sibling stages
-    // (candidates, keep-best aggregation, pass-through rest), the frontier
-    // write and the seen-bloom delta. Checkpointing it EAGERLY in its own
-    // pass computes the merge exactly once: on a cold lazy materialization
-    // the siblings race for it and their blocked tasks hold slots, ~tripling
-    // the merge's wall cost (measured: three concurrent ~1.6 s stages). The
-    // link updates are checkpointed lazily here too: creating the checkpoint
-    // runs their explode/canonicalize/pre-aggregation stages once, and the
-    // merge (its seen and new branches under the bloom split) reads them
-    // from a leaf. Only the merge reads them, so they and the link
-    // pipeline's own cache are released as soon as the merge is.
-    val newFrontier = timed("updatedb_materialize") {
-      val fetchUpdates = Parse.fetchUpdates(pages, cfg)
-      val linkFrames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-      val linked = localCheckpointAsCached(spark,
-        Parse.linkedUpdates(pages, cfg, round, parentMeta, linkFrames += _), eager = false)
-      linkFrames += linked
-      val merged =
-        if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-        else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-      // plan evidence hook (guide §7.2): dump the merge's physical plan once
-      // per process when asked — the loaded-round twin of PlanDump
-      if (sys.env.contains("GRAFT_EXPLAIN_UPDATEDB") && round == 1)
-        System.err.println("[updatedb plan]\n" + merged.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      val cp = checkpoint(merged, eager = true)
-      linkFrames.foreach(graft.ops.release)
-      cp
-    }
-    val obsDb = Observation(s"updatedb_r$round")
-    // optional storage layout: bucket by url_hash (min/max pruning turns the
-    // point lookup into a partial scan) + sort by reversed host (locality —
-    // SURVEY.md §1.2 partitioning note)
-    def layout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (cfg.frontierBuckets <= 0) df
-      else {
-        graft.functions.GraftFunctions.register(spark)
-        df.repartition(cfg.frontierBuckets, pmod(col("url_hash"), lit(cfg.frontierBuckets)))
-          .sortWithinPartitions(reverse(col("host")), col("url_hash"))
+      if (cfg.invertLinks) timed("invertlinks") {
+        // the reference's invertlinks runs over the NEW segment and merges
+        // into the existing linkdb (LinkDbMerger) — a round that fetched
+        // nothing must not wipe the graph
+        val fresh = graft.frontier.LinkDb.invert(pages, cfg.maxInlinks)
+        val merged = store.load(spark, "linkdb") match {
+          case Some(prev) => graft.frontier.LinkDb.merge(prev, fresh, cfg.maxInlinks)
+          case None => fresh
+        }
+        store.commit("linkdb", merged, round, allowRewind = true)
       }
-    timed("updatedb+dedup+write") {
-      val finalFrontier = if (dedupEachRound) Dedup.markDuplicates(newFrontier) else newFrontier
-      store.commit("frontier",
-        layout(finalFrontier.toDF()).observe(obsDb,
-          count(lit(1)).as("size"),
-          count(when(col("status") === CrawlStatus.DB_UNFETCHED, 1)).as("unfetched")), round)
-    }
-    val frontierSize = obsDb.get("size").asInstanceOf[Long]
-    val unfetched = obsDb.get("unfetched").asInstanceOf[Long]
 
-    // --- URL-seen bloom maintenance: the delta is exactly the merged
-    //     frontier's bloom-missing hashes — a filter over the CHECKPOINTED
-    //     new frontier (zero rows in a steady-state round), then a tiny
-    //     bloom aggregation + blob swap. No link re-canonicalization, no
-    //     committed-parquet re-read. ---
-    seen.foreach { sf =>
-      timed("seen_bloom") {
-        val newHashes = newFrontier.toDF()
-          .filter(!graft.seen.UrlSeen.mightContainCol(spark, sf, col("url_hash")))
-          .select(col("url_hash"))
-        val merged = graft.seen.UrlSeen.merged(spark, sf, newHashes, 0L)
-          .withApproxInserted(math.max(sf.approxInserted, frontierSize))
-        // allowRewind: after an explicit frontier resetTo the replayed rounds
-        // re-commit the blob at lower rounds; the bloom is a monotone
-        // superset, so a rewound pointer is still correct
-        val snap = store.commitBlob("seen_bloom", graft.seen.UrlSeen.toBytes(merged), round,
-          allowRewind = true)
-        // broadcast lifecycle: the blob is the durable copy; the MERGED set
-        // becomes the session cache entry (next round reuses it when the
-        // blob identity matches — no reload, no re-broadcast) and every
-        // superseded broadcast not shared with the successor is destroyed
-        // (a sharded merge replaces ONE shard; the other k-1 are shared), so
-        // a crawl session holds at most one live set per store
-        graft.seen.UrlSeen.cacheFor(store.root, snap.path, snap.committedAtMs, merged)
-        if (!seenFromCache) graft.seen.UrlSeen.destroyDiff(sf, merged)
+      // --- lineage + metrics (north rule; no extra pass): the head's rows
+      //     and the round-level stage lineage (wall ms per stage), written
+      //     as ONE append per round; readers tell the rows apart by `stage` ---
+      val rows = headRows
+      val stageRows = stageMs.toSeq.map { case (stage, ms) =>
+        RoundMetric(round, stage, -1, 0, 0, 0, 0, 0, ms)
       }
+      store.appendMetrics(
+        spark.createDataset(rows ++ stageRows).toDF().coalesce(1), round, "round")
+      val fetchRows = rows.filter(_.stage == "fetch")
+      val virtualMsMax = if (fetchRows.isEmpty) 0L else fetchRows.map(_.duration_ms).max
+      val generated = fetchRows.map(_.input_rows).sum
+
+      held.foreach(graft.ops.release)
+
+      RoundStats(round, generated, fetchedPages, parsedCount, frontierSize, unfetched,
+        (System.nanoTime() - t0) / 1000000, virtualMsMax, stageMs.toMap)
     }
 
-    // --- optional per-round side tables ---
-    if (cfg.updateHostDb) timed("hostdb") {
-      // aggregate from the just-committed frontier: a (host, status, score)
-      // column-pruned parquet scan — cheaper than re-deriving the dedup'd
-      // frontier, and semantics match the committed snapshot. `prev` is the
-      // round's start snapshot of host_stats (nothing commits it in between)
-      val committed = store.loadAs[FrontierEntry](spark, "frontier").get
-      store.commit("host_stats",
-        graft.frontier.HostDb.fromFrontier(committed, now, Some(pages.toDF()),
-          prev = prevHostStats.map(_.toDF())).toDF(),
-        round, allowRewind = true)
+    /** `sf` with the start frontier's bloom-missing hashes merged in (the
+      * bloom invariant after an out-of-band frontier write). The merged set
+      * takes `sf`'s place: as the session-cache entry for the same blob
+      * (displacing `sf`), or as the round's own loaded set. */
+    private def reconcile(sf: UrlSeen.SeenSet, blob: graft.store.Snapshot,
+                          fromCache: Boolean): UrlSeen.SeenSet = {
+      val missing = frontier.toDF().select(col("url_hash"))
+        .filter(!UrlSeen.mightContainCol(spark, sf, col("url_hash")))
+      val merged = UrlSeen.merged(spark, sf, missing, 0L)
+      if (fromCache) UrlSeen.cacheFor(store.root, blob.path, blob.committedAtMs, merged)
+      else UrlSeen.destroyDiff(sf, merged)
+      merged
     }
-    if (cfg.invertLinks) timed("invertlinks") {
-      // the reference's invertlinks runs over the NEW segment and merges
-      // into the existing linkdb (LinkDbMerger) — a round that fetched
-      // nothing must not wipe the graph
-      val fresh = graft.frontier.LinkDb.invert(pages, cfg.maxInlinks)
-      val merged = store.load(spark, "linkdb") match {
-        case Some(prev) => graft.frontier.LinkDb.merge(prev, fresh, cfg.maxInlinks)
-        case None => fresh
-      }
-      store.commit("linkdb", merged, round, allowRewind = true)
-    }
-
-    // --- per-partition lineage + metrics (north rule; from accumulators,
-    //     no extra pass): the fetch partition rows, the round-level stage
-    //     lineage (wall ms per stage) and the domain-mode skew warning
-    //     (generate_skew row: input_rows = # domains over the per-partition
-    //     target — nonzero means domain mode is stalling partitions on this
-    //     frontier; switch to host mode + salting), written as ONE append
-    //     per round; readers tell the rows apart by `stage` ---
-    import scala.jdk.CollectionConverters._
-    val fetchMetrics = metricsAcc.value.asScala.toSeq
-    val fetchRows = fetchMetrics.map(m =>
-      RoundMetric(round, "fetch", m.partition_id, m.input_rows,
-        m.fetched + m.robots_denied + m.robots_deferred + m.retries + m.redirects + m.gone,
-        m.fetched, m.robots_denied, m.retries, m.virtual_ms))
-    val skewRows = domainSkewAcc.toSeq.filter(_.value > 0).map(acc =>
-      RoundMetric(round, "generate_skew", -1, acc.value, 0, 0, 0, 0, 0))
-    val stageRows = stageMs.toSeq.map { case (stage, ms) =>
-      RoundMetric(round, stage, -1, 0, 0, 0, 0, 0, ms)
-    }
-    store.appendMetrics(
-      spark.createDataset(fetchRows ++ stageRows ++ skewRows).toDF().coalesce(1), round, "round")
-    val virtualMsMax = if (fetchMetrics.isEmpty) 0L else fetchMetrics.map(_.virtual_ms).max
-    val generated = fetchMetrics.map(_.input_rows).sum
-
-    held.foreach(graft.ops.release)
-
-    RoundStats(round, generated, fetchedPages, parsedCount, frontierSize, unfetched,
-      (System.nanoTime() - t0) / 1000000, virtualMsMax, stageMs.toMap)
   }
 
   /** `ds.localCheckpoint(eager)` with the partitioning a persisted plan gets:
@@ -402,53 +489,6 @@ object CrawlRound {
     spark.conf.set(key, false)
     try ds.localCheckpoint(eager)
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  /** Post-commit URL-seen maintenance for out-of-band frontier writers (ARC
-    * import, mid-crawl merge tools): merge the just-committed frontier's
-    * bloom-missing url hashes into the live filter (session cache first,
-    * else blob) and swap the blob + cache, with the same broadcast lifecycle
-    * as the round loop. Without this, the next regular round reuses a STALE
-    * bloom and UpdateDbColumnar's bloom-miss fast path re-inserts imported
-    * URLs rediscovered as outlinks as brand-new frontier rows (duplicate
-    * keys). When no blob exists yet, builds one from the frontier (same as
-    * the round loop's first-round path); saturated filters rebuild at 2×. */
-  def maintainSeenBloom(
-      spark: SparkSession,
-      store: TableStore,
-      cfg: CrawlConfig,
-      round: Int,
-      frontierSize: Long
-  ): Unit = {
-    if (!cfg.useSeenBloom) return
-    import graft.seen.UrlSeen
-    val frontierKeys = store.loadAs[FrontierEntry](spark, "frontier")
-      .getOrElse(return).select(col("url_hash"))
-    val snapB = store.current("seen_bloom")
-    val cached = snapB.flatMap(s => UrlSeen.cachedFor(store.root, s.path, s.committedAtMs))
-    val fromCache = cached.isDefined
-    val loaded = cached.orElse(
-      store.loadBlob("seen_bloom").map(UrlSeen.fromBytes(spark, _)))
-    val (merged, superseded) = loaded match {
-      case Some(sf) if !sf.saturated =>
-        val newHashes = frontierKeys
-          .filter(!UrlSeen.mightContainCol(spark, sf, col("url_hash")))
-        (UrlSeen.merged(spark, sf, newHashes, 0L)
-          .withApproxInserted(math.max(sf.approxInserted, frontierSize)),
-          if (fromCache) None else Some(sf))
-      case other =>
-        val cap = other.map(sf => math.max(cfg.bloomExpectedItems, sf.approxInserted * 2))
-          .getOrElse(cfg.bloomExpectedItems)
-        // a cache-origin saturated filter is destroyed by cacheFor's
-        // displacement below — passing it as superseded too would
-        // double-destroy the same broadcasts (SparkException)
-        (UrlSeen.build(frontierKeys, cap, cfg.bloomFpp, shards = cfg.seenBloomShards)
-          .withApproxInserted(frontierSize), if (fromCache) None else other)
-    }
-    val snap = store.commitBlob("seen_bloom", UrlSeen.toBytes(merged), round,
-      allowRewind = true)
-    UrlSeen.cacheFor(store.root, snap.path, snap.committedAtMs, merged)
-    superseded.foreach(sf => UrlSeen.destroyDiff(sf, merged))
   }
 
   /** Resume-aware multi-round driver: continues after the last committed

@@ -1,10 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 import graft.fetch.Fetcher
-import graft.schema.FrontierEntry
 import graft.url.UrlFilters
 
 /** Sitemap processing (reference util/SitemapProcessor.java: an optional
@@ -14,10 +12,11 @@ import graft.url.UrlFilters
   *
   * Spark realization: distinct hosts off the frontier → partition-local
   * sitemap discovery (robots `Sitemap:` lines via the fetcher's robots
-  * cache) and fetch → link-span extraction → canonicalize + filter →
-  * inject-merge (known URLs keep their crawl state, new URLs enter as
-  * db_unfetched with the configured sitemap score). Everything between the
-  * two shuffles (host distinct, inject co-group) is partition-local.
+  * cache) and fetch → link-span extraction → canonicalize + filter; the
+  * caller (`Crawl.processSitemaps`) injects the URLs as seed lines (known
+  * URLs keep their crawl state, new URLs enter as db_unfetched with the
+  * configured sitemap score). Everything between the two shuffles (host
+  * distinct, inject co-group) is partition-local.
   */
 object Sitemaps {
 
@@ -47,24 +46,5 @@ object Sitemaps {
         }
       }
     }.distinct()
-  }
-
-  /** Full stage: frontier hosts → sitemap URLs → inject-merge. Returns the
-    * merged frontier (caller commits). `sitemapScore` mirrors the
-    * reference's db.score.sitemap-style seeding for sitemap-discovered URLs. */
-  def process(
-      frontier: Dataset[FrontierEntry],
-      fetcher: Fetcher,
-      cfg: CrawlConfig,
-      now: Long,
-      sitemapScore: Float = 0.5f
-  ): Dataset[FrontierEntry] = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    val hosts = frontier.select(col("host")).distinct().as[String]
-    val urls = discover(hosts, fetcher, cfg)
-    // seed-line form feeds the standard inject merge (known rows unchanged)
-    val seedLines = urls.map(u => s"$u\tnutch.score=$sitemapScore")
-    Inject.run(frontier, seedLines, cfg, now)
   }
 }

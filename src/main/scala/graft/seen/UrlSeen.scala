@@ -19,11 +19,14 @@ import org.apache.spark.util.sketch.BloomFilter
   *  - mightContain == true   ⇒ maybe seen → exact resolution against the
   *    frontier for just that (fpp-bounded) slice.
   *
-  * Lifecycle in the round loop (see CrawlRound): built once at inject,
-  * persisted as a SnapshotStore blob, loaded + broadcast each round, and
-  * MERGED (bitwise OR of equal-shaped filters) with a per-round bloom built
-  * over the round's update side (discovered links ∪ fetch results) — never
-  * by re-scanning the frontier. The filter is a SUPERSET of all URLs ever
+  * Lifecycle in the round loop (see CrawlRound): built once from the
+  * frontier by the first round, persisted as a SnapshotStore blob, loaded +
+  * broadcast each round, and MERGED (bitwise OR of equal-shaped filters)
+  * with a per-round bloom built over the merged frontier's bloom-missing
+  * hashes (a filter over the round's checkpoint, not a rebuild). A round
+  * whose frontier was committed after the blob (inject, sitemaps,
+  * maintenance tools) first merges that frontier's missing hashes in the
+  * same way. The filter is a SUPERSET of all URLs ever
   * seen (purged rows stay in), which is exactly the URL-seen semantics; a
   * false positive or a stale superset entry only routes a row through the
   * exact join path, never drops it.
@@ -135,7 +138,10 @@ object UrlSeen {
             approxInserted: Long = -1L, shards: Int = 1): SeenSet = {
     val spark = frontier.sparkSession
     if (shards <= 1) {
-      val bf = frontier.stat.bloomFilter("url_hash", expectedItems, fpp)
+      // stat.bloomFilter NPEs on zero rows: an empty frontier starts blank
+      val bf =
+        if (frontier.isEmpty) BloomFilter.create(expectedItems, fpp)
+        else frontier.stat.bloomFilter("url_hash", expectedItems, fpp)
       val n = if (approxInserted >= 0) approxInserted else 0L
       SeenFilter(spark.sparkContext.broadcast(bf), expectedItems, fpp, n)
     } else {

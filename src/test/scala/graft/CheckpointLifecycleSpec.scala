@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.cli.CrawlRound
+import graft.cli.{Crawl, CrawlRound}
 import graft.fetch.SyntheticFetcher
 import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.{CrawlConfig, LinkRank}
@@ -61,6 +61,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("a crawl round releases what it materializes; the frontier commit reads the merged checkpoint") {
+    import spark.implicits._
     val web = SyntheticWeb(WebConfig(nHosts = 6, pagesPerHost = 10, hotFactor = 3))
     val cfg = CrawlConfig(topN = 200, maxPerHost = 40, numFetchPartitions = 2,
       serverDelayMs = 100, fetchLatencyMs = 2)
@@ -86,16 +87,20 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     try {
       CrawlRound.run(spark, store, fetcher, cfg, 2, 1700000000000L + day)
       CrawlRound.run(spark, store, fetcher, cfg, 3, 1700000000000L + 2 * day, dedupEachRound = false)
+      // an archive import runs the same round tail (round 4)
+      val page = s"""<html><body>archived <a href="${web.pageUrl(1, 4)}">next</a></body></html>"""
+      val arc = s"${web.pageUrl(1, 3)} 10.0.0.1 20231114221320 text/html ${page.length}\n$page\n\n"
+      Crawl(spark, root, cfg, fetcher).importArc(Seq(arc).toDS())
       val deadline = System.nanoTime() + 30000000000L // listener events arrive asynchronously
-      while (commits.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (commits.size < 3 && System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
 
     assert(persisted -- before == Set.empty, "the rounds left RDDs persisted")
     assert(cachedPlans == plansBefore, "the rounds left plans in CacheManager")
-    val Seq(withDedup, plain) = commits.asScala.toSeq
+    val Seq(withDedup, plain, imported) = commits.asScala.toSeq
     // every leaf is the merged frontier's checkpoint: nothing re-reads the
     // snapshot or re-plans generate → fetch → parse → merge
-    for (p <- Seq(withDedup, plain)) {
+    for (p <- Seq(withDedup, plain, imported)) {
       val leaves = leafRdds(p)
       assert(leaves.forall(_.isDefined) && leaves.distinct.size == 1,
         s"frontier commit leaves: ${p.collectLeaves().map(_.nodeName)}")
@@ -103,6 +108,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     // the merge's joins sit below the checkpoint: only dedup's keep-best
     // join is left, and none without dedup
     assert(withDedup.collect { case j: Join => j }.size == 1)
+    assert(imported.collect { case j: Join => j }.size == 1)
     assert(plain.collect { case j: Join => j }.isEmpty)
   }
 }

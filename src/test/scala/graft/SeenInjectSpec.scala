@@ -32,6 +32,13 @@ class SeenInjectSpec extends AnyFunSuite with SparkSpecBase {
     // two-phase filter returns exactly the unseen set
     val got = UrlSeen.filterUnseen(candDf, filterS, seenDf).collect().map(_.getLong(0)).toSet
     assert(got == unseen.toSet)
+
+    // zero rows (an empty store's first round): an empty filter of the
+    // requested capacity
+    val empty = UrlSeen.build(seenDf.limit(0), expectedItems = 20000, fpp = 0.01)
+      .asInstanceOf[UrlSeen.SeenFilter]
+    assert(empty.bloom.value.bitSize() == filterS.asInstanceOf[UrlSeen.SeenFilter].bloom.value.bitSize())
+    assert(!candidates.exists(empty.mightContain), "an empty filter holds nothing")
   }
 
   test("seed line parsing: comments, malformed, overrides, metadata") {

@@ -207,6 +207,41 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
       s"steady-state round must reuse ≥ k-1 shard broadcasts (shared $shared/${before.length})")
   }
 
+  test("a mid-crawl inject or sitemap stage leaves the next rounds unique per url and bloom-covered") {
+    import spark.implicits._
+    // frontier writers that know nothing of the bloom leave the blob older
+    // than the frontier; the next round must reconcile it before its merge
+    // trusts bloom misses (this fixture has sitemap hosts, unlike `web`)
+    val web = SyntheticWeb(WebConfig(nHosts = 20, pagesPerHost = 15, hotFactor = 2))
+    val cfg = baseCfg
+    val writers: Seq[(String, graft.cli.Crawl => Long)] = Seq(
+      "inject" -> { crawl =>
+        val known = crawl.frontier.select("url").as[String].collect().toSet
+        val undiscovered = web.urls(spark).collect().filterNot(known).toSeq
+        assert(undiscovered.nonEmpty, "fixture must have URLs round 1 did not discover")
+        CrawlRound.inject(spark, crawl.store, undiscovered.toDS(), cfg, crawl.startTimeMs)
+      },
+      "sitemaps" -> (_.processSitemaps()))
+    val problems = writers.flatMap { case (name, write) =>
+      val crawl = graft.cli.Crawl(spark, tmp(), cfg, graft.fetch.SyntheticFetcher(web, 10))
+      crawl.inject(web.seedUrls.toDS())
+      crawl.round()
+      val sizeBefore = crawl.frontier.count()
+      assert(write(crawl) > sizeBefore, s"$name must add URLs to the frontier")
+      crawl.rounds(2)
+
+      val frontier = crawl.frontier
+      val dups = frontier.groupBy("url").count().filter(col("count") > 1).count()
+      val sf = UrlSeen.fromBytes(spark, crawl.store.loadBlob("seen_bloom").get)
+      val missing = frontier.select("url_hash").as[Long].collect().count(h => !sf.mightContain(h))
+      sf.broadcasts.foreach(_.destroy())
+      Seq(s"$name: $dups urls hold more than one frontier row" -> dups,
+        s"$name: $missing frontier url_hash values missing from the committed bloom" -> missing.toLong)
+        .collect { case (msg, n) if n > 0 => msg }
+    }
+    assert(problems.isEmpty, problems.mkString("; "))
+  }
+
   test("seen filter round-trips through the blob envelope") {
     import spark.implicits._
     val df = (1L to 1000L).toDF("url_hash")

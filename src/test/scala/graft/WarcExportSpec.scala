@@ -278,8 +278,10 @@ class WarcExportSpec extends AnyFunSuite with SparkSpecBase {
     // archive a page of the synthetic web pointing at another page
     val archived = web.pageUrl(1, 3)
     val target = web.pageUrl(1, 4)
+    // one record, then a tail the reader abandons (no ARC header line)
     val container = rec(archived, "text/html",
-      s"""<html><body>archived <a href="$target">next</a></body></html>""")
+      s"""<html><body>archived <a href="$target">next</a></body></html>""") +
+      "http://bad.test NOHEADER\nleftover"
     val stats = crawl.importArc(Seq(container).toDS())
     assert(stats.fetchedPages == 1)
     val rows = crawl.frontier.collect().map(r =>
@@ -291,10 +293,26 @@ class WarcExportSpec extends AnyFunSuite with SparkSpecBase {
     // fetched/parsed segments committed for the import round
     assert(crawl.fetched(stats.round).get.count() == 1)
     assert(crawl.parsed(stats.round).get.count() == 1)
+    // an import is a round: a real parsed count, the archive head's stage
+    // and the round tail's stages
+    assert(stats.parsedDocs == crawl.parsed(stats.round).get.count())
+    val stages = Seq("import+write", "parse+write", "updatedb_materialize",
+      "updatedb+dedup+write", "seen_bloom", "hostdb")
+    assert(stages.forall(stats.stageMs.contains), s"stages: ${stats.stageMs.keys}")
+    // the abandoned tail's bytes ride the round's single metrics append
+    val metricFiles = new java.io.File(root, "round_metrics").list().toSet
+    assert(metricFiles == Set(s"r${stats.round}-round"), s"metrics appends: $metricFiles")
+    val skipped = crawl.metrics.get.filter(col("stage") === "arc_skipped_bytes").collect()
+    assert(skipped.length == 1 && skipped.head.getAs[Long]("input_rows") > 0)
     // and a normal crawl round continues on top of the imported state
     val after = crawl.round()
     assert(after.round == stats.round + 1)
     assert(after.frontierSize >= stats.frontierSize)
+    // the `importarc` verb on a fresh store: no frontier yet, so the import
+    // is round 1 and its frontier is the page plus its outlink
+    val fresh = Crawl(spark, tmp(), cfg, graft.fetch.SyntheticFetcher(web, 5))
+      .importArc(Seq(container).toDS())
+    assert((fresh.round, fresh.fetchedPages, fresh.frontierSize) == ((1, 1L, 2L)))
   }
 
   test("importWarc: WARC response records re-enter as a crawl round (ingestion direction)") {
