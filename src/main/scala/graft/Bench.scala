@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.cli.CrawlRound
 import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.CrawlConfig
+import graft.tools.Harness
 
 /** Benchmark main (driver contract): one JSON line on stdout.
   *
@@ -47,58 +45,25 @@ object Bench {
     "q_neardup_clusters", "q_decontaminate", "q_stratified_sample", "q_repetition",
     "q_pack_sequences")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // shuffle on tmpfs when available: the sandbox's single ~300 MB/s disk is
-    // a shared constant-floor bottleneck (see BASELINE.md); per-executor NVMe
-    // plays this role on a real cluster
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val localDir =
-      if (java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft-bench-local").toString
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+  /** The loaded round: the whole synthetic web (~1M URLs) injected, one
+    * fully loaded topN=800k round, so the measured round is compute-bound,
+    * not job-overhead-bound. GRAFT_SEEN_SHARDS>1 measures the sharded
+    * URL-seen path (one-shard re-broadcast per round). */
+  val web = SyntheticWeb(WebConfig(nHosts = 3000, pagesPerHost = 350, hotFactor = 25))
+  def crawlConfig(cpus: Int): CrawlConfig = CrawlConfig(topN = 800000, maxPerHost = 500,
+    numFetchPartitions = cpus, serverDelayMs = 5000, fetchLatencyMs = 50,
+    seenBloomShards = sys.env.get("GRAFT_SEEN_SHARDS").map(_.toInt).getOrElse(1))
 
-    // --- phase 1: crawl-round throughput (the north metric), pristine JVM ---
-    // the measured round must be COMPUTE-dominated, not job-overhead-
-    // dominated: inject the whole synthetic web (distributed seed set,
-    // ~1M URLs) and measure one fully loaded round at topN=800k, best-of-3
-    // over the identical reset snapshot (steal-burst immunity).
-    val web = SyntheticWeb(WebConfig(nHosts = 3000, pagesPerHost = 350, hotFactor = 25))
-    val cfg = CrawlConfig(topN = 800000, maxPerHost = 500,
-      numFetchPartitions = cpus, serverDelayMs = 5000, fetchLatencyMs = 50,
-      // GRAFT_SEEN_SHARDS>1 measures the sharded URL-seen path (one-shard
-      // re-broadcast per round) on the loaded round
-      seenBloomShards = sys.env.get("GRAFT_SEEN_SHARDS").map(_.toInt).getOrElse(1))
-    val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
-    val store = new graft.store.SnapshotStore(root)
-    val startTime = 1700000000000L
-    CrawlRound.inject(spark, store, web.urls(spark), cfg, startTime)
-    val fetcher = graft.fetch.SyntheticFetcher(web, cfg.fetchLatencyMs)
-    // warmup round (JIT + seen-bloom build), then reset to the shared snapshot
-    CrawlRound.run(spark, store, fetcher, cfg.copy(topN = 20000), round = 1, startTime)
-    store.resetTo("frontier", 0)
-    // snapshot the post-warmup seen-bloom blob and restore it before EVERY
-    // measured run: all three replays see identical frontier AND bloom state
-    // (without this, run 1 sees the warmup bloom while runs 2-3 see the
-    // previous measured round's — a slightly different link-split shape)
-    val warmBloom = store.loadBlob("seen_bloom")
-    val runs = (1 to 3).map { _ =>
-      warmBloom.foreach(b => store.commitBlob("seen_bloom", b, 1, allowRewind = true))
-      val s = CrawlRound.run(spark, store, fetcher, cfg, round = 1, startTime)
-      store.resetTo("frontier", 0)
-      s
-    }
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+
+    // --- phase 1: crawl-round throughput (the north metric), pristine JVM,
+    // best-of-3 over the identical reset snapshot (steal-burst immunity) ---
+    val round = Harness.loadedRound(spark, web, crawlConfig(cpus),
+      java.nio.file.Files.createTempDirectory("graft-bench").toString)
+    val runs = (1 to 3).map(_ => round.replay())
     val best = runs.minBy(_.wallMs)
     val crawlSec = best.wallMs / 1000.0
     val urlsPerSec = best.fetchedPages / crawlSec
@@ -106,15 +71,8 @@ object Bench {
 
     // --- phase 2: headline operator queries ---
     val skipQueries = sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")
-    val qmap = SparkEntry.queries
     val results = (if (skipQueries) Seq.empty[String] else headline).map { name =>
-      val secs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try qmap(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> secs.min
+      name -> (1 to 2).map(_ => Harness.timeQuery(spark, sfDir, name)).min
     }
 
     val total = results.map(_._2).sum + crawlSec

@@ -112,8 +112,7 @@ object CrawlRound {
       fetcher: Fetcher,
       cfg0: CrawlConfig,
       round: Int,
-      now: Long,
-      dedupEachRound: Boolean = true
+      now: Long
   ): RoundStats = {
     // a span-serving fetcher can never explode one task into several fetched
     // rows, so updatedb may keep its one-fetch-row-per-URL fast plan
@@ -154,7 +153,7 @@ object CrawlRound {
     val metricsAcc: CollectionAccumulator[FetchPartitionMetrics] =
       spark.sparkContext.collectionAccumulator[FetchPartitionMetrics]("fetch_metrics")
 
-    tail.run("generate+fetch+write", dedupEachRound) {
+    tail.run("generate+fetch+write") {
       // --- generate ---
       val (fetchlist0, marked) =
         Generator.generate(frontier, cfg, now, round, hostSalt, badHosts, hostDelays, domainSkewAcc)
@@ -220,7 +219,7 @@ object CrawlRound {
     val frontier = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(spark.emptyDataset[FrontierEntry])
     new Tail(spark, store, cfg.copy(fetchMultiDoc = true), round, now, frontier)
-      .run("import+write", dedupEachRound = true)((pages, frontier))(headRows)
+      .run("import+write")((pages, frontier))(headRows)
   }
 
   /** The post-fetch half of a round, shared by both heads. `frontier` is the
@@ -261,7 +260,7 @@ object CrawlRound {
     /** Runs `head` (pages + the updatedb input) inside the timed stage
       * `headStage` together with the fetched write, then the rest of the
       * round. `headRows` is evaluated after every stage has run. */
-    def run(headStage: String, dedupEachRound: Boolean)(
+    def run(headStage: String)(
         head: => (Dataset[FetchedPage], Dataset[FrontierEntry]))(
         headRows: => Seq[RoundMetric]): RoundStats = {
       // job 1: write fetched (materializes the head → pages; counts observed)
@@ -383,9 +382,8 @@ object CrawlRound {
             .sortWithinPartitions(reverse(col("host")), col("url_hash"))
         }
       timed("updatedb+dedup+write") {
-        val finalFrontier = if (dedupEachRound) Dedup.markDuplicates(newFrontier) else newFrontier
         store.commit("frontier",
-          layout(finalFrontier.toDF()).observe(obsDb,
+          layout(Dedup.markDuplicates(newFrontier).toDF()).observe(obsDb,
             count(lit(1)).as("size"),
             count(when(col("status") === CrawlStatus.DB_UNFETCHED, 1)).as("unfetched")), round)
       }

@@ -17,10 +17,11 @@ package object ops {
   /** Free what `ds` materializes. A (local) checkpoint's blocks belong to the
     * RDD behind its `LogicalRDD` leaf — `Dataset.unpersist()` does not free
     * them — so that RDD is unpersisted; a persisted plan leaves CacheManager.
-    * Spark warns once per released local checkpoint that it "cannot be
-    * recomputed after unpersisting": release only what nothing reads again. */
+    * A released checkpoint cannot be recomputed, so release only what
+    * nothing reads again; that is expected, so Spark's per-unpersist warning
+    * about it is not logged. */
   def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
-    case cp: LogicalRDD => cp.rdd.unpersist(blocking = false)
+    case cp: LogicalRDD => org.apache.spark.rdd.GraftCheckpoints.release(cp.rdd, blocking = false)
     case _ => ds.unpersist()
   }
 }

@@ -2,10 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.cli.CrawlRound
-import graft.fixtures.{SyntheticWeb, WebConfig}
-import graft.frontier.CrawlConfig
-
 /** Dev benchmark (guide §1.4 isolation — the frozen graft.Bench is the
   * driver's artifact; THIS main is the builder's measuring instrument):
   *
@@ -21,40 +17,17 @@ import graft.frontier.CrawlConfig
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
     val passes = sys.env.get("GRAFT_BENCHX_PASSES").map(_.toInt).getOrElse(3)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val localDir =
-      if (java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft-benchx-local").toString
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Harness.session(cpus)
 
     if (sys.env.contains("GRAFT_BENCHX_CRAWL")) { crawlBreakdown(spark, cpus); spark.stop(); return }
 
     val names =
       if (args.nonEmpty) args.toSeq
       else graft.Bench.headline
-    val qmap = graft.SparkEntry.queries
-
-    def once(name: String): Double = {
-      spark.sparkContext.setJobDescription(s"benchx:$name")
-      val t0 = System.nanoTime()
-      try qmap(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable => System.err.println(s"[benchx] $name failed: ${e.getMessage}") }
-      spark.sparkContext.setJobDescription(null)
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(name: String): Double = Harness.timeQuery(spark, sfDir, name)
 
     // JIT + cache warm-up pass (not recorded)
     val warm = names.map(n => n -> once(n)).toMap
@@ -95,21 +68,10 @@ object BenchExtra {
             i.name.takeWhile(_ != 0x0a.toChar).take(100))
         }
       })
-    val web = SyntheticWeb(WebConfig(nHosts = 3000, pagesPerHost = 350, hotFactor = 25))
-    val cfg = CrawlConfig(topN = 800000, maxPerHost = 500,
-      numFetchPartitions = cpus, serverDelayMs = 5000, fetchLatencyMs = 50)
-    val root = java.nio.file.Files.createTempDirectory("graft-benchx").toString
-    val store = new graft.store.SnapshotStore(root)
-    val startTime = 1700000000000L
-    CrawlRound.inject(spark, store, web.urls(spark), cfg, startTime)
-    val fetcher = graft.fetch.SyntheticFetcher(web, cfg.fetchLatencyMs)
-    CrawlRound.run(spark, store, fetcher, cfg.copy(topN = 20000), round = 1, startTime)
-    store.resetTo("frontier", 0)
-    val warmBloom = store.loadBlob("seen_bloom")
+    val round = Harness.loadedRound(spark, graft.Bench.web, graft.Bench.crawlConfig(cpus),
+      java.nio.file.Files.createTempDirectory("graft-benchx").toString)
     (1 to 3).foreach { i =>
-      warmBloom.foreach(b => store.commitBlob("seen_bloom", b, 1, allowRewind = true))
-      val s = CrawlRound.run(spark, store, fetcher, cfg, round = 1, startTime)
-      store.resetTo("frontier", 0)
+      val s = round.replay()
       println(f"run$i wall=${s.wallMs / 1000.0}%.2fs fetched=${s.fetchedPages} " +
         s.stageMs.map { case (k, v) => f"$k=${v / 1000.0}%.2fs" }.mkString(" "))
     }

@@ -1,11 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.cli.CrawlRound
 import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.CrawlConfig
-import graft.store.SnapshotStore
 
 /** Scaling-efficiency evidence (BASELINE.md protocol): the same loaded crawl
   * round, same input snapshot, SAME physical plan (fixed partition counts),
@@ -46,38 +42,11 @@ object ScalingBench {
       // capacity saturates and forces a full rebuild inside every measured
       // round — operators size their filters for their corpus
       bloomExpectedItems = 1L << 24)
-    val fetcher = graft.fetch.SyntheticFetcher(web, cfg.fetchLatencyMs)
-    val startTime = 1700000000000L
-
-    val localDir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "spark-local")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", PARTITIONS)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-
-    val store = new SnapshotStore(root)
-    if (store.current("frontier").isEmpty) {
-      CrawlRound.inject(spark, store, web.urls(spark), cfg, startTime)
-    }
-    // JIT/codegen warmup (not measured), then reset to the shared snapshot
-    CrawlRound.run(spark, store, fetcher, cfg.copy(topN = 20000), round = 1, startTime)
-    store.resetTo("frontier", 0)
-    // every replay starts from the warm-up bloom, committed after the reset
-    // frontier: identical state per replay, and no bloom reconcile pass
-    // inside a measured round
-    val warmBloom = store.loadBlob("seen_bloom")
-
+    val spark = Harness.session(cpus, PARTITIONS)
+    // the store is reused across invocations: inject only into an empty one
+    val round = Harness.loadedRound(spark, web, cfg, root)
     for (_ <- 1 to repeats) {
-      warmBloom.foreach(b => store.commitBlob("seen_bloom", b, 1, allowRewind = true))
-      val stats = CrawlRound.run(spark, store, fetcher, cfg, round = 1, startTime)
-      store.resetTo("frontier", 0)
+      val stats = round.replay()
       val ups = stats.fetchedPages / (stats.wallMs / 1000.0)
       println(f"RUN cpus=$cpus%2d fetched=${stats.fetchedPages} roundSec=${stats.wallMs / 1000.0}%8.2f " +
         f"urlsPerSec=$ups%9.1f " +

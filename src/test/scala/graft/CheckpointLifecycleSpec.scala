@@ -4,6 +4,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
@@ -20,7 +24,8 @@ import graft.ops.DedupOps
 /** Materialization lifecycle: the iterative loops and the crawl round leave
   * nothing persisted beyond what they return, and the round's frontier
   * commit plans from the merged frontier's checkpoint (a `LogicalRDD`
-  * leaf), not from the generate → fetch → parse → merge lineage. */
+  * leaf), not from the generate → fetch → parse → merge lineage. Releasing
+  * a checkpoint is expected, so it logs no "locally checkpointed" warning. */
 class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -66,7 +71,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     val cfg = CrawlConfig(topN = 200, maxPerHost = 40, numFetchPartitions = 2,
       serverDelayMs = 100, fetchLatencyMs = 2)
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    // round 1 builds the seen bloom; rounds 2 and 3 run the steady-state path
+    // round 1 builds the seen bloom; round 2 runs the steady-state path
     val (store, _) = CrawlRound.syntheticCrawl(spark, web, cfg, rounds = 1, root)
     val fetcher = SyntheticFetcher(web, cfg.fetchLatencyMs)
     val day = 24L * 3600 * 1000
@@ -81,34 +86,45 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
         }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val logged = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("round-log", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val rootLogger = LogManager.getRootLogger.asInstanceOf[Logger]
     val before = persisted
     val plansBefore = cachedPlans
     spark.listenerManager.register(listener)
+    rootLogger.addAppender(appender)
     try {
       CrawlRound.run(spark, store, fetcher, cfg, 2, 1700000000000L + day)
-      CrawlRound.run(spark, store, fetcher, cfg, 3, 1700000000000L + 2 * day, dedupEachRound = false)
-      // an archive import runs the same round tail (round 4)
+      // an archive import runs the same round tail (round 3)
       val page = s"""<html><body>archived <a href="${web.pageUrl(1, 4)}">next</a></body></html>"""
       val arc = s"${web.pageUrl(1, 3)} 10.0.0.1 20231114221320 text/html ${page.length}\n$page\n\n"
       Crawl(spark, root, cfg, fetcher).importArc(Seq(arc).toDS())
       val deadline = System.nanoTime() + 30000000000L // listener events arrive asynchronously
-      while (commits.size < 3 && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
+      while (commits.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      rootLogger.removeAppender(appender)
+      appender.stop()
+      spark.listenerManager.unregister(listener)
+    }
 
     assert(persisted -- before == Set.empty, "the rounds left RDDs persisted")
     assert(cachedPlans == plansBefore, "the rounds left plans in CacheManager")
-    val Seq(withDedup, plain, imported) = commits.asScala.toSeq
+    val releaseWarnings = logged.asScala.filter(_.contains("locally checkpointed"))
+    assert(releaseWarnings.isEmpty, releaseWarnings.mkString("\n"))
+    val Seq(fetched, imported) = commits.asScala.toSeq
     // every leaf is the merged frontier's checkpoint: nothing re-reads the
     // snapshot or re-plans generate → fetch → parse → merge
-    for (p <- Seq(withDedup, plain, imported)) {
+    for (p <- Seq(fetched, imported)) {
       val leaves = leafRdds(p)
       assert(leaves.forall(_.isDefined) && leaves.distinct.size == 1,
         s"frontier commit leaves: ${p.collectLeaves().map(_.nodeName)}")
     }
     // the merge's joins sit below the checkpoint: only dedup's keep-best
-    // join is left, and none without dedup
-    assert(withDedup.collect { case j: Join => j }.size == 1)
+    // join is left
+    assert(fetched.collect { case j: Join => j }.size == 1)
     assert(imported.collect { case j: Join => j }.size == 1)
-    assert(plain.collect { case j: Join => j }.isEmpty)
   }
 }

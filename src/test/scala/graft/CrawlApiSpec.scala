@@ -138,4 +138,10 @@ class CrawlApiSpec extends AnyFunSuite with SparkSpecBase {
     val salt = HostDb.hotHostSalt(stats, hotThreshold = 1000, perPartitionTarget = 1000)
     assert(salt == Map("hot.fix.test" -> 5))
   }
+
+  test("SparkEntry.entry crawls the fixture web into url, host, status, score rows") {
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq == Seq("url", "host", "status", "score"))
+    assert(df.count() > 0)
+  }
 }
