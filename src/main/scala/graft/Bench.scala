@@ -47,8 +47,8 @@ object Bench {
 
   /** The loaded round: the whole synthetic web (~1M URLs) injected, one
     * fully loaded topN=800k round, so the measured round is compute-bound,
-    * not job-overhead-bound. GRAFT_SEEN_SHARDS>1 measures the sharded
-    * URL-seen path (one-shard re-broadcast per round). */
+    * not job-overhead-bound. GRAFT_SEEN_SHARDS=k sets the URL-seen set's
+    * shard count (default 1; at k > 1 a round re-broadcasts one shard). */
   val web = SyntheticWeb(WebConfig(nHosts = 3000, pagesPerHost = 350, hotFactor = 25))
   def crawlConfig(cpus: Int): CrawlConfig = CrawlConfig(topN = 800000, maxPerHost = 500,
     numFetchPartitions = cpus, serverDelayMs = 5000, fetchLatencyMs = 50,

@@ -73,13 +73,11 @@ object CrawlRound {
     * release of every held frame.
     *
     * The URL-seen bloom invariant — the committed filter covers every
-    * frontier `url_hash` — lives in the tail alone. Its load step (session
-    * cache → blob → build from the frontier) merges the frontier's
-    * bloom-missing hashes in once when the blob was committed before the
-    * frontier snapshot, i.e. when inject, the sitemap stage, a maintenance
-    * tool or a `resetTo` wrote the frontier since. Those writers know
-    * nothing of the bloom; without the reconcile the merge would take their
-    * URLs, rediscovered as outlinks, for new ones and insert duplicate rows.
+    * frontier `url_hash` — is [[graft.seen.UrlSeen]]'s alone: the tail opens
+    * the round's set before the merge (`UrlSeen.open`: session cache, blob
+    * or build, plus any frontier hashes written since the blob) and
+    * advances it after the frontier commit (`UrlSeen.advance`: delta merge,
+    * blob commit, broadcast swap).
     *
     * Materialization: the round computes three frames once each and cuts
     * their lineage there with `localCheckpoint` — the fetched `pages`, the
@@ -237,7 +235,6 @@ object CrawlRound {
     import graft.seen.UrlSeen
 
     private val t0 = System.nanoTime()
-    private val frontierSnap = store.current("frontier")
     val prevHostStats: Option[Dataset[HostStats]] =
       if (cfg.updateHostDb) store.loadAs[HostStats](spark, "host_stats") else None
 
@@ -299,35 +296,9 @@ object CrawlRound {
       }
       val parsedCount = obsParse.get("parsed").asInstanceOf[Long]
 
-      // --- URL-seen bloom (north rule): reuse the session-cached broadcast
-      //     when it matches the committed blob (sequential rounds pay the
-      //     delta merge, never a full blob reload + re-broadcast — O(bloom)
-      //     per round otherwise, ~1.2 GB at 10^9 URLs); else load the blob;
-      //     build-once from the frontier if absent (first round / migration).
-      //     Saturated filters rebuild from the frontier at 2× capacity. A
-      //     blob older than the frontier is reconciled first (see run). ---
-      var seenFromCache = false
-      val seen: Option[UrlSeen.SeenSet] =
-        if (!cfg.useSeenBloom) None
-        else {
-          val snap = store.current("seen_bloom")
-          val cached = snap.flatMap(s => UrlSeen.cachedFor(store.root, s.path, s.committedAtMs))
-          seenFromCache = cached.isDefined
-          val loaded = cached.orElse(store.loadBlob("seen_bloom").map(UrlSeen.fromBytes(spark, _)))
-          loaded match {
-            case Some(sf) if !sf.saturated =>
-              val stale = snap.exists(b => frontierSnap.exists(_.committedAtMs > b.committedAtMs))
-              Some(if (stale) reconcile(sf, snap.get, seenFromCache) else sf)
-            case other =>
-              seenFromCache = false
-              val cap = other match {
-                case Some(sf) => math.max(cfg.bloomExpectedItems, sf.approxInserted * 2)
-                case None => cfg.bloomExpectedItems
-              }
-              Some(UrlSeen.build(frontier.toDF().select(col("url_hash")), cap, cfg.bloomFpp,
-                shards = cfg.seenBloomShards))
-          }
-        }
+      // --- URL-seen bloom (north rule): the round's set, opened from the
+      //     session cache, the blob or the frontier ---
+      val seen = UrlSeen.open(spark, store, cfg, frontier.toDF())
 
       // urlmeta: tagged parents only (tags start from seeds, so this subset
       // is tiny relative to the frontier — a narrow filter off the existing
@@ -390,33 +361,12 @@ object CrawlRound {
       val frontierSize = obsDb.get("size").asInstanceOf[Long]
       val unfetched = obsDb.get("unfetched").asInstanceOf[Long]
 
-      // --- URL-seen bloom maintenance: the delta is exactly the merged
-      //     frontier's bloom-missing hashes — a filter over the CHECKPOINTED
-      //     new frontier (zero rows in a steady-state round), then a tiny
-      //     bloom aggregation + blob swap. No link re-canonicalization, no
-      //     committed-parquet re-read. ---
-      seen.foreach { sf =>
-        timed("seen_bloom") {
-          val newHashes = newFrontier.toDF()
-            .filter(!UrlSeen.mightContainCol(spark, sf, col("url_hash")))
-            .select(col("url_hash"))
-          val merged = UrlSeen.merged(spark, sf, newHashes, 0L)
-            .withApproxInserted(math.max(sf.approxInserted, frontierSize))
-          // allowRewind: after an explicit frontier resetTo the replayed rounds
-          // re-commit the blob at lower rounds; the bloom is a monotone
-          // superset, so a rewound pointer is still correct
-          val snap = store.commitBlob("seen_bloom", UrlSeen.toBytes(merged), round,
-            allowRewind = true)
-          // broadcast lifecycle: the blob is the durable copy; the MERGED set
-          // becomes the session cache entry (next round reuses it when the
-          // blob identity matches — no reload, no re-broadcast) and every
-          // superseded broadcast not shared with the successor is destroyed
-          // (a sharded merge replaces ONE shard; the other k-1 are shared), so
-          // a crawl session holds at most one live set per store
-          UrlSeen.cacheFor(store.root, snap.path, snap.committedAtMs, merged)
-          if (!seenFromCache) UrlSeen.destroyDiff(sf, merged)
-        }
-      }
+      // --- URL-seen bloom maintenance: the delta is a filter over the
+      //     CHECKPOINTED merged frontier (zero rows in a steady-state round),
+      //     then a tiny bloom aggregation + blob swap ---
+      seen.foreach(s => timed("seen_bloom") {
+        UrlSeen.advance(spark, store, s, newFrontier.toDF(), frontierSize, round)
+      })
 
       // --- optional per-round side tables ---
       if (cfg.updateHostDb) timed("hostdb") {
@@ -459,20 +409,6 @@ object CrawlRound {
 
       RoundStats(round, generated, fetchedPages, parsedCount, frontierSize, unfetched,
         (System.nanoTime() - t0) / 1000000, virtualMsMax, stageMs.toMap)
-    }
-
-    /** `sf` with the start frontier's bloom-missing hashes merged in (the
-      * bloom invariant after an out-of-band frontier write). The merged set
-      * takes `sf`'s place: as the session-cache entry for the same blob
-      * (displacing `sf`), or as the round's own loaded set. */
-    private def reconcile(sf: UrlSeen.SeenSet, blob: graft.store.Snapshot,
-                          fromCache: Boolean): UrlSeen.SeenSet = {
-      val missing = frontier.toDF().select(col("url_hash"))
-        .filter(!UrlSeen.mightContainCol(spark, sf, col("url_hash")))
-      val merged = UrlSeen.merged(spark, sf, missing, 0L)
-      if (fromCache) UrlSeen.cacheFor(store.root, blob.path, blob.committedAtMs, merged)
-      else UrlSeen.destroyDiff(sf, merged)
-      merged
     }
   }
 

@@ -15,7 +15,6 @@ case class CrawlConfig(
     injectedScore: Float = 1.0f,                 // db.score.injected
     scoreInternalFactor: Float = 1.0f,           // db.score.link.internal
     scoreExternalFactor: Float = 1.0f,           // db.score.link.external
-    adaptiveSchedule: Boolean = false,           // shorthand for schedule="adaptive"
     schedule: String = "default",                // "default" | "adaptive" | "mime" | "cc"
     adaptiveIncRate: Float = 0.4f,               // db.fetch.schedule.adaptive.inc_rate
     adaptiveDecRate: Float = 0.2f,               // db.fetch.schedule.adaptive.dec_rate

@@ -18,13 +18,11 @@ import graft.schema.{CrawlStatus, FrontierEntry}
   */
 object Dedup {
 
-  def markDuplicates(frontier: Dataset[FrontierEntry], byDomain: Boolean = false): Dataset[FrontierEntry] = {
+  def markDuplicates(frontier: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
 
     val fetched = col("status") === CrawlStatus.DB_FETCHED || col("status") === CrawlStatus.DB_NOTMODIFIED
-    val keyCols: Seq[org.apache.spark.sql.Column] =
-      if (byDomain) Seq(col("sig_hex"), col("domain")) else Seq(col("sig_hex"))
 
     // Skew-safe keep-best: NOT a window. Real crawls have mega-duplicate
     // groups (boilerplate pages share one signature); a window would sort
@@ -34,6 +32,8 @@ object Dedup {
     // shorter url, url asc) is encoded as an orderable struct for min_by.
     val isCandidate = fetched && col("signature").isNotNull
     val candidates = frontier.toDF().filter(isCandidate)
+      // the hex key fixes the merged frontier's partitioning, and generate
+      // breaks score ties in scan order: a new key changes later fetch lists
       .withColumn("sig_hex", hex(col("signature")))
     val rest = frontier.toDF().filter(!isCandidate)
 
@@ -44,15 +44,14 @@ object Dedup {
       length(col("url")).as("url_len"),
       col("url").as("url"))
     val best = candidates
-      .groupBy(keyCols: _*)
+      .groupBy(col("sig_hex"))
       .agg(min_by(col("url"), orderKey).as("_keep_url"))
 
-    val joinKeys = if (byDomain) Seq("sig_hex", "domain") else Seq("sig_hex")
     val marked = candidates
       // deliberate join strategy (guide §3.1): best has ONE row per
       // signature group — hash it per partition instead of sorting both
       // full-width sides through a sort-merge join
-      .join(best.hint("shuffle_hash"), joinKeys)
+      .join(best.hint("shuffle_hash"), Seq("sig_hex"))
       .withColumn("status",
         when(col("url") =!= col("_keep_url"), lit(CrawlStatus.DB_DUPLICATE)).otherwise(col("status")))
       .drop("_keep_url", "sig_hex")

@@ -109,13 +109,7 @@ case class CCFetchSchedule(cfg: CrawlConfig) extends FetchSchedule {
 }
 
 object FetchSchedule {
-  /** Resolved schedule name ("default"|"adaptive"|"mime"|"cc"). */
-  def nameFor(cfg: CrawlConfig): String =
-    if (cfg.schedule != "default") cfg.schedule
-    else if (cfg.adaptiveSchedule) "adaptive"
-    else "default"
-
-  def forConfig(cfg: CrawlConfig): FetchSchedule = nameFor(cfg) match {
+  def forConfig(cfg: CrawlConfig): FetchSchedule = cfg.schedule match {
     case "adaptive" => AdaptiveFetchSchedule(cfg)
     case "mime"     => MimeAdaptiveFetchSchedule(cfg)
     case "cc"       => CCFetchSchedule(cfg)

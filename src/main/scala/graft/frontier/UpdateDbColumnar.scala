@@ -196,13 +196,12 @@ object UpdateDbColumnar {
 
     // schedule arithmetic (Default / Adaptive / MimeAdaptive / CC per cfg),
     // same column-expression twin discipline as the rest of this file
-    val schedName = FetchSchedule.nameFor(cfg)
-    val schedInterval: Column = schedName match {
+    val schedInterval: Column = cfg.schedule match {
       case "default" => bInterval
       case "cc" => least(bInterval, lit(cfg.fetchIntervalMax)) // reset-to-max, no refetch churn
       case _ => // adaptive | mime: per-mime rates fall back to the adaptive defaults
         val (incC, decC): (Column, Column) =
-          if (schedName == "mime" && cfg.mimeScheduleRates.nonEmpty) {
+          if (cfg.schedule == "mime" && cfg.mimeScheduleRates.nonEmpty) {
             // merged old∪fetch metadata (fetch wins), like the typed path's
             // mergedMeta — a redirect row without a Content-Type falls back
             // to the mime recorded by an earlier successful fetch
@@ -220,13 +219,13 @@ object UpdateDbColumnar {
     }
     val schedTimeRaw = col("f_time") + schedInterval.cast("long") * 1000L
     val schedTime =
-      if (schedName == "cc" && cfg.ccMaxDaysAhead > 0)
+      if (cfg.schedule == "cc" && cfg.ccMaxDaysAhead > 0)
         least(schedTimeRaw, col("f_time") + lit(cfg.ccMaxDaysAhead * 24L * 3600 * 1000))
       else schedTimeRaw
 
     // retry / gone schedules (CC pre-clamps the interval to max, like the
     // typed CCFetchSchedule overrides)
-    val bIntervalRG = if (schedName == "cc") least(bInterval, lit(cfg.fetchIntervalMax)) else bInterval
+    val bIntervalRG = if (cfg.schedule == "cc") least(bInterval, lit(cfg.fetchIntervalMax)) else bInterval
     val retryRetries = bRetries + 1
     val goneInterval = least(bIntervalRG.cast("float") * 1.5f, lit(cfg.fetchIntervalMax * 0.9f))
       .cast("int")

@@ -126,8 +126,8 @@ case class TextFingerprint64(child: Expression) extends UnaryExpression {
 
 /** Codegen'd bloom-membership probe over the broadcast URL-seen filter —
   * closes the last per-row UDF boundary on the update-sized hot paths
-  * (UpdateDbColumnar link split, CrawlRound bloom delta, UrlSeen
-  * filterUnseen). The broadcast handle is attached to the generated class
+  * (UpdateDbColumnar link split, the round's bloom delta and stale-blob
+  * reconcile in UrlSeen). The broadcast handle is attached to the generated class
   * as a reference object; each row costs one virtual call into the sketch,
   * inside whole-stage codegen. */
 case class BloomMightContainLong(

@@ -136,19 +136,33 @@ object SimilarityOps {
     * no measurable effect on assignment quality. */
   private def quantize(m: Double): Double = math.floor(m * 1e6) / 1e6
 
-  /** IVF index build: deterministic seeding (lowest hash picks the initial
-    * centroids) + a few Lloyd iterations, centroids recomputed distributed
-    * (posexplode + per-dimension mean, quantized — see [[quantize]]) and
-    * collected (k × dim doubles — driver-tiny). Returns (assigned vectors,
-    * centroids). */
-  def ivfIndex(emb: DataFrame, nCentroids: Int, iterations: Int = 3, seed: Long = 42L
-              ): (DataFrame, Seq[Array[Double]]) = {
+  /** A built IVF index: cell-assigned vectors (a table — build once, probe
+    * many) plus the k×dim centroid matrix (driver-tiny). Persist with
+    * [[saveIvfIndex]] / [[loadIvfIndex]] so repeated queries never re-run
+    * k-means; at corpus scale `assigned` is THE index table. A built index
+    * holds its cached build input until [[release]]; a loaded one holds
+    * nothing. */
+  final case class IvfIndex(assigned: DataFrame, centroids: Seq[Array[Double]],
+                            private val input: Option[DataFrame] = None) {
+    /** Free the cached build input. `assigned` stays readable: it then
+      * recomputes its cells from the source. */
+    def release(): Unit = input.foreach(_.unpersist())
+  }
+
+  /** IVF index build (k-means runs HERE, once): deterministic seeding
+    * (lowest hash picks the initial centroids) + a few Lloyd iterations,
+    * centroids recomputed distributed (posexplode + per-dimension mean,
+    * quantized — see [[quantize]]) and collected (k × dim doubles —
+    * driver-tiny). */
+  def buildIvfIndex(emb: DataFrame, nCentroids: Int = 16, iterations: Int = 3,
+                    seed: Long = 42L): IvfIndex = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     // the build makes iterations+2 passes over the corpus (seed pick, Lloyd
     // assignments, final assignment); persist so every pass after the first
     // reads cached columnar batches instead of re-scanning the source —
     // values are unchanged (same rows, same arithmetic), only the scan cost
-    // amortizes. Spill-tolerant; build-once/probe-many callers keep it warm.
+    // amortizes. Spill-tolerant; the index holds it until release().
+    val owned = emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val embP = persistSpillable(emb)
     val init = embP
       .withColumn("_h", xxhash64(col("vec_id"), lit(seed)))
@@ -178,20 +192,7 @@ object SimilarityOps {
       }
       i += 1
     }
-    (withCell(embP, centroids), centroids)
-  }
-
-  /** A built IVF index: cell-assigned vectors (a table — build once, probe
-    * many) plus the k×dim centroid matrix (driver-tiny). Persist with
-    * [[saveIvfIndex]] / [[loadIvfIndex]] so repeated queries never re-run
-    * k-means; at corpus scale `assigned` is THE index table. */
-  final case class IvfIndex(assigned: DataFrame, centroids: Seq[Array[Double]])
-
-  /** Build the IVF index as persistable tables (k-means runs HERE, once). */
-  def buildIvfIndex(emb: DataFrame, nCentroids: Int = 16, iterations: Int = 3,
-                    seed: Long = 42L): IvfIndex = {
-    val (assigned, centroids) = ivfIndex(emb, nCentroids, iterations, seed)
-    IvfIndex(assigned, centroids)
+    IvfIndex(withCell(embP, centroids), centroids, if (owned) Some(embP) else None)
   }
 
   /** Persist the index: assignments + centroid matrix as parquet tables. */
@@ -242,12 +243,16 @@ object SimilarityOps {
       .filter(col("rnk") <= k)
   }
 
-  /** IVF ANN top-k, one-shot convenience: build + probe. Repeated queries
-    * should build the index once ([[buildIvfIndex]]/[[saveIvfIndex]]) and
-    * call [[ivfProbe]] instead. */
+  /** IVF ANN top-k, one-shot convenience: build + probe. The build's cache
+    * is released before the probe, which is one query over the source.
+    * Repeated queries should build the index once
+    * ([[buildIvfIndex]]/[[saveIvfIndex]]) and call [[ivfProbe]] instead. */
   def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame =
-    ivfProbe(buildIvfIndex(emb, nCentroids, seed = seed), queryIds, k, nProbe)
+              nCentroids: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
+    val index = buildIvfIndex(emb, nCentroids, seed = seed)
+    index.release()
+    ivfProbe(index, queryIds, k, nProbe)
+  }
 
   /** ANN top-k: LSH-bucketed candidates re-ranked exactly. Queries see only
     * their own bucket (plus its hamming-1 neighbors for recall). */

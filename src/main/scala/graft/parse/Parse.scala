@@ -310,7 +310,7 @@ object Parse {
   def fetchUpdates(pages: Dataset[FetchedPage], cfg: CrawlConfig = CrawlConfig()): Dataset[FrontierUpdate] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val wantMime = graft.frontier.FetchSchedule.nameFor(cfg) == "mime"
+    val wantMime = cfg.schedule == "mime"
     val keys = cfg.parseMetaToCrawlDb
     val depthOn = cfg.scoringDepthMax > 0
     val pstOn = cfg.protocolStatusToCrawlDb

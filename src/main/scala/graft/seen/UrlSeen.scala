@@ -4,8 +4,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.frontier.CrawlConfig
+import graft.store.TableStore
 
 /** URL-seen set (north rule: broadcast-merged bloom filter over
   * canonicalized-URL 64-bit hashes).
@@ -19,80 +24,44 @@ import org.apache.spark.util.sketch.BloomFilter
   *  - mightContain == true   ⇒ maybe seen → exact resolution against the
   *    frontier for just that (fpp-bounded) slice.
   *
-  * Lifecycle in the round loop (see CrawlRound): built once from the
-  * frontier by the first round, persisted as a SnapshotStore blob, loaded +
-  * broadcast each round, and MERGED (bitwise OR of equal-shaped filters)
-  * with a per-round bloom built over the merged frontier's bloom-missing
-  * hashes (a filter over the round's checkpoint, not a rebuild). A round
-  * whose frontier was committed after the blob (inject, sitemaps,
-  * maintenance tools) first merges that frontier's missing hashes in the
-  * same way. The filter is a SUPERSET of all URLs ever
-  * seen (purged rows stay in), which is exactly the URL-seen semantics; a
-  * false positive or a stale superset entry only routes a row through the
-  * exact join path, never drops it.
+  * ONE REPRESENTATION: a [[SeenSet]] is k ≥ 1 equal-shape shards, each its
+  * own broadcast (`seenBloomShards`, default 1). One shard is the classic
+  * single filter: `BloomFilter.create(expectedItems, fpp)` parameters, so the
+  * same bits as `df.stat.bloomFilter`, ~1.2 GB at 10^9 items / 1% fpp, and
+  * every round's delta merge re-broadcasts all of it. With k shards (the
+  * 10^10 path) the build spreads the corpus by hash prefix (pmod(url_hash,
+  * k)) into balanced shards of expectedItems/k at fpp/k, so the OR'd
+  * false-positive rate stays at the configured budget; each round's delta
+  * merges into the LEAST-LOADED shard only, so a steady-state round
+  * re-broadcasts ~1/k of the filter bytes and reuses the other k-1
+  * broadcasts. Membership is the OR over shards (a codegen'd Or chain — a
+  * single probe at k = 1), so placement never affects correctness.
+  * Saturation (every shard past its capacity) degrades fpp, not
+  * correctness; [[open]] rebuilds from the frontier at 2× capacity.
   *
-  * TWO REPRESENTATIONS behind one [[SeenSet]] seam:
-  *
-  *  - [[SeenFilter]] — one filter, one broadcast. `df.stat.bloomFilter`
-  *    aggregates per-partition filters and merges on the driver — ~1.2 GB
-  *    bits at 10^9 items / 1% fpp. Every round's delta merge re-broadcasts
-  *    the WHOLE filter: O(bloom) network per round.
-  *  - [[ShardedSeenFilter]] — the 10^10 path: k equal-shape shards, each
-  *    its OWN broadcast. The initial build spreads the corpus by hash
-  *    prefix (balanced shards); each round's delta merges into the
-  *    LEAST-LOADED shard only, so a steady-state round re-broadcasts
-  *    exactly ONE shard ≈ 1/k of the filter bytes — the other k-1
-  *    broadcasts are reused as-is from the session cache. Membership is
-  *    the OR over shards (codegen'd Or chain), so placement never affects
-  *    correctness; per-shard fpp is fpp/k to keep the OR'd false-positive
-  *    rate at the configured budget. Saturation (every shard past its
-  *    capacity) degrades fpp, not correctness; the round loop rebuilds
-  *    from the frontier at 2× capacity when it trips.
+  * Lifecycle in the round loop: [[open]] before the updatedb merge, and
+  * [[advance]] after the merged frontier is committed. The set is built once
+  * from the frontier by the first round, persisted as a SnapshotStore blob,
+  * reused from the session cache (or loaded) each round, and MERGED
+  * (bitwise OR of equal-shaped filters) with a per-round bloom over the
+  * merged frontier's bloom-missing hashes (a filter over the round's
+  * checkpoint, not a rebuild). A round whose frontier was committed after
+  * the blob (inject, sitemaps, maintenance tools, `resetTo`) first merges
+  * that frontier's missing hashes in the same way. The filter is a SUPERSET
+  * of all URLs ever seen (purged rows stay in), which is exactly the
+  * URL-seen semantics; a false positive or a stale superset entry only
+  * routes a row through the exact join path, never drops it.
   */
 object UrlSeen {
 
-  /** The URL-seen seam the engine codes against: closure-side membership,
-    * saturation state, and broadcast inventory (for lifecycle diffing). */
-  sealed trait SeenSet extends Serializable {
-    def mightContain(h: Long): Boolean
-    def saturated: Boolean
-    def approxInserted: Long
-    /** Every broadcast this set holds (lifecycle: destroyDiff). */
-    def broadcasts: Seq[Broadcast[BloomFilter]]
-    /** Registry name for the codegen'd probe (unique per broadcast set). */
-    private[seen] def probeName: String
-    /** Probe expression over a child column. */
-    private[seen] def probeExpr(
-        child: org.apache.spark.sql.catalyst.expressions.Expression
-    ): org.apache.spark.sql.catalyst.expressions.Expression
-    /** Reset the total inserted estimate (monotone bookkeeping after the
-      * frontier count is observed). */
-    def withApproxInserted(n: Long): SeenSet
-  }
+  /** One shard: its broadcast filter and an estimate of the hashes in it. */
+  final case class Shard(bloom: Broadcast[BloomFilter], approxInserted: Long)
 
-  case class SeenFilter(bloom: Broadcast[BloomFilter], expectedItems: Long,
-                        fpp: Double, approxInserted: Long) extends SeenSet {
-    override def mightContain(h: Long): Boolean = bloom.value.mightContainLong(h)
-    override def saturated: Boolean = approxInserted > expectedItems
-    override def broadcasts: Seq[Broadcast[BloomFilter]] = Seq(bloom)
-    override private[seen] def probeName: String = s"graft_seen_mc_${bloom.id}"
-    override private[seen] def probeExpr(
-        child: org.apache.spark.sql.catalyst.expressions.Expression) =
-      graft.functions.BloomMightContainLong(child, bloom)
-    override def withApproxInserted(n: Long): SeenSet = copy(approxInserted = n)
-    /** Release the broadcast's executor + driver storage AND the filter's
-      * temp-function registration. Prefer [[UrlSeen.destroyDiff]] when a
-      * successor set may share broadcasts. */
-    def destroy(): Unit = {
-      UrlSeen.dropRegistration(probeName)
-      bloom.destroy()
-    }
-  }
-
-  /** k equal-shape shards; delta merges touch exactly one shard. */
-  case class ShardedSeenFilter(shards: IndexedSeq[SeenFilter],
-                               perShardCap: Long, shardFpp: Double) extends SeenSet {
-    override def mightContain(h: Long): Boolean = {
+  /** The URL-seen set the engine codes against: closure-side membership,
+    * saturation state and broadcast inventory (for lifecycle diffing).
+    * Every shard is sized `perShardCap` items at `shardFpp`. */
+  final case class SeenSet(shards: IndexedSeq[Shard], perShardCap: Long, shardFpp: Double) {
+    def mightContain(h: Long): Boolean = {
       var i = 0
       while (i < shards.length) {
         if (shards(i).bloom.value.mightContainLong(h)) return true
@@ -100,105 +69,77 @@ object UrlSeen {
       }
       false
     }
-    override def approxInserted: Long = shards.map(_.approxInserted).sum
+    def approxInserted: Long = shards.map(_.approxInserted).sum
     /** Saturated only when EVERY shard is past capacity (the delta always
       * targets the least-loaded shard, so the min is the binding one). */
-    override def saturated: Boolean = shards.map(_.approxInserted).min > perShardCap
-    override def broadcasts: Seq[Broadcast[BloomFilter]] = shards.map(_.bloom)
-    override private[seen] def probeName: String =
-      s"graft_seen_mc_${shards.map(_.bloom.id).mkString("_")}"
-    override private[seen] def probeExpr(
-        child: org.apache.spark.sql.catalyst.expressions.Expression) =
-      shards.map(s => graft.functions.BloomMightContainLong(child, s.bloom)
-        : org.apache.spark.sql.catalyst.expressions.Expression)
-        .reduceLeft(org.apache.spark.sql.catalyst.expressions.Or(_, _))
-    override def withApproxInserted(n: Long): SeenSet = {
-      // the corpus is hash-spread at build time, so pin the total as an even
-      // per-shard estimate (monotone: never lower a shard's own count)
+    def saturated: Boolean = shards.map(_.approxInserted).min > perShardCap
+    /** Every broadcast this set holds (lifecycle: destroyDiff). */
+    def broadcasts: Seq[Broadcast[BloomFilter]] = shards.map(_.bloom)
+    /** Reset the total inserted estimate once the frontier count is known.
+      * The corpus is hash-spread at build time, so the total pins an even
+      * per-shard estimate (monotone: never lowers a shard's own count). */
+    def withApproxInserted(n: Long): SeenSet = {
       val per = n / shards.length
       copy(shards = shards.map(s => s.copy(approxInserted = math.max(s.approxInserted, per))))
     }
-    private[seen] def minIdx: Int = {
-      var mi = 0; var i = 1
-      while (i < shards.length) {
-        if (shards(i).approxInserted < shards(mi).approxInserted) mi = i
-        i += 1
-      }
-      mi
-    }
+    /** Registry name for the codegen'd probe (unique per broadcast set). */
+    private[seen] def probeName: String = s"graft_seen_mc_${shards.map(_.bloom.id).mkString("_")}"
+    private[seen] def probeExpr(child: Expression): Expression =
+      shards.map(s => graft.functions.BloomMightContainLong(child, s.bloom): Expression)
+        .reduceLeft(Or(_, _))
+    /** The shard a delta merges into. */
+    private[seen] def leastLoaded: Int = shards.indices.minBy(shards(_).approxInserted)
   }
 
-  /** Build + broadcast the bloom over a url_hash column. `shards` > 1
-    * builds the sharded representation: the corpus is spread by hash prefix
-    * (pmod(url_hash, k)) into k balanced equal-shape shards, each sized
-    * expectedItems/k at fpp/k. The k-pass build over the 8-byte hash
-    * projection runs once per crawl (and on saturation rebuilds) — the
-    * per-round path never rebuilds. */
+  /** A filter over `df`'s url_hash column, or None when `df` has no rows
+    * (`stat.bloomFilter` NPEs on zero rows). */
+  private def bloomOf(df: DataFrame, items: Long, fpp: Double): Option[BloomFilter] =
+    if (df.isEmpty) None else Some(df.stat.bloomFilter("url_hash", items, fpp))
+
+  /** Build + broadcast the set over a url_hash column: `shards` equal-shape
+    * shards, the corpus spread by pmod(url_hash, shards), each sized
+    * expectedItems/shards at fpp/shards (empty shards start blank). The
+    * build runs once per crawl (and on saturation rebuilds) — the per-round
+    * path never rebuilds. */
   def build(frontier: DataFrame, expectedItems: Long, fpp: Double,
             approxInserted: Long = -1L, shards: Int = 1): SeenSet = {
-    val spark = frontier.sparkSession
-    if (shards <= 1) {
-      // stat.bloomFilter NPEs on zero rows: an empty frontier starts blank
-      val bf =
-        if (frontier.isEmpty) BloomFilter.create(expectedItems, fpp)
-        else frontier.stat.bloomFilter("url_hash", expectedItems, fpp)
-      val n = if (approxInserted >= 0) approxInserted else 0L
-      SeenFilter(spark.sparkContext.broadcast(bf), expectedItems, fpp, n)
-    } else {
-      val perShardCap = math.max(1L, (expectedItems + shards - 1) / shards)
-      val shardFpp = fpp / shards
-      val keys = frontier.select(col("url_hash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val total = if (approxInserted >= 0) approxInserted else 0L
-      val perShardN = total / shards
-      val built = (0 until shards).map { i =>
-        val slice = keys.filter(pmod(col("url_hash"), lit(shards.toLong)) === i)
-        // stat.bloomFilter NPEs on empty input: empty shards start blank
-        val bf =
-          if (slice.isEmpty) BloomFilter.create(perShardCap, shardFpp)
-          else slice.stat.bloomFilter("url_hash", perShardCap, shardFpp)
-        SeenFilter(spark.sparkContext.broadcast(bf), perShardCap, shardFpp, perShardN)
-      }
-      keys.unpersist()
-      ShardedSeenFilter(built.toIndexedSeq, perShardCap, shardFpp)
+    val k = math.max(1, shards)
+    val cap = math.max(1L, (expectedItems + k - 1) / k)
+    val shardFpp = fpp / k
+    // each shard reads the 8-byte projection once: cache it when several do
+    val keys = frontier.select(col("url_hash"))
+    if (k > 1) keys.persist(StorageLevel.MEMORY_AND_DISK)
+    val perShard = math.max(0L, approxInserted) / k
+    val built = (0 until k).map { i =>
+      val bf = bloomOf(keys.filter(pmod(col("url_hash"), lit(k.toLong)) === i), cap, shardFpp)
+        .getOrElse(BloomFilter.create(cap, shardFpp))
+      Shard(frontier.sparkSession.sparkContext.broadcast(bf), perShard)
     }
+    keys.unpersist()
+    SeenSet(built, cap, shardFpp)
   }
 
   /** Merge `updates` (url_hash column; the round's delta — update-sized,
-    * NOT frontier-sized) into the existing set. Returns a NEW set: the live
-    * broadcasts are never mutated (the delta filter absorbs the old bits),
-    * so any in-flight plan holding the old SeenSet keeps observing exactly
-    * the pre-merge bits. Sharded sets replace ONLY the least-loaded shard's
-    * broadcast — the other k-1 broadcasts are shared with the predecessor
-    * (destroyDiff protects them). The caller destroys the superseded set
-    * via [[destroyDiff]] once its last consumer has materialized. */
+    * NOT frontier-sized) into the least-loaded shard. Returns a NEW set:
+    * the live broadcasts are never mutated (the delta filter absorbs the
+    * old shard's bits), so any in-flight plan holding the old set keeps
+    * observing exactly the pre-merge bits; the other k-1 broadcasts are
+    * shared with the predecessor. Empty updates return `seen` itself. The
+    * caller destroys the superseded set via [[destroyDiff]] once its last
+    * consumer has materialized. */
   def merged(spark: SparkSession, seen: SeenSet, updates: DataFrame,
-             updateCount: Long): SeenSet = seen match {
-    case sf: SeenFilter =>
-      if (updates.isEmpty) sf // stat.bloomFilter NPEs on zero rows
-      else {
-        val add = updates.stat.bloomFilter("url_hash", sf.expectedItems, sf.fpp)
-        add.mergeInPlace(sf.bloom.value) // mutates only the round-local filter
-        SeenFilter(spark.sparkContext.broadcast(add), sf.expectedItems, sf.fpp,
-          sf.approxInserted + updateCount)
-      }
-    case sh: ShardedSeenFilter =>
-      if (updates.isEmpty) sh
-      else {
-        val idx = sh.minIdx
-        val active = sh.shards(idx)
-        val add = updates.stat.bloomFilter("url_hash", sh.perShardCap, sh.shardFpp)
-        add.mergeInPlace(active.bloom.value)
-        val fresh = SeenFilter(spark.sparkContext.broadcast(add), sh.perShardCap,
-          sh.shardFpp, active.approxInserted + updateCount)
-        sh.copy(shards = sh.shards.updated(idx, fresh))
-      }
-  }
+             updateCount: Long): SeenSet =
+    bloomOf(updates, seen.perShardCap, seen.shardFpp).fold(seen) { add =>
+      val i = seen.leastLoaded
+      val target = seen.shards(i)
+      add.mergeInPlace(target.bloom.value) // mutates only the round-local filter
+      seen.copy(shards = seen.shards.updated(i,
+        Shard(spark.sparkContext.broadcast(add), target.approxInserted + updateCount)))
+    }
 
   /** Destroy every broadcast (and the probe registration) of `old` that the
-    * `successor` does not share. THE lifecycle primitive: single filters
-    * destroy their one broadcast unless reused; sharded filters keep the
-    * k-1 shards the successor still holds. */
+    * `successor` does not share — THE lifecycle primitive: a merge keeps
+    * the k-1 shards the successor still holds. */
   def destroyDiff(old: SeenSet, successor: SeenSet): Unit = {
     if (old eq successor) return
     if (old.probeName != successor.probeName) dropRegistration(old.probeName)
@@ -206,6 +147,64 @@ object UrlSeen {
     old.broadcasts.foreach { b =>
       if (!keep.exists(_ eq b)) b.destroy()
     }
+  }
+
+  // ---- the round's lifecycle ----
+
+  /** The round's set, opened before its updatedb merge; None when the bloom
+    * is off. Session cache → blob → build from `frontier` (the round's
+    * start snapshot): the cached set when it matches the committed blob,
+    * else the blob decoded, else a fresh build. A saturated set is rebuilt
+    * from the frontier at 2× its inserted count. A blob committed before
+    * the frontier snapshot (inject, the sitemap stage, a maintenance tool
+    * or a `resetTo` wrote the frontier since; those writers know nothing of
+    * the bloom) first merges in the frontier's bloom-missing hashes —
+    * without that the merge would take their URLs, rediscovered as
+    * outlinks, for new ones and insert duplicate rows. The opened set
+    * becomes the store's cached set; every broadcast it replaced is
+    * destroyed. */
+  def open(spark: SparkSession, store: TableStore, cfg: CrawlConfig,
+           frontier: DataFrame): Option[SeenSet] =
+    if (!cfg.useSeenBloom) None
+    else {
+      val blob = store.current("seen_bloom")
+      val cached = blob.flatMap(b => cachedFor(store.root, b.path, b.committedAtMs))
+      val loaded = cached.orElse(store.loadBlob("seen_bloom").map(fromBytes(spark, _)))
+      val keys = frontier.select(col("url_hash"))
+      val set = loaded match {
+        case Some(s) if !s.saturated =>
+          val stale = blob.exists(b => store.current("frontier").exists(_.committedAtMs > b.committedAtMs))
+          if (stale) merged(spark, s, keys.filter(!mightContainCol(spark, s, col("url_hash"))), 0L)
+          else s
+        case other =>
+          val cap = other.fold(cfg.bloomExpectedItems)(s =>
+            math.max(cfg.bloomExpectedItems, s.approxInserted * 2))
+          build(keys, cap, cfg.bloomFpp, shards = cfg.seenBloomShards)
+      }
+      // a decoded blob is not cached yet: release what the set replaced
+      if (cached.isEmpty) loaded.foreach(destroyDiff(_, set))
+      // with no blob committed the set is cached under a key no lookup matches
+      cacheFor(store.root, blob.fold("")(_.path), blob.fold(-1L)(_.committedAtMs), set)
+      Some(set)
+    }
+
+  /** Close the round: merge the committed merged frontier's bloom-missing
+    * hashes into `seen` (zero rows in a steady-state round — no
+    * re-broadcast), commit the blob at `round`, and make the result the
+    * store's cached set, destroying every superseded broadcast it does not
+    * share. `frontier` should be materialized: the delta is a filter over
+    * it. */
+  def advance(spark: SparkSession, store: TableStore, seen: SeenSet, frontier: DataFrame,
+              frontierSize: Long, round: Int): Unit = {
+    val delta = frontier.filter(!mightContainCol(spark, seen, col("url_hash")))
+      .select(col("url_hash"))
+    val next = merged(spark, seen, delta, 0L)
+      .withApproxInserted(math.max(seen.approxInserted, frontierSize))
+    // allowRewind: after an explicit frontier resetTo the replayed rounds
+    // re-commit the blob at lower rounds; the bloom is a monotone superset,
+    // so a rewound pointer is still correct
+    val snap = store.commitBlob("seen_bloom", toBytes(next), round, allowRewind = true)
+    cacheFor(store.root, snap.path, snap.committedAtMs, next)
   }
 
   // ---- in-session broadcast cache ----
@@ -239,82 +238,65 @@ object UrlSeen {
     if (prev != null) destroyDiff(prev._2, sf)
   }
 
-  /** Drop (and destroy) the root's cached set, if any. */
-  def invalidate(root: String): Unit = {
-    val prev = sessionCache.remove(root)
-    if (prev != null) {
-      dropRegistration(prev._2.probeName)
-      prev._2.broadcasts.foreach(_.destroy())
-    }
-  }
-
   // ---- blob (SnapshotStore) serialization: versioned envelope ----
   private val Magic = 0x47424c4d // "GBLM"
 
+  /** Version 2: the shard count and shape, then per shard its inserted
+    * estimate and its length-prefixed filter (BloomFilter.readFrom
+    * over-reads when several filters share one stream). */
   def toBytes(seen: SeenSet): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(Magic)
-    seen match {
-      case sf: SeenFilter =>
-        out.writeInt(1) // version 1: single filter
-        out.writeLong(sf.expectedItems)
-        out.writeDouble(sf.fpp)
-        out.writeLong(sf.approxInserted)
-        sf.bloom.value.writeTo(out)
-      case sh: ShardedSeenFilter =>
-        out.writeInt(2) // version 2: k hash-spread shards, length-prefixed
-        out.writeInt(sh.shards.length)
-        out.writeLong(sh.perShardCap)
-        out.writeDouble(sh.shardFpp)
-        sh.shards.foreach { s =>
-          out.writeLong(s.approxInserted)
-          // length-prefix each shard: BloomFilter.readFrom over-reads when
-          // several filters share one stream, so each gets its own frame
-          val shardBytes = new ByteArrayOutputStream()
-          s.bloom.value.writeTo(shardBytes)
-          val arr = shardBytes.toByteArray
-          out.writeInt(arr.length)
-          out.write(arr)
-        }
+    out.writeInt(2)
+    out.writeInt(seen.shards.length)
+    out.writeLong(seen.perShardCap)
+    out.writeDouble(seen.shardFpp)
+    seen.shards.foreach { s =>
+      out.writeLong(s.approxInserted)
+      val frame = new ByteArrayOutputStream()
+      s.bloom.value.writeTo(frame)
+      out.writeInt(frame.size)
+      frame.writeTo(out)
     }
     out.flush()
     bos.toByteArray
   }
 
+  /** Decode a blob; version 1 (the single-filter envelope of stores
+    * committed before shards were stored) reads as one shard. */
   def fromBytes(spark: SparkSession, bytes: Array[Byte]): SeenSet = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     require(in.readInt() == Magic, "not a url-seen bloom blob")
+    def shard(inserted: Long, bf: BloomFilter) = Shard(spark.sparkContext.broadcast(bf), inserted)
     in.readInt() match {
       case 1 =>
-        val expected = in.readLong()
+        val cap = in.readLong()
         val fpp = in.readDouble()
         val inserted = in.readLong()
-        val bf = BloomFilter.readFrom(in)
-        SeenFilter(spark.sparkContext.broadcast(bf), expected, fpp, inserted)
+        SeenSet(Vector(shard(inserted, BloomFilter.readFrom(in))), cap, fpp)
       case 2 =>
         val k = in.readInt()
-        val perShardCap = in.readLong()
-        val shardFpp = in.readDouble()
+        val cap = in.readLong()
+        val fpp = in.readDouble()
         val shards = (0 until k).map { _ =>
           val inserted = in.readLong()
           val len = in.readInt()
-          val arr = new Array[Byte](len)
-          in.readFully(arr)
-          val bf = BloomFilter.readFrom(new ByteArrayInputStream(arr))
-          SeenFilter(spark.sparkContext.broadcast(bf), perShardCap, shardFpp, inserted)
+          val at = bytes.length - in.available() // each frame decodes in place
+          in.skipBytes(len)
+          shard(inserted, BloomFilter.readFrom(new ByteArrayInputStream(bytes, at, len)))
         }
-        ShardedSeenFilter(shards.toIndexedSeq, perShardCap, shardFpp)
+        SeenSet(shards, cap, fpp)
       case v => throw new IllegalArgumentException(s"unknown url-seen blob version $v")
     }
   }
 
   /** Codegen'd bloom-membership probe (native Catalyst expression, not a
     * UDF): registered per set under a broadcast-unique name so lazily
-    * analyzed plans never observe a later filter's builder; sharded sets
-    * probe as an Or chain over the shard filters — still whole-stage
-    * codegen. The registration is tracked and dropped when the set is
-    * destroyed, so the registry stays flat across rounds. */
+    * analyzed plans never observe a later filter's builder; the probe is
+    * an Or chain over the shard filters — still whole-stage codegen. The
+    * registration is tracked and dropped when the set is destroyed, so the
+    * registry stays flat across rounds. */
   def mightContainCol(spark: SparkSession, seen: SeenSet, c: Column): Column = {
     val name = seen.probeName
     // idempotent per (name, session): re-probing an already-registered set
@@ -322,9 +304,7 @@ object UrlSeen {
     // registered function" on every replace)
     if (registrations.put(name, spark) ne spark) {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
-        (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          seen.probeExpr(es.head),
-        "built-in")
+        (es: Seq[Expression]) => seen.probeExpr(es.head), "built-in")
     }
     call_function(name, c)
   }
@@ -345,17 +325,4 @@ object UrlSeen {
 
   /** Live probe registrations (test observability: must stay ≤ live sets). */
   def registrationCount: Int = registrations.size
-
-  /** Split candidates (must carry url_hash) into definitely-new rows plus the
-    * exactly-resolved maybe-seen survivors. `frontierKeys` is the frontier
-    * projected to url_hash (column pruning keeps the scan 8 bytes/row). */
-  def filterUnseen(candidates: DataFrame, seen: SeenSet, frontierKeys: DataFrame): DataFrame = {
-    val spark = candidates.sparkSession
-    val mightContain = mightContainCol(spark, seen, col("url_hash"))
-    val definitelyNew = candidates.filter(!mightContain)
-    val maybeSeen = candidates.filter(mightContain)
-    val resolved = maybeSeen.join(frontierKeys.select(col("url_hash")).distinct(),
-      Seq("url_hash"), "left_anti")
-    definitelyNew.unionByName(resolved)
-  }
 }

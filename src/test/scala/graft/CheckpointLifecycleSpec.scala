@@ -19,7 +19,7 @@ import graft.cli.{Crawl, CrawlRound}
 import graft.fetch.SyntheticFetcher
 import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.{CrawlConfig, LinkRank}
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, SimilarityOps}
 
 /** Materialization lifecycle: the iterative loops and the crawl round leave
   * nothing persisted beyond what they return, and the round's frontier
@@ -63,6 +63,19 @@ class CheckpointLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     val ranks = LinkRank.run(edges, iterations = 7, checkpointEvery = 2)
     assert(persisted -- before == Set(checkpointOf(ranks)))
     assert(ranks.count() == 4)
+  }
+
+  test("an IVF index holds its cached build input until release") {
+    import spark.implicits._
+    val emb = (0L until 60L)
+      .map(i => (i, Seq.tabulate(8)(d => math.sin(i * 0.7 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val before = persisted
+    val index = SimilarityOps.buildIvfIndex(emb, nCentroids = 4)
+    assert(SimilarityOps.ivfProbe(index, Seq(0L, 1L), 3).collect().nonEmpty)
+    assert((persisted -- before).nonEmpty, "the build caches its input")
+    index.release()
+    assert(persisted -- before == Set.empty, "release left the build input persisted")
   }
 
   test("a crawl round releases what it materializes; the frontier commit reads the merged checkpoint") {

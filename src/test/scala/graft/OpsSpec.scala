@@ -116,12 +116,13 @@ class OpsSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("IVF cells partition the corpus; index is deterministic") {
-    val (a1, c1) = SimilarityOps.ivfIndex(planted, nCentroids = 8)
-    val (a2, c2) = SimilarityOps.ivfIndex(planted, nCentroids = 8)
-    assert(c1.map(_.toSeq) == c2.map(_.toSeq))
-    val cells = a1.groupBy("cell").count().collect()
+    val i1 = SimilarityOps.buildIvfIndex(planted, nCentroids = 8)
+    val i2 = SimilarityOps.buildIvfIndex(planted, nCentroids = 8)
+    assert(i1.centroids.map(_.toSeq) == i2.centroids.map(_.toSeq))
+    val cells = i1.assigned.groupBy("cell").count().collect()
     assert(cells.map(_.getLong(1)).sum == 500)
     assert(cells.length > 1, "more than one populated cell")
+    Seq(i1, i2).foreach(_.release())
   }
 
   test("IVF index persists: build once, probe twice identical, no k-means on probe") {

@@ -53,7 +53,7 @@ class Schedule2Spec extends AnyFunSuite {
 
   test("forConfig resolves names and the adaptive shorthand") {
     assert(FetchSchedule.forConfig(CrawlConfig()).isInstanceOf[DefaultFetchSchedule])
-    assert(FetchSchedule.forConfig(CrawlConfig(adaptiveSchedule = true)).isInstanceOf[AdaptiveFetchSchedule])
+    assert(FetchSchedule.forConfig(CrawlConfig(schedule = "adaptive")).isInstanceOf[AdaptiveFetchSchedule])
     assert(FetchSchedule.forConfig(CrawlConfig(schedule = "mime")).isInstanceOf[MimeAdaptiveFetchSchedule])
     assert(FetchSchedule.forConfig(CrawlConfig(schedule = "cc")).isInstanceOf[CCFetchSchedule])
   }

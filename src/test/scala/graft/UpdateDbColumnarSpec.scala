@@ -60,7 +60,7 @@ class UpdateDbColumnarSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("columnar ≡ typed over 3 rounds, adaptive schedule") {
-    assertSame(base.copy(adaptiveSchedule = true))
+    assertSame(base.copy(schedule = "adaptive"))
   }
 
   test("columnar ≡ typed with purge404 and no additions") {

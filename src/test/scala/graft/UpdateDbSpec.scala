@@ -31,7 +31,7 @@ class UpdateDbSpec extends AnyFunSuite {
 
   val schedules = Seq(
     "default" -> DefaultFetchSchedule(cfg),
-    "adaptive" -> AdaptiveFetchSchedule(cfg.copy(adaptiveSchedule = true)))
+    "adaptive" -> AdaptiveFetchSchedule(cfg.copy(schedule = "adaptive")))
 
   // (old status or -1 = absent, fetch status) → expected db status
   val matrix: Seq[(Int, Byte, Byte)] = {
@@ -144,7 +144,7 @@ class UpdateDbSpec extends AnyFunSuite {
   }
 
   test("adaptive schedule shrinks interval on change, grows on not-modified") {
-    val acfg = cfg.copy(adaptiveSchedule = true)
+    val acfg = cfg.copy(schedule = "adaptive")
     val sched = AdaptiveFetchSchedule(acfg)
     val changed = UpdateDb.merge(url,
       Iterator(old(DB_FETCHED, sig = Array[Byte](1)), fetch(FETCH_SUCCESS, sig = Array[Byte](2))),

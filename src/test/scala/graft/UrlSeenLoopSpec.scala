@@ -64,9 +64,8 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
     val root = tmp()
     val (store, stats) = CrawlRound.syntheticCrawl(spark, web, c, rounds = 3, root)
     val sf = UrlSeen.fromBytes(spark, store.loadBlob("seen_bloom").get)
-      .asInstanceOf[UrlSeen.SeenFilter]
     // rebuild happened: capacity grew beyond the configured 64
-    assert(sf.expectedItems > 64, s"expected rebuild, capacity=${sf.expectedItems}")
+    assert(sf.perShardCap > 64, s"expected rebuild, capacity=${sf.perShardCap}")
     // and the frontier still matches the bloom-off crawl
     val on = store.load(spark, "frontier").get.select("url").collect().map(_.getString(0)).toSet
     val offRoot = tmp()
@@ -78,22 +77,20 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
   test("merged() never mutates the live broadcast; superseded filters are destroyable") {
     import spark.implicits._
     val sf = UrlSeen.build((1L to 100L).toDF("url_hash"), 2048, 0.01)
-      .asInstanceOf[UrlSeen.SeenFilter]
-    val oldBloom = sf.bloom
+    val Seq(oldBloom) = sf.broadcasts
     val merged = UrlSeen.merged(spark, sf, (5001L to 5100L).toDF("url_hash"), 100L)
-      .asInstanceOf[UrlSeen.SeenFilter]
     // the NEW filter sees both generations; the OLD broadcast value is untouched
     assert((1L to 100L).forall(merged.mightContain))
     assert((5001L to 5100L).forall(merged.mightContain))
     val leakedIntoOld = (5001L to 5100L).count(oldBloom.value.mightContainLong)
     assert(leakedIntoOld < 10,
       s"merge must not mutate the live broadcast's filter (found $leakedIntoOld/100 new hashes in it)")
-    assert(!(merged.bloom eq oldBloom), "merge must return a fresh broadcast")
+    assert(!(merged.broadcasts.head eq oldBloom), "merge must return a fresh broadcast")
     // lifecycle: destroying the superseded filter invalidates only it
-    sf.destroy()
+    UrlSeen.destroyDiff(sf, merged)
     intercept[org.apache.spark.SparkException] { oldBloom.value }
     assert((1L to 100L).forall(merged.mightContain)) // survivor unaffected
-    merged.destroy()
+    merged.broadcasts.foreach(_.destroy())
   }
 
   test("sequential rounds reuse the session-cached bloom broadcast (no per-round reload)") {
@@ -167,12 +164,11 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
   test("sharded delta merge replaces exactly ONE shard's broadcast (1/k re-broadcast)") {
     import spark.implicits._
     val built = UrlSeen.build((1L to 4000L).toDF("url_hash"), 1L << 14, 0.01,
-      approxInserted = 4000, shards = 4).asInstanceOf[UrlSeen.ShardedSeenFilter]
+      approxInserted = 4000, shards = 4)
     assert(built.shards.length == 4)
     assert((1L to 4000L).forall(built.mightContain), "hash-spread build must cover the corpus")
     val before = built.broadcasts
     val merged = UrlSeen.merged(spark, built, (900001L to 900100L).toDF("url_hash"), 100L)
-      .asInstanceOf[UrlSeen.ShardedSeenFilter]
     val after = merged.broadcasts
     val replaced = after.count(b => !before.exists(_ eq b))
     assert(replaced == 1,
@@ -184,7 +180,6 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
     assert((1L to 4000L).forall(merged.mightContain), "shared shards must survive destroyDiff")
     // the blob envelope round-trips the sharded form
     val back = UrlSeen.fromBytes(spark, UrlSeen.toBytes(merged))
-      .asInstanceOf[UrlSeen.ShardedSeenFilter]
     assert(back.shards.length == 4 && back.perShardCap == merged.perShardCap)
     assert((1L to 4000L).forall(back.mightContain) && (900001L to 900100L).forall(back.mightContain))
   }
@@ -195,8 +190,7 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
     val (store, _) = CrawlRound.syntheticCrawl(spark, web, cfg, rounds = 2, root)
     def cachedShards(): Seq[AnyRef] = {
       val s = store.current("seen_bloom").get
-      UrlSeen.cachedFor(root, s.path, s.committedAtMs).get
-        .asInstanceOf[UrlSeen.ShardedSeenFilter].broadcasts
+      UrlSeen.cachedFor(root, s.path, s.committedAtMs).get.broadcasts
     }
     val before = cachedShards()
     val fetcher = graft.fetch.SyntheticFetcher(web, 10)
@@ -247,10 +241,38 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
     val df = (1L to 1000L).toDF("url_hash")
     val sf = UrlSeen.build(df, 2048, 0.01, approxInserted = 1000)
     val back = UrlSeen.fromBytes(spark, UrlSeen.toBytes(sf))
-      .asInstanceOf[UrlSeen.SeenFilter]
-    assert(back.expectedItems == 2048 && back.fpp == 0.01 && back.approxInserted == 1000)
+    assert(back.shards.length == 1 && back.perShardCap == 2048 && back.shardFpp == 0.01 &&
+      back.approxInserted == 1000)
     assert((1L to 1000L).forall(back.mightContain))
     val misses = (100001L to 101000L).count(back.mightContain)
     assert(misses < 50, s"fpp should hold, got $misses/1000")
+  }
+
+  test("a one-shard set holds exactly the single filter's bits") {
+    import spark.implicits._
+    val df = (1L to 3000L).map(_ * 7919L).toDF("url_hash")
+    val Seq(bloom) = UrlSeen.build(df, 4096, 0.01).broadcasts
+    assert(bloom.value == df.stat.bloomFilter("url_hash", 4096, 0.01))
+  }
+
+  test("a version-1 (single-filter) blob loads as a one-shard set") {
+    import spark.implicits._
+    val hashes = (1L to 500L).map(_ * 104729L)
+    val bf = hashes.toDF("url_hash").stat.bloomFilter("url_hash", 2048, 0.01)
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeInt(0x47424c4d) // magic
+    out.writeInt(1) // version 1: expected items, fpp, inserted, one filter
+    out.writeLong(2048)
+    out.writeDouble(0.01)
+    out.writeLong(500)
+    bf.writeTo(out)
+    out.flush()
+    val back = UrlSeen.fromBytes(spark, bos.toByteArray)
+    assert(back.shards.length == 1 && back.perShardCap == 2048 && back.shardFpp == 0.01 &&
+      back.approxInserted == 500)
+    assert(hashes.forall(back.mightContain))
+    assert(back.broadcasts.head.value == bf)
+    back.broadcasts.foreach(_.destroy())
   }
 }
