@@ -609,8 +609,8 @@ object SparkEntry {
          FROM documents""",
     // first-principles mirror of the flagship crawl round over the 6-host/
     // 10-page fixture web (entry()). The VALUES tables are the FIXTURE's
-    // inputs, tabulated by graft.tools.OracleGen (robots policy per host,
-    // homepage span lists — pure functions of the fixture config, like
+    // inputs, checked against the fixture by CrawlApiSpec (robots policy per
+    // host, homepage span lists — pure functions of the fixture config, like
     // q_parse_html's generated pages); every ENGINE semantic is derived here
     // in SQL: homepages always fetch, robots unavailable ⇒ retry (stays
     // db_unfetched=1), denied/delay-too-long ⇒ db_gone=3, success ⇒

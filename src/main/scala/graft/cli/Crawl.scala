@@ -146,9 +146,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
         graft.schema.Doc(url,
           graft.parse.DocParsers.parseSpans(resp.contentType, url, resp.content, cfg))
       else graft.schema.Doc(url, Seq.empty)
-    val signer: graft.frontier.Signer =
-      if (cfg.signer == "md5") graft.frontier.Md5Signer
-      else graft.frontier.TextProfileSigner()
+    val signer = graft.frontier.Signer.forConfig(cfg)
     val textSpans = doc.spans.filter(_.kind == "text")
     val outlinks = doc.spans.filter(s => s.kind == "link" || s.kind == "media")
       .flatMap(s => Option(graft.url.UrlFilters.canonicalizeAndFilter(

@@ -332,11 +332,6 @@ object CrawlRound {
         val merged =
           if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
           else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-        // plan evidence hook (guide §7.2): dump the merge's physical plan once
-        // per process when asked — the loaded-round twin of PlanDump
-        if (sys.env.contains("GRAFT_EXPLAIN_UPDATEDB") && round == 1)
-          System.err.println("[updatedb plan]\n" + merged.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
         val cp = checkpoint(merged, eager = true)
         linkFrames.foreach(graft.ops.release)
         cp

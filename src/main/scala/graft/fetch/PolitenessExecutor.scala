@@ -2,7 +2,7 @@ package graft.fetch
 
 import scala.collection.mutable
 
-import graft.frontier.{CrawlConfig, TextProfileSigner}
+import graft.frontier.{CrawlConfig, Signer}
 import graft.schema.{CrawlStatus, FetchTask, Span}
 import graft.url.Urls
 
@@ -122,8 +122,7 @@ object PolitenessExecutor {
   ): Iterator[FetchedPage] = {
     val clock: Clock = if (cfg.realClock) new SystemClock else new VirtualClock(roundStartMs)
     val epochMs = clock.now // time-limit + lineage metrics measure from here
-    val signer: graft.frontier.Signer =
-      if (cfg.signer == "md5") graft.frontier.Md5Signer else TextProfileSigner()
+    val signer = Signer.forConfig(cfg)
     val queues = mutable.HashMap.empty[String, HostQueue]
     // min-heap of (nextTime, host) with lazy deletion
     val ready = mutable.PriorityQueue.empty[(Long, String)](Ordering.by[(Long, String), Long](_._1).reverse)
@@ -314,7 +313,8 @@ object PolitenessExecutor {
                     var followedHere = 0
                     val linkIt = spans.iterator.filter(_.kind == "link")
                     while (followedHere < cfg.followOutlinksNumLinks && linkIt.hasNext) {
-                      val target = graft.url.UrlFilters.canonicalizeAndFilter(linkIt.next().media_ref)
+                      val target = graft.url.UrlFilters.canonicalizeAndFilter(
+                        linkIt.next().media_ref, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
                       if (target != null && target != t.url) {
                         val th = Urls.hostOf(target)
                         if (th != null &&
@@ -342,7 +342,8 @@ object PolitenessExecutor {
                     endTime, resp.contentType))
                 case "MOVED" | "TEMP_MOVED" =>
                   nRedirects += 1
-                  val target = graft.url.UrlFilters.canonicalizeAndFilter(resp.redirectTo)
+                  val target = graft.url.UrlFilters.canonicalizeAndFilter(
+                    resp.redirectTo, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
                   val st = if (resp.code == "MOVED") CrawlStatus.FETCH_REDIR_PERM else CrawlStatus.FETCH_REDIR_TEMP
                   val repr = if (target == null) null
                              else Urls.chooseRepr(t.url, target, temp = resp.code == "TEMP_MOVED")

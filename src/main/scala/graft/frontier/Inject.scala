@@ -25,12 +25,9 @@ object Inject {
     val t = line.trim
     if (t.isEmpty || t.startsWith("#")) return None
     val parts = t.split("\t").filter(_.nonEmpty)
-    val url =
-      if (cfg.extraUrlNormalizers.isEmpty) UrlFilters.canonicalizeAndFilter(parts.head.trim)
-      else UrlFilters.normalizeAndFilter(parts.head.trim,
-        graft.url.UrlNormalizerChain(cfg.extraUrlNormalizers))
+    val url = UrlFilters.canonicalizeAndFilter(
+      parts.head.trim, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
     if (url == null) return None
-    if (!cfg.extraUrlFilters.forall(_.accept(url))) return None
     var score = cfg.injectedScore
     var interval = cfg.fetchIntervalDefault
     val md = Map.newBuilder[String, String]

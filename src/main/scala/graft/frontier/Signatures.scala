@@ -21,6 +21,15 @@ trait Signer extends Serializable {
     sign(spans.iterator.filter(_.kind == "text").map(_.text).mkString(" "))
 }
 
+object Signer {
+  /** The signer `cfg.signer` names: "textprofile" or "md5". */
+  def forConfig(cfg: CrawlConfig): Signer = {
+    require(cfg.signer == "textprofile" || cfg.signer == "md5",
+      s"unknown signer '${cfg.signer}' (textprofile | md5)")
+    if (cfg.signer == "md5") Md5Signer else TextProfileSigner()
+  }
+}
+
 object Md5Signer extends Signer {
   override def sign(text: String): Array[Byte] =
     MessageDigest.getInstance("MD5").digest(

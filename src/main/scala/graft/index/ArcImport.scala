@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.fetch.FetchedPage
-import graft.frontier.CrawlConfig
+import graft.frontier.{CrawlConfig, Signer}
 import graft.schema.CrawlStatus
 import graft.url.{UrlFilters, Urls}
 
@@ -106,8 +106,7 @@ object ArcImport {
                     ): Dataset[FetchedPage] = {
     val spark = containers.sparkSession
     import spark.implicits._
-    val signer: graft.frontier.Signer =
-      if (cfg.signer == "md5") graft.frontier.Md5Signer else graft.frontier.TextProfileSigner()
+    val signer = Signer.forConfig(cfg)
     containers.flatMap { bytes =>
       // a corrupt gzip container must not fail the whole import task: it
       // contributes zero records and its full byte count to the skip lineage
@@ -117,19 +116,24 @@ object ArcImport {
           skippedBytesAcc.foreach(_.add(bytes.length.toLong)); Array.emptyByteArray }
       val parsed = parseArc(inflated)
       if (parsed.skippedBytes > 0) skippedBytesAcc.foreach(_.add(parsed.skippedBytes))
-      parsed.records.iterator.flatMap { r =>
-        val url = UrlFilters.canonicalizeAndFilter(r.url)
-        if (url == null) Iterator.empty
-        else {
-          val spans = graft.parse.DocParsers.parseSpans(r.mime, url, r.payload, cfg)
-          val host = Urls.hostOf(url)
-          Iterator(FetchedPage(url, Urls.hash64(url), host, CrawlStatus.FETCH_SUCCESS,
-            "SUCCESS", r.archiveDateMs, r.mime, signer.signSpans(spans), null,
-            0, cfg.fetchIntervalDefault, 1.0f, round, spans))
-        }
-      }
+      parsed.records.iterator.flatMap(r =>
+        archivedPage(r.url, r.archiveDateMs, r.mime, r.payload, cfg, signer, round))
     }
   }
+
+  /** One archived capture as a fetched page, the same for ARC and WARC: the
+    * URL through the configured normalize + filter chain (None when the
+    * chain drops it), the body through the mime registry, signed — a
+    * FETCH_SUCCESS at the capture date. */
+  private[index] def archivedPage(rawUrl: String, dateMs: Long, mime: String, body: Array[Byte],
+                                  cfg: CrawlConfig, signer: Signer, round: Int): Option[FetchedPage] =
+    Option(UrlFilters.canonicalizeAndFilter(rawUrl, cfg.extraUrlNormalizers, cfg.extraUrlFilters))
+      .map { url =>
+        val spans = graft.parse.DocParsers.parseSpans(mime, url, body, cfg)
+        FetchedPage(url, Urls.hash64(url), Urls.hostOf(url), CrawlStatus.FETCH_SUCCESS,
+          "SUCCESS", dateMs, mime, signer.signSpans(spans), null,
+          0, cfg.fetchIntervalDefault, 1.0f, round, spans)
+      }
 
   /** Text-container convenience over [[toFetchedBytes]]. */
   def toFetched(containers: Dataset[String], cfg: CrawlConfig, round: Int,

@@ -227,9 +227,7 @@ object WarcExport {
 object WarcImport {
   import org.apache.spark.sql.Dataset
   import graft.fetch.FetchedPage
-  import graft.frontier.CrawlConfig
-  import graft.schema.CrawlStatus
-  import graft.url.{UrlFilters, Urls}
+  import graft.frontier.{CrawlConfig, Signer}
 
   private val CtRe = "(?im)^content-type:\\s*(.+?)\\s*$".r
   // HTTP/1.x "HTTP/1.1 200 OK" and HTTP/2-style "HTTP/2 200" status lines
@@ -238,14 +236,12 @@ object WarcImport {
   def toFetched(warcText: Dataset[String], cfg: CrawlConfig, round: Int): Dataset[FetchedPage] = {
     val spark = warcText.sparkSession
     import spark.implicits._
-    val signer: graft.frontier.Signer =
-      if (cfg.signer == "md5") graft.frontier.Md5Signer else graft.frontier.TextProfileSigner()
+    val signer = Signer.forConfig(cfg)
     val records = WarcExport.fromWarc(warcText.toDF())
       .filter(org.apache.spark.sql.functions.col("warc_type") === "response")
       .select("target_uri", "date", "payload")
     records.as[(String, Long, Array[Byte])].flatMap { case (uri, dateMs, payload) =>
-      val url = UrlFilters.canonicalizeAndFilter(uri)
-      if (url == null || payload == null) Iterator.empty
+      if (payload == null) Iterator.empty
       else {
         val text = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
         // payloads WITHOUT a reconstructed HTTP message (producers that
@@ -265,12 +261,8 @@ object WarcImport {
         if (!status.contains(200)) Iterator.empty // only successful captures re-enter
         else {
           val ct = CtRe.findFirstMatchIn(head).map(_.group(1)).orNull
-          val bodyBytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val spans = graft.parse.DocParsers.parseSpans(ct, url, bodyBytes, cfg)
-          val host = Urls.hostOf(url)
-          Iterator(FetchedPage(url, Urls.hash64(url), host, CrawlStatus.FETCH_SUCCESS,
-            "SUCCESS", dateMs, ct, signer.signSpans(spans), null,
-            0, cfg.fetchIntervalDefault, 1.0f, round, spans))
+          ArcImport.archivedPage(uri, dateMs, ct,
+            body.getBytes(java.nio.charset.StandardCharsets.UTF_8), cfg, signer, round)
         }
       }
     }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.cli.Crawl
 import graft.fetch.SyntheticFetcher
-import graft.fixtures.{SyntheticWeb, WebConfig}
-import graft.frontier.{CrawlConfig, HostDb, LinkDb}
+import graft.fixtures.{RobotsPolicy, SyntheticWeb, WebConfig}
+import graft.frontier.{CrawlConfig, HostDb, LinkDb, TextProfileSigner}
 import graft.schema.FrontierEntry
 
 /** The programmatic facade + hostdb/linkdb side tables end-to-end. */
@@ -143,5 +143,38 @@ class CrawlApiSpec extends AnyFunSuite with SparkSpecBase {
     val df = SparkEntry.entry(spark)
     assert(df.columns.toSeq == Seq("url", "host", "status", "score"))
     assert(df.count() > 0)
+  }
+
+  test("q_crawl_round's oracle tabulates the fixture web's inputs verbatim") {
+    // the oracle's VALUES tables are inputs, pure functions of entry()'s web
+    // (this suite's `web`): seeds are the homepages, whose fetch outcome is
+    // their host's robots policy (homepages themselves always serve 200)
+    val pages = (0 until web.cfg.nHosts).map { h =>
+      val host = web.hostName(h)
+      val outcome = web.robots(host) match {
+        case RobotsPolicy.AllowAll => "success"
+        case RobotsPolicy.CrawlDelay(s) => if (s * 1000L > cfg.maxCrawlDelayMs) "gone" else "success"
+        case RobotsPolicy.DenyAll => "gone"
+        case RobotsPolicy.Unavailable5xx => "retry"
+      }
+      (web.pageUrl(h, 0), host, outcome)
+    }
+    val fetched = pages.collect { case (u, _, "success") => u -> web.render(u).spans }
+    val tables = Seq(
+      "pages(url, host, outcome)" -> pages.map { case (u, h, o) => s"('$u','$h','$o')" },
+      // link + media + redirect spans of each successful homepage (≥ 1)
+      "counts(from_url, n_all)" -> fetched.map { case (u, spans) =>
+        s"('$u',${math.max(spans.count(s => Set("link", "media", "redirect")(s.kind)), 1)})" },
+      // one row per link span instance
+      "links(from_url, to_url)" -> fetched.flatMap { case (u, spans) =>
+        spans.filter(_.kind == "link").map(s => s"('$u','${s.media_ref}')") })
+    val oracle = SparkEntry.oracleSql("q_crawl_round").filterNot(_.isWhitespace)
+    val stale = tables.filterNot { case (t, rows) =>
+      oracle.contains(s"$t AS (VALUES ${rows.mkString(",")})".filterNot(_.isWhitespace)) }
+    assert(stale.isEmpty, "q_crawl_round's VALUES no longer match the fixture web; today's rows:\n" +
+      stale.map { case (t, rows) => s"$t AS (VALUES\n${rows.mkString(",\n")})" }.mkString("\n"))
+    // the oracle models no dedup marking: homepage signatures must differ
+    val sigs = fetched.map { case (_, spans) => TextProfileSigner().signSpans(spans).toSeq }
+    assert(sigs.distinct.size == sigs.size, "two fixture homepages share a signature")
   }
 }

@@ -7,7 +7,7 @@ import graft.fetch._
 import graft.fixtures._
 import graft.frontier.CrawlConfig
 import graft.schema.{CrawlStatus, Doc, FetchTask, Span}
-import graft.url.Urls
+import graft.url.{PrefixUrlFilter, Urls}
 
 /** Politeness + robots semantics of the fetch executor, mirroring the
   * reference's TestFetcher politeness-budget assertion
@@ -60,6 +60,12 @@ class FetcherSpec extends AnyFunSuite {
     val times = out.map(_.fetch_time).sorted
     times.zip(times.tail).foreach { case (x, y) =>
       assert(y - x >= cfg.serverDelayMs, s"followed fetch gap ${y - x} < delay") }
+
+    // a followed target goes through the configured URL chain: a filter
+    // that rejects D stops the follow there (and E behind it)
+    val cf = c2.copy(extraUrlFilters = Seq(PrefixUrlFilter(Seq(D), deny = true)))
+    val (outf, _) = run(Seq(task(A)), ScriptedFetcher(behaviors, Map.empty), cf)
+    assert(outf.map(_.url).toSet == Set(A, B), s"filtered D must not be fetched: ${outf.map(_.url)}")
 
     // depth 0 (reference default): nothing followed
     val (out0, _) = run(Seq(task(A)), ScriptedFetcher(behaviors, Map.empty), cfg)

@@ -108,5 +108,10 @@ class FrontierToolsSpec extends AnyFunSuite with SparkSpecBase {
       graft.fetch.SyntheticFetcher(web, 1), cfg, now, 1, _ => ()).toSeq
     val expected = Md5Signer.signSpans(web.render(url).spans)
     assert(java.util.Arrays.equals(out.head.signature, expected))
+    // the default names textprofile; a name no signer has is refused, not
+    // silently read as textprofile
+    assert(Signer.forConfig(CrawlConfig()) == TextProfileSigner())
+    val e = intercept[IllegalArgumentException](Signer.forConfig(cfg.copy(signer = "sha1")))
+    assert(e.getMessage.contains("unknown signer 'sha1'"))
   }
 }

@@ -7,7 +7,7 @@ import graft.fetch._
 import graft.fixtures._
 import graft.frontier.CrawlConfig
 import graft.schema.{CrawlStatus, Doc, FetchTask, Span}
-import graft.url.Urls
+import graft.url.{PrefixUrlFilter, Urls}
 
 /** Round-2 fetch-runtime features: per-path robots enforcement, per-host
   * politeness slots (fetcher.threads.per.queue), exponential exception
@@ -133,6 +133,12 @@ class FetchRuntime2Spec extends AnyFunSuite {
     val urls = out.map(_.url)
     assert(urls.toSet == Set("http://a.fix.test/r0", "http://a.fix.test/r1", "http://a.fix.test/r2"))
     assert(m.head.redirects == 3) // three redirect responses seen
+    // a redirect target goes through the configured URL chain: a filter
+    // that rejects r2 ends the chain at r1 (no fetch, no redirect span)
+    val (outf, _) = run(Seq(task("http://a.fix.test/r0")), f, cfg.copy(redirectMax = 2,
+      extraUrlFilters = Seq(PrefixUrlFilter(Seq("http://a.fix.test/r2"), deny = true))))
+    assert(outf.map(_.url).toSet == Set("http://a.fix.test/r0", "http://a.fix.test/r1"))
+    assert(outf.find(_.url == "http://a.fix.test/r1").get.spans.isEmpty)
     // default (redirectMax = 0): only the source is touched
     val (out0, _) = run(Seq(task("http://a.fix.test/r0")), f)
     assert(out0.map(_.url) == Seq("http://a.fix.test/r0"))

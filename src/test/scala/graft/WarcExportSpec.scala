@@ -176,6 +176,11 @@ class WarcExportSpec extends AnyFunSuite with SparkSpecBase {
     assert(htmlPage.signature != null)
     assert(byUrl("http://arc.fix.test/note.txt").spans ==
       Seq(graft.schema.Span("text", "plain text here", null, 0)))
+    // archived URLs take the configured URL chain like fetched ones
+    val denyNote = CrawlConfig(extraUrlFilters =
+      Seq(graft.url.PrefixUrlFilter(Seq("http://arc.fix.test/note"), deny = true)))
+    assert(graft.index.ArcImport.toFetched(Seq(container).toDS(), denyNote, round = 7)
+      .collect().map(_.url).toSeq == Seq("http://arc.fix.test/page.html"))
     // malformed tail is ignored, parsed prefix kept
     val broken = rec("http://a.fix.test/ok.html", "text/html", "<body>x</body>") +
       "http://bad.test NOHEADER\n"
