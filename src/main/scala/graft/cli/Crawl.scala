@@ -85,12 +85,13 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
     frontier.orderBy(desc("score"), asc("url")).limit(n)
   }
 
-  /** Point lookup (reader `url` verb) — parquet min/max pruning on url_hash
-    * makes this a partial scan at scale. */
+  /** Point lookup (reader `url` verb) of `u` normalized by the configured
+    * chain — parquet min/max pruning on url_hash makes this a partial scan
+    * at scale. */
   def url(u: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val h = graft.url.Urls.hash64(graft.url.Urls.canonicalize(u))
-    frontier.filter(col("url_hash") === h && col("url") === graft.url.Urls.canonicalize(u))
+    val n = cfg.urlChain.normalize(u)
+    frontier.filter(col("url_hash") === graft.url.Urls.hash64(n) && col("url") === n)
   }
 
   def lastRound: Int = store.lastCompletedRound.getOrElse(0)
@@ -120,7 +121,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
   /** Full-db filter + renormalize pass, committed as the next round snapshot
     * (never in place: the source snapshot stays immutable and readable). */
   def filterAndNormalize(purge404: Boolean = true): Unit = {
-    val cleaned = graft.frontier.FrontierTools.filterAndNormalize(typedFrontier, purge404)
+    val cleaned = graft.frontier.FrontierTools.filterAndNormalize(typedFrontier, cfg, purge404)
     store.commit("frontier", cleaned.toDF(), lastRound + 1)
   }
 
@@ -136,8 +137,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
       u: String,
       chain: graft.index.IndexingFilterChain = graft.index.IndexingFilterChain(Nil)): DataFrame = {
     import org.apache.spark.sql.functions._
-    val url = graft.url.UrlFilters.canonicalizeAndFilter(
-      u, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
+    val url = cfg.urlChain(u)
     require(url != null, s"url rejected by normalize+filter: $u")
     val resp = fetcher.fetch(url)
     val doc: graft.schema.Doc =
@@ -149,8 +149,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
     val signer = graft.frontier.Signer.forConfig(cfg)
     val textSpans = doc.spans.filter(_.kind == "text")
     val outlinks = doc.spans.filter(s => s.kind == "link" || s.kind == "media")
-      .flatMap(s => Option(graft.url.UrlFilters.canonicalizeAndFilter(
-        s.media_ref, cfg.extraUrlNormalizers, cfg.extraUrlFilters)))
+      .flatMap(s => Option(cfg.urlChain(s.media_ref)))
     val sigHex = Option(signer.signSpans(doc.spans))
       .map(_.map(b => f"$b%02X").mkString).getOrElse("")
     val row = spark.createDataFrame(Seq((

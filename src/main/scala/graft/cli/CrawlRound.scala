@@ -379,7 +379,7 @@ object CrawlRound {
         // the reference's invertlinks runs over the NEW segment and merges
         // into the existing linkdb (LinkDbMerger) — a round that fetched
         // nothing must not wipe the graph
-        val fresh = graft.frontier.LinkDb.invert(pages, cfg.maxInlinks)
+        val fresh = graft.frontier.LinkDb.invert(pages, cfg)
         val merged = store.load(spark, "linkdb") match {
           case Some(prev) => graft.frontier.LinkDb.merge(prev, fresh, cfg.maxInlinks)
           case None => fresh

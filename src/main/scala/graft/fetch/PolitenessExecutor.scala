@@ -287,9 +287,7 @@ object PolitenessExecutor {
                   // (feed entries may live on another host).
                   docs.drop(1).foreach { sd =>
                     val su =
-                      if (sd.external) graft.url.UrlFilters.canonicalizeAndFilter(
-                        sd.url, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
-                      else sd.url
+                      if (sd.external) cfg.urlChain(sd.url) else sd.url
                     if (su != null) {
                       val sh = Urls.hostOf(su)
                       val st = FetchTask(su, Urls.hash64(su),
@@ -313,8 +311,7 @@ object PolitenessExecutor {
                     var followedHere = 0
                     val linkIt = spans.iterator.filter(_.kind == "link")
                     while (followedHere < cfg.followOutlinksNumLinks && linkIt.hasNext) {
-                      val target = graft.url.UrlFilters.canonicalizeAndFilter(
-                        linkIt.next().media_ref, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
+                      val target = cfg.urlChain(linkIt.next().media_ref)
                       if (target != null && target != t.url) {
                         val th = Urls.hostOf(target)
                         if (th != null &&
@@ -342,8 +339,7 @@ object PolitenessExecutor {
                     endTime, resp.contentType))
                 case "MOVED" | "TEMP_MOVED" =>
                   nRedirects += 1
-                  val target = graft.url.UrlFilters.canonicalizeAndFilter(
-                    resp.redirectTo, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
+                  val target = cfg.urlChain(resp.redirectTo)
                   val st = if (resp.code == "MOVED") CrawlStatus.FETCH_REDIR_PERM else CrawlStatus.FETCH_REDIR_TEMP
                   val repr = if (target == null) null
                              else Urls.chooseRepr(t.url, target, temp = resp.code == "TEMP_MOVED")

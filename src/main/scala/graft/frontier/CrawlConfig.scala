@@ -86,13 +86,11 @@ case class CrawlConfig(
     ignoreExternalLinks: Boolean = false,        // db.ignore.external.links
     ignoreExternalLinksMode: String = "byHost",  // "byHost" | "byDomain"
     extraUrlFilters: Seq[graft.url.UrlFilter] = Nil, // pluggable filter chain (prefix/suffix/domain/regex
-                                                 // variants) applied AFTER the static default chain on
-                                                 // seeds and discovered outlinks
+                                                 // variants) applied AFTER the static default rules
     extraUrlNormalizers: Seq[graft.url.UrlNormalizer] = Nil, // pluggable normalizer plugins
                                                  // (ajax/querystring/protocol/host/slash) composed
-                                                 // around the basic canonicalizer on discovered
-                                                 // outlinks; default empty keeps the codegen'd
-                                                 // url_canon_filter hot path
+                                                 // around the basic canonicalizer; both lists form
+                                                 // `urlChain`
     htmlFormUseAction: Boolean = true,           // parser.html.form.use_action (form action = outlink)
     htmlOutlinkIgnoreTags: Seq[String] = Nil,    // parser.html.outlinks.ignore_tags
     parserCharsetDefault: String = "windows-1252", // parser.character.encoding.default
@@ -181,7 +179,8 @@ case class CrawlConfig(
     // an existing row's score (updateDbScore is the no-op default), and
     // scores come exclusively from the WebGraph→LinkRank→ScoreUpdater
     // sequence (Crawl.updateScoresFromWebGraph). Generator sort stays
-    // score-descending; the indexer boost is normalizedScore × db score.
+    // score-descending. The indexer boost is the index.LinkAnalysisScoreFilter
+    // indexing filter, which takes its own normalizedScore.
     // parsefilter-naivebayes (reference src/plugin/parsefilter-naivebayes
     // NaiveBayesParseFilter): focused crawling — pages classified
     // IRRELEVANT by a two-class NB model keep only the outlinks whose URL
@@ -199,7 +198,6 @@ case class CrawlConfig(
     ignoreExternalExemptions: Seq[(Boolean, String)] = Nil,
     scoringLink: Boolean = false,
     linkScoreUpdaterClearScore: Float = 0.0f,    // link.score.updater.clear.score
-    linkAnalysisNormalizedScore: Double = 1.0,   // link.analyze.normalize.score
     // parse-ext (reference src/plugin/parse-ext ExtParser.java): resolved
     // mime → external command; overrides the built-in registry for that
     // mime (≙ parser.order putting parse-ext first). Empty = no external
@@ -215,6 +213,11 @@ case class CrawlConfig(
     bloomFpp: Double = 0.01,
     seenBloomShards: Int = 1                     // >1: k-sharded filter; a round re-broadcasts ONE shard (the 10^10 path)
 ) {
+  /** The configured URL chain: every crawl site turns a raw URL into a
+    * crawl URL through it (seeds, outlinks, redirects, sub-docs, archive
+    * and sitemap URLs, linkdb edges, CrawlDbFilter, FreeGenerator). */
+  lazy val urlChain: graft.url.UrlChain = graft.url.UrlChain(extraUrlNormalizers, extraUrlFilters)
+
   /** Last-seen-by-seed-or-link stamping is maintained when either consumer
     * plugin is on (scoring-orphan reads it with flat spans, scoring-adaptive
     * with per-status spans + generator sort penalty). */

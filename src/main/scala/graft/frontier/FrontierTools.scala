@@ -24,9 +24,12 @@ object FrontierTools {
   }
 
   /** Filter + renormalize pass over the whole db (reference CrawlDbFilter):
-    * optional 404/orphan purge, re-canonicalize, drop filtered. Cheap status
-    * predicates run before URL work (Catalyst orders them anyway). */
-  def filterAndNormalize(frontier: Dataset[FrontierEntry], purge404: Boolean): Dataset[FrontierEntry] = {
+    * optional 404/orphan purge, then every URL through the configured chain
+    * (a newly configured normalizer or filter applies to the stored URLs),
+    * dropped ones removed. Cheap status predicates run before URL work
+    * (Catalyst orders them anyway). */
+  def filterAndNormalize(frontier: Dataset[FrontierEntry], cfg: CrawlConfig,
+                         purge404: Boolean): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
@@ -34,7 +37,7 @@ object FrontierTools {
       frontier.toDF().filter(col("status") =!= graft.schema.CrawlStatus.DB_GONE.toInt)
     else frontier.toDF()
     base
-      .withColumn("_canon", call_function("url_canon_filter", col("url")))
+      .withColumn("_canon", graft.functions.GraftFunctions.url_canon_filter(col("url"), cfg.urlChain))
       .filter(col("_canon").isNotNull)
       .withColumn("url", col("_canon"))
       .withColumn("url_hash", call_function("url_hash64", col("url")))
@@ -113,16 +116,15 @@ object FrontierTools {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     // normalize and filter are INDEPENDENT switches like the reference's
-    // -normalize / -filter flags (FreeGenerator.java:85-93)
-    val extra = cfg.extraUrlFilters
+    // -normalize / -filter flags (FreeGenerator.java:85-93): the two halves
+    // of the configured chain
+    val chain = cfg.urlChain
     val urls = urlLines.flatMap { line =>
       val t = if (line == null) "" else line.trim
       if (t.isEmpty || t.startsWith("#")) None
       else {
-        val n = if (normalize) graft.url.Urls.canonicalize(t) else t
-        val ok = n != null &&
-          (!filter || (graft.url.UrlFilters.accept(n) && extra.forall(_.accept(n))))
-        if (ok) Some(n) else None
+        val n = if (normalize) chain.normalize(t) else t
+        if (n != null && (!filter || chain.accept(n))) Some(n) else None
       }
     }
     // unique urls (reference FGReducer:133-141 dedups on the exact URL)

@@ -3,7 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.schema.{CrawlStatus, FrontierEntry}
-import graft.url.{UrlFilters, Urls}
+import graft.url.Urls
 
 /** Seed injection (SURVEY.md §2.3 "Inject merge").
   *
@@ -25,8 +25,7 @@ object Inject {
     val t = line.trim
     if (t.isEmpty || t.startsWith("#")) return None
     val parts = t.split("\t").filter(_.nonEmpty)
-    val url = UrlFilters.canonicalizeAndFilter(
-      parts.head.trim, cfg.extraUrlNormalizers, cfg.extraUrlFilters)
+    val url = cfg.urlChain(parts.head.trim)
     if (url == null) return None
     var score = cfg.injectedScore
     var interval = cfg.fetchIntervalDefault

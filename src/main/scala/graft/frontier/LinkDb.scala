@@ -17,21 +17,20 @@ import graft.functions.GraftFunctions
   */
 object LinkDb {
 
-  /** (to_url, from_url, anchor) edges of a round's fetched pages. */
-  def edges(pages: Dataset[FetchedPage]): DataFrame = {
-    val spark = pages.sparkSession
-    GraftFunctions.register(spark)
+  /** (to_url, from_url, anchor) edges of a round's fetched pages; targets
+    * go through the configured URL chain, so linkdb keys are frontier keys. */
+  def edges(pages: Dataset[FetchedPage], cfg: CrawlConfig): DataFrame =
     pages.toDF()
       .select(col("url").as("from_url"),
         explode(filter(col("spans"), s => s.getField("kind") === "link")).as("l"))
-      .withColumn("to_url", call_function("url_canon_filter", col("l.media_ref")))
+      .withColumn("to_url", GraftFunctions.url_canon_filter(col("l.media_ref"), cfg.urlChain))
       .filter(col("to_url").isNotNull && col("to_url") =!= col("from_url"))
       .select(col("to_url"), col("from_url"), col("l.text").as("anchor"))
-  }
 
-  /** Invert: url → array<struct<from_url, anchor>> with ≤ maxInlinks kept. */
-  def invert(pages: Dataset[FetchedPage], maxInlinks: Int = 10000): DataFrame = {
-    val e = edges(pages)
+  /** Invert: url → array<struct<from_url, anchor>> with ≤ cfg.maxInlinks kept. */
+  def invert(pages: Dataset[FetchedPage], cfg: CrawlConfig): DataFrame = {
+    val maxInlinks = cfg.maxInlinks
+    val e = edges(pages, cfg)
     val counted = e.groupBy(col("to_url")).agg(count(lit(1)).as("n"))
     val overKeys = counted.filter(col("n") > maxInlinks).select("to_url")
     val within = e.join(overKeys.hint("broadcast"), Seq("to_url"), "left_anti")

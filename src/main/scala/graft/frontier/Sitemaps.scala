@@ -3,7 +3,6 @@ package graft.frontier
 import org.apache.spark.sql.Dataset
 
 import graft.fetch.Fetcher
-import graft.url.UrlFilters
 
 /** Sitemap processing (reference util/SitemapProcessor.java: an optional
   * bin/crawl stage that reads hosts from the CrawlDb/HostDb, fetches each
@@ -12,7 +11,7 @@ import graft.url.UrlFilters
   *
   * Spark realization: distinct hosts off the frontier → partition-local
   * sitemap discovery (robots `Sitemap:` lines via the fetcher's robots
-  * cache) and fetch → link-span extraction → canonicalize + filter; the
+  * cache) and fetch → link-span extraction → the configured URL chain; the
   * caller (`Crawl.processSitemaps`) injects the URLs as seed lines (known
   * URLs keep their crawl state, new URLs enter as db_unfetched with the
   * configured sitemap score). Everything between the two shuffles (host
@@ -20,8 +19,8 @@ import graft.url.UrlFilters
   */
 object Sitemaps {
 
-  /** URLs listed by the sitemaps of the given hosts (canonicalized,
-    * filtered, distinct). */
+  /** URLs listed by the sitemaps of the given hosts (through the configured
+    * URL chain, distinct). */
   def discover(hosts: Dataset[String], fetcher: Fetcher, cfg: CrawlConfig): Dataset[String] = {
     val spark = hosts.sparkSession
     import spark.implicits._
@@ -40,8 +39,8 @@ object Sitemaps {
             else Seq.empty
           spans.iterator
             .filter(s => s.kind == "link" && s.media_ref != null)
-            .map(s => UrlFilters.canonicalizeAndFilter(s.media_ref))
-            .filter(u => u != null && cfg.extraUrlFilters.forall(_.accept(u)))
+            .map(s => cfg.urlChain(s.media_ref))
+            .filter(_ != null)
             .toSeq
         }
       }

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.expressions.Expression
+
+import graft.url.UrlChain
 
 /** Registration + Column-level API for the graft native expressions.
   *
@@ -59,12 +61,16 @@ object GraftFunctions {
 
   // Column-level helpers (require register(spark) first in the session)
   def url_canonicalize(c: Column): Column = call_function("url_canonicalize", c)
-  def url_canon_filter(c: Column): Column = call_function("url_canon_filter", c)
   def url_host(c: Column): Column = call_function("url_host", c)
   def url_domain(c: Column): Column = call_function("url_domain", c)
   def url_hash64(c: Column): Column = call_function("url_hash64", c)
   def url_hash_interleave(c: Column): Column = call_function("url_hash_interleave", c)
-  def url_accept(c: Column): Column = call_function("url_accept", c)
+  // the URL chain rides the expression itself (a codegen reference object);
+  // the empty chain is the registered one-argument function
+  def url_canon_filter(c: Column, chain: UrlChain = UrlChain.Empty): Column =
+    GraftColumns.unary(c)(UrlCanonFilter(_, chain))
+  def url_accept(c: Column, chain: UrlChain = UrlChain.Empty): Column =
+    GraftColumns.unary(c)(UrlAccept(_, chain))
 
   /** Map union where the RIGHT side wins on key conflict and nulls read as
     * empty maps — duplicate keys are removed BEFORE map_from_entries (whose

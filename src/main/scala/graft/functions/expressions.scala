@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.url.{Urls, UrlFilters}
+import graft.url.{UrlChain, Urls}
 
 /** Native Catalyst expressions for the URL hot path (SURVEY.md §4 "Custom
   * Catalyst inventory"). Each generates Java code calling the static
@@ -20,6 +20,8 @@ abstract class StaticStringExpr extends UnaryExpression {
   /** Fully-qualified static call, e.g. "graft.url.Urls.canonicalize". */
   def staticFn: String
   def eval0(s: String): String
+  /** The callee the generated code invokes; `staticFn` unless overridden. */
+  protected def callee(ctx: CodegenContext): String = staticFn
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
@@ -37,7 +39,7 @@ abstract class StaticStringExpr extends UnaryExpression {
       boolean ${ev.isNull} = true;
       UTF8String ${ev.value} = null;
       if (!${childGen.isNull}) {
-        String $resultTerm = $staticFn(${childGen.value}.toString());
+        String $resultTerm = ${callee(ctx)}(${childGen.value}.toString());
         if ($resultTerm != null) {
           ${ev.isNull} = false;
           ${ev.value} = UTF8String.fromString($resultTerm);
@@ -54,11 +56,29 @@ case class UrlCanonicalize(child: Expression) extends StaticStringExpr {
   override def prettyName: String = "url_canonicalize"
 }
 
-/** Canonicalize + default filter chain (null = dropped). */
-case class UrlCanonFilter(child: Expression) extends StaticStringExpr {
+/** An expression over a [[UrlChain]]. The empty chain generates the call
+  * to the default static function, so default-config plans and their code
+  * are those of the chain-less expression; any other chain is attached to
+  * the generated class as a reference object (one virtual call per row,
+  * inside whole-stage codegen, like [[BloomMightContainLong]]'s broadcast). */
+trait UrlChainExpr extends UnaryExpression {
+  def chain: UrlChain
+  protected def chainCallee(ctx: CodegenContext, staticFn: String, method: String): String =
+    if (chain.isEmpty) staticFn
+    else s"${ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName)}.$method"
+  // the empty chain prints as the one-argument function
+  override protected def stringArgs: Iterator[Any] =
+    if (chain.isEmpty) Iterator(child) else super.stringArgs
+}
+
+/** Raw URL → crawl URL through `chain` (null = dropped); the empty chain is
+  * canonicalize + the default filters. */
+case class UrlCanonFilter(child: Expression, chain: UrlChain = UrlChain.Empty)
+    extends StaticStringExpr with UrlChainExpr {
   override def staticFn: String = "graft.url.UrlFilters.canonicalizeAndFilter"
-  override def eval0(s: String): String = UrlFilters.canonicalizeAndFilter(s)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+  override protected def callee(ctx: CodegenContext): String = chainCallee(ctx, staticFn, "apply")
+  override def eval0(s: String): String = chain(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_canon_filter"
 }
 
@@ -184,15 +204,18 @@ case class UrlSurt(child: Expression) extends StaticStringExpr {
   override def prettyName: String = "url_surt"
 }
 
-/** URL filter predicate (true = keep). */
-case class UrlAccept(child: Expression) extends UnaryExpression {
+/** URL filter predicate through `chain`'s filters (true = keep); the empty
+  * chain is the default filters. */
+case class UrlAccept(child: Expression, chain: UrlChain = UrlChain.Empty) extends UrlChainExpr {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
   override def nullSafeEval(v: Any): Any =
-    UrlFilters.accept(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.url.UrlFilters.accept($c.toString())")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+    chain.accept(v.asInstanceOf[UTF8String].toString)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = chainCallee(ctx, "graft.url.UrlFilters.accept", "accept")
+    defineCodeGen(ctx, ev, c => s"$fn($c.toString())")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_accept"
 }
 

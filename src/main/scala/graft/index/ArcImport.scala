@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.fetch.FetchedPage
 import graft.frontier.{CrawlConfig, Signer}
 import graft.schema.CrawlStatus
-import graft.url.{UrlFilters, Urls}
+import graft.url.Urls
 
 /** Legacy ARC ingestion (the reference's tools.arc surface:
   * ArcRecordReader splits the container into `header-line + payload`
@@ -127,7 +127,7 @@ object ArcImport {
     * FETCH_SUCCESS at the capture date. */
   private[index] def archivedPage(rawUrl: String, dateMs: Long, mime: String, body: Array[Byte],
                                   cfg: CrawlConfig, signer: Signer, round: Int): Option[FetchedPage] =
-    Option(UrlFilters.canonicalizeAndFilter(rawUrl, cfg.extraUrlNormalizers, cfg.extraUrlFilters))
+    Option(cfg.urlChain(rawUrl))
       .map { url =>
         val spans = graft.parse.DocParsers.parseSpans(mime, url, body, cfg)
         FetchedPage(url, Urls.hash64(url), Urls.hostOf(url), CrawlStatus.FETCH_SUCCESS,

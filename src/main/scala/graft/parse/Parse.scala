@@ -127,27 +127,10 @@ object Parse {
         if (cfg.scoringDepthMax > 0)
           when(col("l.kind") === "redirect", col("depth")).otherwise(col("depth") + 1)
         else lit(1))
-      // normalizer plugins configured ⇒ UDF chain (ajax → canonicalize →
-      // host/protocol/slash/querystring + default filters); default stays
-      // the codegen'd expression
-      .withColumn("to_url",
-        if (cfg.extraUrlNormalizers.isEmpty)
-          call_function("url_canon_filter", col("l.media_ref"))
-        else {
-          val chain = graft.url.UrlNormalizerChain(cfg.extraUrlNormalizers)
-          udf((u: String) => graft.url.UrlFilters.normalizeAndFilter(u, chain)).apply(col("l.media_ref"))
-        })
+      // the configured URL chain (normalizers, default + configured
+      // filters) as one codegen'd expression
+      .withColumn("to_url", GraftFunctions.url_canon_filter(col("l.media_ref"), cfg.urlChain))
       .filter(col("to_url").isNotNull && col("to_url") =!= col("from_url"))
-      // pluggable filter chain (prefix/suffix/domain/regex variants): UDF
-      // only when configured — the default path stays whole-stage codegen
-      .transform { df =>
-        if (cfg.extraUrlFilters.isEmpty) df
-        else {
-          val chain = graft.url.UrlFilterChain(cfg.extraUrlFilters)
-          val ok = udf((u: String) => chain.accept(u))
-          df.filter(ok(col("to_url")))
-        }
-      }
       .withColumn("to_host", call_function("url_host", col("to_url")))
       .withColumn("internal",
         if (cfg.ignoreExternalLinksMode == "byDomain")
@@ -156,15 +139,13 @@ object Parse {
       // db.ignore.external.links: cross-host/domain targets dropped entirely;
       // redirect spans are exempt (the reference treats redirects as fetch
       // outcomes, not discovered links); urlfilter-ignoreexempt regex hits
-      // survive the ignore (UDF only when exemptions are configured — the
-      // default path stays codegen)
+      // survive the ignore (to_url already passed the default filters)
       .transform { df =>
         val base = lit(!cfg.ignoreExternalLinks) || col("internal") || col("l.kind") === "redirect"
         if (cfg.ignoreExternalExemptions.isEmpty) df.filter(base)
         else {
-          val exempt = graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)
-          val exemptUdf = udf((u: String) => exempt.accept(u))
-          df.filter(base || exemptUdf(col("to_url")))
+          val exempt = graft.url.UrlChain(Nil, Seq(graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)))
+          df.filter(base || GraftFunctions.url_accept(col("to_url"), exempt))
         }
       }
     val exploded = exploded0

@@ -446,16 +446,19 @@ object Relational {
   }
 
   /** §2.4 score-distribution quantiles (CrawlDbReader stats verb): exact
-    * percentiles per status group, one aggregation. */
-  def scoreQuantiles(s: SparkSession, dir: String): DataFrame =
+    * percentiles per status group, one aggregation buffering and sorting
+    * each group's prices once for all four. */
+  def scoreQuantiles(s: SparkSession, dir: String): DataFrame = {
+    val q = col("q")
     orders(s, dir)
       .groupBy(col("o_orderstatus"))
       .agg(
         count(lit(1)).as("n"),
-        round(percentile(col("o_totalprice"), lit(0.25)), 2).as("q25"),
-        round(percentile(col("o_totalprice"), lit(0.5)), 2).as("q50"),
-        round(percentile(col("o_totalprice"), lit(0.75)), 2).as("q75"),
-        round(percentile(col("o_totalprice"), lit(0.9)), 2).as("q90"))
+        percentile(col("o_totalprice"), array(lit(0.25), lit(0.5), lit(0.75), lit(0.9))).as("q"))
+      .select(col("o_orderstatus"), col("n"),
+        round(q(0), 2).as("q25"), round(q(1), 2).as("q50"),
+        round(q(2), 2).as("q75"), round(q(3), 2).as("q90"))
+  }
 
   /** §2.7 mime resolution: header normalization + by-extension fallback +
     * default (MimeUtil.autoResolveContentType), through the codegen'd
@@ -501,13 +504,12 @@ object Relational {
     * canonical output. */
   def urlNormalizers(s: SparkSession, dir: String): DataFrame = {
     import graft.url._
-    val chain = UrlNormalizerChain(Seq(
+    val chain = UrlChain(Seq(
       AjaxNormalizer,
       QuerystringSortNormalizer,
       ProtocolNormalizer(Map("proto.example.com" -> "https")),
       HostAliasNormalizer(Map("www.alias.example.com" -> "alias.example.com")),
-      SlashNormalizer(Map("addslash.example.com" -> true, "noslash.example.com" -> false))))
-    val norm = udf((u: String) => chain.normalize(u))
+      SlashNormalizer(Map("addslash.example.com" -> true, "noslash.example.com" -> false))), Nil)
     val k = col("doc_id").cast("string")
     val raw = when(col("doc_id") % 5 === 0,
         concat(lit("http://ajax.example.com/app?x=1#!state="), k))
@@ -519,7 +521,9 @@ object Relational {
         concat(lit("http://www.alias.example.com/page"), k, lit("/")))
       .otherwise(concat(lit("http://noslash.example.com/dir"), k, lit("/")))
     documents(s, dir).select(col("doc_id"), raw.as("raw"))
-      .withColumn("normalized", norm(col("raw")))
+      // the chain column; every class passes the default filters, so its
+      // output is the normalizers' alone
+      .withColumn("normalized", graft.functions.GraftFunctions.url_canon_filter(col("raw"), chain))
   }
 
   /** §2.1 the IndexingFilter plugin chain (index-basic, index-more, tld,

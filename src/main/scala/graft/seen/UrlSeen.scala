@@ -3,7 +3,7 @@ package graft.seen
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -82,8 +82,6 @@ object UrlSeen {
       val per = n / shards.length
       copy(shards = shards.map(s => s.copy(approxInserted = math.max(s.approxInserted, per))))
     }
-    /** Registry name for the codegen'd probe (unique per broadcast set). */
-    private[seen] def probeName: String = s"graft_seen_mc_${shards.map(_.bloom.id).mkString("_")}"
     private[seen] def probeExpr(child: Expression): Expression =
       shards.map(s => graft.functions.BloomMightContainLong(child, s.bloom): Expression)
         .reduceLeft(Or(_, _))
@@ -137,12 +135,11 @@ object UrlSeen {
         Shard(spark.sparkContext.broadcast(add), target.approxInserted + updateCount)))
     }
 
-  /** Destroy every broadcast (and the probe registration) of `old` that the
-    * `successor` does not share — THE lifecycle primitive: a merge keeps
-    * the k-1 shards the successor still holds. */
+  /** Destroy every broadcast of `old` that the `successor` does not share —
+    * THE lifecycle primitive: a merge keeps the k-1 shards the successor
+    * still holds. */
   def destroyDiff(old: SeenSet, successor: SeenSet): Unit = {
     if (old eq successor) return
-    if (old.probeName != successor.probeName) dropRegistration(old.probeName)
     val keep = successor.broadcasts
     old.broadcasts.foreach { b =>
       if (!keep.exists(_ eq b)) b.destroy()
@@ -292,37 +289,10 @@ object UrlSeen {
   }
 
   /** Codegen'd bloom-membership probe (native Catalyst expression, not a
-    * UDF): registered per set under a broadcast-unique name so lazily
-    * analyzed plans never observe a later filter's builder; the probe is
-    * an Or chain over the shard filters — still whole-stage codegen. The
-    * registration is tracked and dropped when the set is destroyed, so the
-    * registry stays flat across rounds. */
-  def mightContainCol(spark: SparkSession, seen: SeenSet, c: Column): Column = {
-    val name = seen.probeName
-    // idempotent per (name, session): re-probing an already-registered set
-    // must not re-register (the registry WARNs "replaced a previously
-    // registered function" on every replace)
-    if (registrations.put(name, spark) ne spark) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
-        (es: Seq[Expression]) => seen.probeExpr(es.head), "built-in")
-    }
-    call_function(name, c)
-  }
-
-  // probe registry name → owning session; entries removed (and the function
-  // dropped) when the owning set is destroyed
-  private val registrations =
-    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
-
-  private[seen] def dropRegistration(name: String): Unit = {
-    val spark = registrations.remove(name)
-    if (spark != null) {
-      try spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-      catch { case _: Exception => () } // session already stopped: nothing to drop
-    }
-  }
-
-  /** Live probe registrations (test observability: must stay ≤ live sets). */
-  def registrationCount: Int = registrations.size
+    * UDF): an Or chain over the shard filters, each holding its broadcast
+    * as a codegen reference object — still whole-stage codegen. The
+    * expression carries its own set, so nothing is registered and a lazily
+    * analyzed plan probes the set it was built with. */
+  def mightContainCol(spark: SparkSession, seen: SeenSet, c: Column): Column =
+    GraftColumns.unary(c)(seen.probeExpr)
 }

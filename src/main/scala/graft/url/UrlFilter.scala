@@ -17,12 +17,6 @@ trait UrlFilter extends Serializable {
   def accept(url: String): Boolean
 }
 
-/** All filters must accept (the reference's filter chain: any plugin
-  * returning null drops the URL). */
-case class UrlFilterChain(filters: Seq[UrlFilter]) extends UrlFilter {
-  override def accept(url: String): Boolean = filters.forall(_.accept(url))
-}
-
 /** urlfilter-prefix: pass only URLs starting with a listed prefix
   * (deny = true inverts: drop listed prefixes). */
 case class PrefixUrlFilter(prefixes: Seq[String], deny: Boolean = false) extends UrlFilter {
@@ -319,30 +313,10 @@ object UrlFilters {
     false
   }
 
-  /** Combined per-URL pipeline used on discovered outlinks:
-    * canonicalize then filter; null = dropped. */
+  /** The default canonicalize + filter (the empty [[UrlChain]]'s static
+    * form, called by the generated `url_canon_filter` code); null = dropped. */
   def canonicalizeAndFilter(raw: String): String = {
     val c = Urls.canonicalize(raw)
     if (c != null && accept(c)) c else null
-  }
-
-  /** Same pipeline with extra normalizer plugins in the chain
-    * (urlnormalizer-ajax/querystring/protocol/host/slash variants). */
-  def normalizeAndFilter(raw: String, chain: UrlNormalizerChain): String = {
-    val c = chain.normalize(raw)
-    if (c != null && accept(c)) c else null
-  }
-
-  /** The FULL configured chain — default canonicalize+filter plus any extra
-    * normalizer/filter plugins — as applied to seeds and discovered links.
-    * Debug probes (Crawl.checkUrl) must use this form or they diverge from
-    * what the crawl actually does with a URL. */
-  def canonicalizeAndFilter(raw: String,
-                            extraNormalizers: Seq[UrlNormalizer],
-                            extraFilters: Seq[UrlFilter]): String = {
-    val c =
-      if (extraNormalizers.isEmpty) canonicalizeAndFilter(raw)
-      else normalizeAndFilter(raw, UrlNormalizerChain(extraNormalizers))
-    if (c != null && extraFilters.forall(_.accept(c))) c else null
   }
 }

@@ -202,16 +202,3 @@ object RegexRuleNormalizer {
     } catch { case scala.util.control.NonFatal(_) => RegexRuleNormalizer(Nil) }
   }
 }
-
-/** Ordered chain over the canonical form: ajax (raw) → Urls.canonicalize →
-  * remaining normalizers in configured order. Null at any stage ⇒ null. */
-final case class UrlNormalizerChain(normalizers: Seq[UrlNormalizer]) {
-  private val (pre, post) = normalizers.partition(_ == AjaxNormalizer)
-  def normalize(raw: String): String = {
-    var u = raw
-    pre.foreach(n => if (u != null) u = n.normalize(u))
-    u = Urls.canonicalize(u)
-    post.foreach(n => if (u != null) u = n.normalize(u))
-    u
-  }
-}

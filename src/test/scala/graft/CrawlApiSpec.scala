@@ -95,7 +95,7 @@ class CrawlApiSpec extends AnyFunSuite with SparkSpecBase {
         0, 100, 1f, 1,
         Seq(graft.schema.Span("link", "a", "http://target.fix.test/popular", 0)))
     }.toDS()
-    val ldb = LinkDb.invert(pages, maxInlinks = 10)
+    val ldb = LinkDb.invert(pages, CrawlConfig(maxInlinks = 10))
     val row = ldb.filter(col("url") === "http://target.fix.test/popular").collect().head
     assert(row.getAs[Long]("n_inlinks") == 10)
   }

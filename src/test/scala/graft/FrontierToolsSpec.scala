@@ -37,7 +37,7 @@ class FrontierToolsSpec extends AnyFunSuite with SparkSpecBase {
       entry("http://ok.fix.test/a", 1L),
       entry("http://gone.fix.test/", 1L, status = CrawlStatus.DB_GONE),
       entry("http://media.fix.test/x.png", 1L)).toDS()
-    val out = FrontierTools.filterAndNormalize(db, purge404 = true).collect()
+    val out = FrontierTools.filterAndNormalize(db, CrawlConfig(), purge404 = true).collect()
     assert(out.map(_.url).toSet == Set("http://ok.fix.test/a"))
   }
 

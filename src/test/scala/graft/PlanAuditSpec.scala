@@ -170,7 +170,7 @@ object PlanAuditSpec {
     "q_registered_domain"   -> Shape(0, 0, 0, 1),
     "q_repetition"          -> Shape(0, 0, 5, 2),
     "q_scan_filter_project" -> Shape(0, 0, 0, 5),
-    "q_score_quantiles"     -> Shape(1, 0, 8, 2),
+    "q_score_quantiles"     -> Shape(1, 0, 2, 2),
     "q_seen_antijoin"       -> Shape(1, 1, 0, 3),
     "q_segment_merge"       -> Shape(1, 0, 0, 4),
     "q_simhash_pairs"       -> Shape(1, 1, 0, 8),
@@ -181,7 +181,7 @@ object PlanAuditSpec {
     "q_text_quality"        -> Shape(0, 0, 0, 2),
     "q_token_count"         -> Shape(0, 0, 0, 2),
     "q_url_canonicalize"    -> Shape(0, 0, 0, 2),
-    "q_url_normalizers"     -> Shape(0, 0, 1, 1))
+    "q_url_normalizers"     -> Shape(0, 0, 0, 1))
 
   def shapeOf(ops: Seq[SparkPlan]): Shape = Shape(
     exchanges = ops.count(_.isInstanceOf[ShuffleExchangeLike]),

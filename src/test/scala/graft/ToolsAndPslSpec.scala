@@ -86,11 +86,12 @@ class UrlFilterVariantsSpec extends AnyFunSuite {
     assert(!f.accept("ftp://a.fix.test/x")) // no match ⇒ drop
   }
   test("chain requires every filter to accept") {
-    val chain = UrlFilterChain(Seq(
+    // .cgi, not a default-denied suffix: the suffix filter alone drops it
+    val chain = UrlChain(Nil, Seq(
       PrefixUrlFilter(Seq("http://a.fix.test/")),
-      SuffixUrlFilter(Seq(".exe"))))
+      SuffixUrlFilter(Seq(".cgi"))))
     assert(chain.accept("http://a.fix.test/ok.html"))
-    assert(!chain.accept("http://a.fix.test/bad.exe"))
+    assert(!chain.accept("http://a.fix.test/bad.cgi"))
     assert(!chain.accept("http://b.fix.test/ok.html"))
   }
 

@@ -84,11 +84,11 @@ class UrlNormalizerSpec extends AnyFunSuite {
   }
 
   test("chain: ajax runs on the raw url before the canonicalizer strips fragments") {
-    val chain = UrlNormalizerChain(Seq(AjaxNormalizer, QuerystringSortNormalizer))
+    val chain = UrlChain(Seq(AjaxNormalizer, QuerystringSortNormalizer), Nil)
     assert(chain.normalize("HTTP://H.Test/app?x=1#!state=5") ==
       "http://h.test/app?_escaped_fragment_=state=5&x=1")
     // without ajax in the chain, the fragment is simply stripped
-    assert(UrlNormalizerChain(Nil).normalize("http://h.test/app?x=1#!state=5") ==
+    assert(UrlChain.Empty.normalize("http://h.test/app?x=1#!state=5") ==
       "http://h.test/app?x=1")
     assert(chain.normalize("not a url") == null)
   }

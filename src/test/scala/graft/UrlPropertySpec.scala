@@ -14,22 +14,7 @@ class UrlPropertySpec extends AnyFunSuite {
     assert(res.passed, s"$name: $res")
   }
 
-  private val schemeGen = Gen.oneOf("http", "https", "HTTP", "HtTpS", "ftp", "mailto", "")
-  private val hostGen = Gen.oneOf(
-    "Example.COM", "example.com.", "a.b.co.uk", "host-001.fix.test",
-    "LOCALHOST", "127.0.0.1", "xn--bcher-kva.example", "")
-  private val portGen = Gen.oneOf("", ":80", ":443", ":8080", ":0", ":")
-  private val pathGen = Gen.oneOf("", "/", "/a/b", "/a/./b", "/a/../b", "//x//y/",
-    "/%7Euser", "/a b", "/ünïcode", "/a/a/a/a", "/img.PNG", "/.." , "/index.php")
-  private val queryGen = Gen.oneOf("", "?", "?x=1", "?PHPSESSID=z&x=1", "?&&", "?a=%2F&b=%zz")
-  private val fragGen = Gen.oneOf("", "#", "#frag")
-
-  private val urlishGen: Gen[String] = for {
-    s <- schemeGen; h <- hostGen; p <- portGen; pa <- pathGen; q <- queryGen; f <- fragGen
-  } yield s"$s://$h$p$pa$q$f"
-
-  private val garbageGen: Gen[String] =
-    Gen.oneOf(Gen.asciiPrintableStr, Gen.alphaNumStr, urlishGen)
+  import UrlPropertySpec._
 
   test("canonicalize is idempotent on everything it accepts") {
     check("idempotency", Prop.forAll(urlishGen) { raw =>
@@ -61,4 +46,24 @@ class UrlPropertySpec extends AnyFunSuite {
       Urls.hash64(s) == Urls.hash64(s)
     })
   }
+}
+
+/** The URL-ish and arbitrary string generators (shared with UrlChainSpec). */
+object UrlPropertySpec {
+  private val schemeGen = Gen.oneOf("http", "https", "HTTP", "HtTpS", "ftp", "mailto", "")
+  private val hostGen = Gen.oneOf(
+    "Example.COM", "example.com.", "a.b.co.uk", "host-001.fix.test",
+    "LOCALHOST", "127.0.0.1", "xn--bcher-kva.example", "")
+  private val portGen = Gen.oneOf("", ":80", ":443", ":8080", ":0", ":")
+  private val pathGen = Gen.oneOf("", "/", "/a/b", "/a/./b", "/a/../b", "//x//y/",
+    "/%7Euser", "/a b", "/ünïcode", "/a/a/a/a", "/img.PNG", "/.." , "/index.php")
+  private val queryGen = Gen.oneOf("", "?", "?x=1", "?PHPSESSID=z&x=1", "?&&", "?a=%2F&b=%zz")
+  private val fragGen = Gen.oneOf("", "#", "#frag")
+
+  val urlishGen: Gen[String] = for {
+    s <- schemeGen; h <- hostGen; p <- portGen; pa <- pathGen; q <- queryGen; f <- fragGen
+  } yield s"$s://$h$p$pa$q$f"
+
+  val garbageGen: Gen[String] =
+    Gen.oneOf(Gen.asciiPrintableStr, Gen.alphaNumStr, urlishGen)
 }
