@@ -189,14 +189,15 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
 
   /** Sitemap stage (reference SitemapProcessor / `bin/crawl --sitemaps-from-hostdb`):
     * fetch the sitemaps advertised by the frontier's hosts and inject their
-    * URLs as seed lines scored `sitemapScore`; committed at the checkpoint
-    * round like any mid-crawl inject. */
+    * URLs (already chained: the chain runs once) as seed lines scored
+    * `sitemapScore`; committed at the checkpoint round like any mid-crawl inject. */
   def processSitemaps(sitemapScore: Float = 0.5f): Long = {
     import spark.implicits._
     val hosts = frontier.select(col("host")).distinct().as[String]
     val seedLines = graft.frontier.Sitemaps.discover(hosts, fetcher, cfg)
       .map(u => s"$u\tnutch.score=$sitemapScore")
-    CrawlRound.inject(spark, store, seedLines, cfg, startTimeMs + lastRound.toLong * roundIntervalMs)
+    CrawlRound.inject(spark, store, seedLines, cfg, startTimeMs + lastRound.toLong * roundIntervalMs,
+      chained = true)
   }
 
   /** Import legacy ARC containers as a crawl round (the reference's

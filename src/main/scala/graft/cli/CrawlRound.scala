@@ -39,7 +39,7 @@ object CrawlRound {
     * (StreamingInject, incremental seed feeds) commits AT the last completed
     * round under a fresh `injectK` tag — the checkpoint never rewinds, the
     * historical snapshots stay immutable, and the next crawl() continues at
-    * round N+1 on the unchanged time base. */
+    * round N+1 on the unchanged time base. `chained`: see Inject.parseSeedLine. */
   def inject(
       spark: SparkSession,
       store: TableStore,
@@ -47,13 +47,14 @@ object CrawlRound {
       cfg: CrawlConfig,
       now: Long,
       overwrite: Boolean = false,
-      update: Boolean = false
+      update: Boolean = false,
+      chained: Boolean = false
   ): Long = {
     import spark.implicits._
     import org.apache.spark.sql.Observation
     val existing = store.loadAs[FrontierEntry](spark, "frontier")
       .getOrElse(spark.emptyDataset[FrontierEntry])
-    val merged = Inject.run(existing, seedLines, cfg, now, overwrite, update)
+    val merged = Inject.run(existing, seedLines, cfg, now, overwrite, update, chained)
     val obs = Observation("inject" + System.nanoTime())
     val round = store.lastCompletedRound.getOrElse(0)
     val tag = if (store.current("frontier").isEmpty) "" else store.freshTag("frontier", round, "inject")

@@ -88,9 +88,8 @@ case class CrawlConfig(
     extraUrlFilters: Seq[graft.url.UrlFilter] = Nil, // pluggable filter chain (prefix/suffix/domain/regex
                                                  // variants) applied AFTER the static default rules
     extraUrlNormalizers: Seq[graft.url.UrlNormalizer] = Nil, // pluggable normalizer plugins
-                                                 // (ajax/querystring/protocol/host/slash) composed
-                                                 // around the basic canonicalizer; both lists form
-                                                 // `urlChain`
+                                                 // (ajax/querystring/protocol/host/slash) around the
+                                                 // canonicalizer; both lists form `urlChain`
     htmlFormUseAction: Boolean = true,           // parser.html.form.use_action (form action = outlink)
     htmlOutlinkIgnoreTags: Seq[String] = Nil,    // parser.html.outlinks.ignore_tags
     parserCharsetDefault: String = "windows-1252", // parser.character.encoding.default

@@ -9,7 +9,8 @@ import graft.schema.FrontierEntry
 object FrontierTools {
 
   /** N-way CrawlDb merge (reference CrawlDbMerger.java:48-60): same-URL rows
-    * resolve to the newest fetch_time; metadata accumulates newer-over-older. */
+    * resolve to the newest fetch_time (ties: status, then score); metadata
+    * accumulates newer-over-older. */
   def mergeDbs(dbs: Seq[Dataset[FrontierEntry]]): Dataset[FrontierEntry] = {
     require(dbs.nonEmpty, "mergeDbs needs at least one frontier")
     val spark = dbs.head.sparkSession
@@ -17,7 +18,8 @@ object FrontierTools {
     dbs.reduce(_ unionByName _)
       .groupByKey(_.url)
       .reduceGroups { (a, b) =>
-        val (newer, older) = if (a.fetch_time >= b.fetch_time) (a, b) else (b, a)
+        val (newer, older) = if (Ordering[(Long, Byte, Float)].gteq(
+          (a.fetch_time, a.status, a.score), (b.fetch_time, b.status, b.score))) (a, b) else (b, a)
         newer.copy(metadata = older.metadata ++ newer.metadata)
       }
       .map(_._2)
@@ -27,7 +29,9 @@ object FrontierTools {
     * optional 404/orphan purge, then every URL through the configured chain
     * (a newly configured normalizer or filter applies to the stored URLs),
     * dropped ones removed. Cheap status predicates run before URL work
-    * (Catalyst orders them anyway). */
+    * (Catalyst orders them anyway). Rows a configured normalizer maps to one
+    * URL (`/dir` and `/dir/`, host aliases) merge as in [[mergeDbs]]; stored
+    * URLs are canonical, so without normalizers the pass stays shuffle-free. */
   def filterAndNormalize(frontier: Dataset[FrontierEntry], cfg: CrawlConfig,
                          purge404: Boolean): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
@@ -36,7 +40,7 @@ object FrontierTools {
     val base = if (purge404)
       frontier.toDF().filter(col("status") =!= graft.schema.CrawlStatus.DB_GONE.toInt)
     else frontier.toDF()
-    base
+    val cleaned = base
       .withColumn("_canon", graft.functions.GraftFunctions.url_canon_filter(col("url"), cfg.urlChain))
       .filter(col("_canon").isNotNull)
       .withColumn("url", col("_canon"))
@@ -45,6 +49,7 @@ object FrontierTools {
       .withColumn("domain", call_function("url_domain", col("host")))
       .drop("_canon")
       .as[FrontierEntry]
+    if (cfg.urlChain.normalizers.isEmpty) cleaned else mergeDbs(Seq(cleaned))
   }
 
   /** Per-domain/host random URL sample (reference UrlSampler: rand per

@@ -19,13 +19,14 @@ object Inject {
 
   case class Seed(url: String, score: Float, fetchInterval: Int, metadata: Map[String, String])
 
-  /** Parse one seed line; None for comments/blank/malformed/filtered. */
-  def parseSeedLine(line: String, cfg: CrawlConfig): Option[Seed] = {
+  /** Parse one seed line; None for comments/blank/malformed/filtered.
+    * `chained`: the URL is already `cfg.urlChain` output (sitemaps). */
+  def parseSeedLine(line: String, cfg: CrawlConfig, chained: Boolean = false): Option[Seed] = {
     if (line == null) return None
     val t = line.trim
     if (t.isEmpty || t.startsWith("#")) return None
     val parts = t.split("\t").filter(_.nonEmpty)
-    val url = cfg.urlChain(parts.head.trim)
+    val url = if (chained) parts.head.trim else cfg.urlChain(parts.head.trim)
     if (url == null) return None
     var score = cfg.injectedScore
     var interval = cfg.fetchIntervalDefault
@@ -67,19 +68,20 @@ object Inject {
   /** Full-outer merge of seeds into the frontier. `overwrite` replaces known
     * rows with the fresh injected state; `update` merges seed metadata and
     * averages score/interval into known rows (reference :271-350). Default
-    * (both false): known rows win unchanged. */
+    * (both false): known rows win unchanged. `chained`: see [[parseSeedLine]]. */
   def run(
       frontier: Dataset[FrontierEntry],
       seedLines: Dataset[String],
       cfg: CrawlConfig,
       now: Long,
       overwrite: Boolean = false,
-      update: Boolean = false
+      update: Boolean = false,
+      chained: Boolean = false
   ): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
     val seeds = seedLines
-      .flatMap(parseSeedLine(_, cfg))
+      .flatMap(parseSeedLine(_, cfg, chained))
       .groupByKey(_.url)
       .reduceGroups((a, b) => if (a.score >= b.score) a else b) // dedup seeds, best score wins
       .map { case (_, s) => stampLastSeen(seedToEntry(s, now), cfg, now) }

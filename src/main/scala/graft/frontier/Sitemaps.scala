@@ -20,7 +20,7 @@ import graft.fetch.Fetcher
 object Sitemaps {
 
   /** URLs listed by the sitemaps of the given hosts (through the configured
-    * URL chain, distinct). */
+    * URL chain, distinct); inject them with `chained = true`. */
   def discover(hosts: Dataset[String], fetcher: Fetcher, cfg: CrawlConfig): Dataset[String] = {
     val spark = hosts.sparkSession
     import spark.implicits._
@@ -37,11 +37,8 @@ object Sitemaps {
               graft.parse.DocParsers.parseSpans(resp.contentType, sm, resp.content, cfg)
             else if (resp.doc != null) resp.doc.spans
             else Seq.empty
-          spans.iterator
-            .filter(s => s.kind == "link" && s.media_ref != null)
-            .map(s => cfg.urlChain(s.media_ref))
-            .filter(_ != null)
-            .toSeq
+          spans.filter(s => s.kind == "link" && s.media_ref != null)
+            .flatMap(s => Option(cfg.urlChain(s.media_ref)))
         }
       }
     }.distinct()

@@ -143,10 +143,8 @@ object Parse {
       .transform { df =>
         val base = lit(!cfg.ignoreExternalLinks) || col("internal") || col("l.kind") === "redirect"
         if (cfg.ignoreExternalExemptions.isEmpty) df.filter(base)
-        else {
-          val exempt = graft.url.UrlChain(Nil, Seq(graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)))
-          df.filter(base || GraftFunctions.url_accept(col("to_url"), exempt))
-        }
+        else df.filter(base || GraftFunctions.url_accept(col("to_url"),
+          graft.url.UrlChain(Nil, Seq(graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)))))
       }
     val exploded = exploded0
       .withColumn("child_score",

@@ -48,8 +48,7 @@ class UrlChainSpec extends AnyFunSuite with SparkSpecBase {
 
   test("the chain maps each case as stated") {
     for ((raw, out) <- cases) assert(Option(cfg.urlChain(raw)) == out, raw)
-    // a fixed point: Crawl.processSitemaps injects discovered URLs, and
-    // inject applies the chain once more
+    // a fixed point: a stored crawl URL passes CrawlDbFilter unchanged
     for (url <- want) assert(cfg.urlChain(url) == url, url)
   }
 
@@ -83,6 +82,36 @@ class UrlChainSpec extends AnyFunSuite with SparkSpecBase {
     // the reader's point lookup finds each stored URL by its raw form
     for ((raw, Some(url)) <- cases)
       assert(crawl.url(raw).select("url").as[String].collect().toSeq == Seq(url), raw)
+  }
+
+  test("CrawlDbFilter merges stored URLs that normalize to one URL (latest fetch wins)") {
+    import spark.implicits._
+    val c = CrawlConfig(extraUrlNormalizers = Seq(
+      SlashNormalizer(Map("h.test" -> true)), HostAliasNormalizer(Map("www.alias.test" -> "alias.test"))))
+    val db = Seq(
+      entry("http://h.test/c").copy(status = CrawlStatus.DB_FETCHED, fetch_time = 5L),
+      entry("http://h.test/c/").copy(fetch_time = 1L),
+      entry("http://www.alias.test/p").copy(score = 2f),
+      entry("http://alias.test/p").copy(score = 3f),
+      entry("http://h.test/solo/")).toDS()
+    val out = FrontierTools.filterAndNormalize(db, c, purge404 = false).collect()
+    assert(out.map(_.url).sorted.toSeq ==
+      Seq("http://alias.test/p", "http://h.test/c/", "http://h.test/solo/"))
+    assert(out.map(_.url_hash).distinct.length == out.length)
+    val byUrl = out.map(e => e.url -> e).toMap
+    assert(byUrl("http://h.test/c/").status == CrawlStatus.DB_FETCHED && byUrl("http://h.test/c/").fetch_time == 5L)
+    assert(byUrl("http://alias.test/p").score == 3f && byUrl("http://alias.test/p").host == "alias.test")
+  }
+
+  test("sitemap URLs go through the chain once (a non-idempotent rule applies once)") {
+    import spark.implicits._
+    val c = CrawlConfig(extraUrlNormalizers = Seq(RegexRuleNormalizer(Seq("(/p+)$" -> "$1p"))))
+    assert(c.urlChain("http://s.test/p") == "http://s.test/pp" && c.urlChain("http://s.test/pp") == "http://s.test/ppp")
+    val root = tmp()
+    new graft.store.SnapshotStore(root).commit("frontier", Seq(entry("http://s.test/")).toDS().toDF(), 1)
+    val crawl = graft.cli.Crawl(spark, root, c, SitemapFetcher(Seq("http://s.test/p")))
+    crawl.processSitemaps()
+    assert(crawl.frontier.select("url").as[String].collect().toSet == Set("http://s.test/", "http://s.test/pp"))
   }
 
   test("parse outlinks with normalizers, filters and exemptions plan no ScalaUDF") {
