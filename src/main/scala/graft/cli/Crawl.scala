@@ -20,12 +20,10 @@ import graft.store.SnapshotStore
   * }}}
   */
 case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetcher: Fetcher,
-                 startTimeMs: Long = 1700000000000L, roundIntervalMs: Long = 24L * 3600 * 1000,
-                 tableStore: Option[graft.store.TableStore] = None) {
+                 startTimeMs: Long = 1700000000000L, roundIntervalMs: Long = 24L * 3600 * 1000) {
 
-  /** Snapshot store: the parquet+manifest default, or any [[graft.store.TableStore]]
-    * (e.g. [[graft.store.IcebergStore]]) via `tableStore`. */
-  val store: graft.store.TableStore = tableStore.getOrElse(new SnapshotStore(storeRoot))
+  /** The crawl's tables: parquet snapshots under an Iceberg-format snapshot log. */
+  val store: SnapshotStore = new SnapshotStore(storeRoot)
 
   def inject(seedLines: Dataset[String]): Long =
     CrawlRound.inject(spark, store, seedLines, cfg, startTimeMs)

@@ -332,7 +332,7 @@ object CrawlRound {
         linkFrames += linked
         val merged =
           if (cfg.columnarUpdateDb) graft.frontier.UpdateDbColumnar.run(dbIn, fetchUpdates, linked, cfg, now, seen)
-          else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now, seen)
+          else UpdateDb.run(dbIn, fetchUpdates, linked, cfg, now)
         val cp = checkpoint(merged, eager = true)
         linkFrames.foreach(graft.ops.release)
         cp
@@ -422,7 +422,7 @@ object CrawlRound {
   }
 
   /** Resume-aware multi-round driver: continues after the last committed
-    * round (checkpoint = the frontier manifest). */
+    * round (checkpoint = the frontier's current snapshot). */
   def crawl(
       spark: SparkSession,
       store: TableStore,

@@ -40,8 +40,6 @@ case class CrawlConfig(
                                                  // per-domain reducer state — maxPerDomain becomes EXACT
                                                  // (a multi-host domain never splits across partitions)
     minScore: Float = Float.NegativeInfinity,    // generate.min.score
-    markBackBroadcastMaxUrls: Long = 200000,     // generate mark-back: broadcast the selected set up to
-                                                 // this many URLs; beyond, shuffle-join (AQE decides)
     skipHostsWithExceptions: Long = 0,           // >0: generator skips hosts whose cumulative hostdb
                                                  // exception count exceeds this (reference hostdb throttling)
     updateHostDb: Boolean = true,                // per-round host_stats + hot-host salt feedback

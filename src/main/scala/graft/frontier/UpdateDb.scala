@@ -205,54 +205,20 @@ object UpdateDb {
       e.generate_time)
 
   /** Distributed updatedb: frontier ∪ fetch results ∪ inlink credits → new
-    * frontier. With a URL-seen bloom, definitely-new discovered links skip
-    * the frontier co-group (same split as UpdateDbColumnar — the bloom has
-    * no false negatives, so a miss can't match a frontier row). */
+    * frontier, one co-group by URL through [[merge]]. The reference merge the
+    * columnar path (with its URL-seen split) is checked against. */
   def run(
       frontier: Dataset[FrontierEntry],
       fetched: Dataset[FrontierUpdate],
-      linked0: Dataset[FrontierUpdate],
+      linked: Dataset[FrontierUpdate],
       cfg: CrawlConfig,
-      now: Long,
-      seen: Option[graft.seen.UrlSeen.SeenSet] = None
+      now: Long
   ): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
     val schedule = FetchSchedule.forConfig(cfg)
-    val (linked, directNew): (Dataset[FrontierUpdate], Option[Dataset[FrontierEntry]]) =
-      seen match {
-        case Some(sf) if cfg.additionsAllowed =>
-          val seenSet = sf // the SeenSet ships in the closure (broadcast handles inside)
-          val isSeen = (u: FrontierUpdate) => seenSet.mightContain(Urls.hash64(u.url))
-          val seenSide = linked0.filter(u => isSeen(u))
-          val newCand = linked0.filter(u => !isSeen(u))
-          val (newRows, backToJoin) =
-            if (cfg.redirectMax > 0 || cfg.followOutlinksDepth > 0 || cfg.fetchMultiDoc) {
-              val fUrls = fetched.toDF().select(org.apache.spark.sql.functions.col("url"))
-              (newCand.toDF().join(fUrls, Seq("url"), "left_anti").as[FrontierUpdate],
-               newCand.toDF().join(fUrls, Seq("url"), "left_semi").as[FrontierUpdate])
-            } else (newCand, spark.emptyDataset[FrontierUpdate])
-          val direct = newRows.map { u =>
-            val host = Urls.hostOf(u.url)
-            // definitely-new link rows keep their metadata (depth stamp);
-            // scoring-orphan stamps them as inlinked-now (they ARE links)
-            val meta0 = Option(u.metadata).getOrElse(Map.empty[String, String])
-            val meta = if (cfg.lastSeenTracking) meta0 + (OrphanKey -> (now / 1000L).toString) else meta0
-            schedule.initialize(
-              FrontierEntry(u.url, Urls.hash64(u.url), host, Urls.registeredDomainOf(host),
-                CrawlStatus.DB_UNFETCHED, now, 0, cfg.fetchIntervalDefault, u.score,
-                null, 0L, null, -1L, meta), now)
-          }
-          (seenSide.unionByName(backToJoin), Some(direct))
-        case _ => (linked0, None)
-      }
-    val updates = frontier.map(asOld).unionByName(fetched).unionByName(linked)
-    val joined = updates
+    frontier.map(asOld).unionByName(fetched).unionByName(linked)
       .groupByKey(_.url)
       .flatMapGroups((url, it) => merge(url, it, cfg, schedule, now).iterator)
-    directNew match {
-      case Some(d) => joined.unionByName(d)
-      case None => joined
-    }
   }
 }

@@ -15,13 +15,11 @@ import graft.url.{UrlChain, Urls}
   * whole-stage codegen (no UDF serialization boundary).
   */
 
-/** Base for string → nullable-string expressions backed by a static method. */
-abstract class StaticStringExpr extends UnaryExpression {
-  /** Fully-qualified static call, e.g. "graft.url.Urls.canonicalize". */
-  def staticFn: String
+/** Base for string → nullable-string expressions: the generated code calls
+  * `callee` on the input string, interpreted evaluation `eval0`. */
+abstract class StringFnExpr extends UnaryExpression {
   def eval0(s: String): String
-  /** The callee the generated code invokes; `staticFn` unless overridden. */
-  protected def callee(ctx: CodegenContext): String = staticFn
+  protected def callee(ctx: CodegenContext): String
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
@@ -48,6 +46,13 @@ abstract class StaticStringExpr extends UnaryExpression {
   }
 }
 
+/** A [[StringFnExpr]] backed by a static method. */
+abstract class StaticStringExpr extends StringFnExpr {
+  /** Fully-qualified static call, e.g. "graft.url.Urls.canonicalize". */
+  def staticFn: String
+  override protected def callee(ctx: CodegenContext): String = staticFn
+}
+
 /** Canonicalize a URL (null for unparseable). */
 case class UrlCanonicalize(child: Expression) extends StaticStringExpr {
   override def staticFn: String = "graft.url.Urls.canonicalize"
@@ -56,27 +61,21 @@ case class UrlCanonicalize(child: Expression) extends StaticStringExpr {
   override def prettyName: String = "url_canonicalize"
 }
 
-/** An expression over a [[UrlChain]]. The empty chain generates the call
-  * to the default static function, so default-config plans and their code
-  * are those of the chain-less expression; any other chain is attached to
-  * the generated class as a reference object (one virtual call per row,
-  * inside whole-stage codegen, like [[BloomMightContainLong]]'s broadcast). */
+/** An expression over a [[UrlChain]]: the chain is attached to the
+  * generated class as a reference object (one call per row on the final
+  * UrlChain, inside whole-stage codegen, like [[BloomMightContainLong]]'s
+  * broadcast). */
 trait UrlChainExpr extends UnaryExpression {
   def chain: UrlChain
-  protected def chainCallee(ctx: CodegenContext, staticFn: String, method: String): String =
-    if (chain.isEmpty) staticFn
-    else s"${ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName)}.$method"
-  // the empty chain prints as the one-argument function
-  override protected def stringArgs: Iterator[Any] =
-    if (chain.isEmpty) Iterator(child) else super.stringArgs
+  protected def chainRef(ctx: CodegenContext): String =
+    ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName)
 }
 
 /** Raw URL → crawl URL through `chain` (null = dropped); the empty chain is
   * canonicalize + the default filters. */
 case class UrlCanonFilter(child: Expression, chain: UrlChain = UrlChain.Empty)
-    extends StaticStringExpr with UrlChainExpr {
-  override def staticFn: String = "graft.url.UrlFilters.canonicalizeAndFilter"
-  override protected def callee(ctx: CodegenContext): String = chainCallee(ctx, staticFn, "apply")
+    extends StringFnExpr with UrlChainExpr {
+  override protected def callee(ctx: CodegenContext): String = s"${chainRef(ctx)}.apply"
   override def eval0(s: String): String = chain(s)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_canon_filter"
@@ -212,8 +211,8 @@ case class UrlAccept(child: Expression, chain: UrlChain = UrlChain.Empty) extend
   override def nullSafeEval(v: Any): Any =
     chain.accept(v.asInstanceOf[UTF8String].toString)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = chainCallee(ctx, "graft.url.UrlFilters.accept", "accept")
-    defineCodeGen(ctx, ev, c => s"$fn($c.toString())")
+    val chainTerm = chainRef(ctx)
+    defineCodeGen(ctx, ev, c => s"$chainTerm.accept($c.toString())")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_accept"

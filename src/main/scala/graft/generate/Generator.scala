@@ -51,6 +51,9 @@ private[generate] case class GenRow(
 
 object Generator {
 
+  /** Mark-back broadcasts the selected set up to this many URLs. */
+  private val MarkBackBroadcastMaxUrls = 200000L
+
   /** Salted partition key. saltMap: host → number of partition keys to spread
     * over. The salt is mixed INTO the hash (not added to it): k well-separated
     * key values survive the shuffle hash uniformly, where k consecutive values
@@ -245,7 +248,7 @@ object Generator {
     // at very large topN fall back to a shuffle join (AQE decides).
     val selRaw = selected.select(col("url").as("sel_url")).distinct()
     val sel =
-      if (cfg.topN * nSegments <= cfg.markBackBroadcastMaxUrls) broadcast(selRaw) else selRaw
+      if (cfg.topN * nSegments <= MarkBackBroadcastMaxUrls) broadcast(selRaw) else selRaw
     val updated = frontier
       .join(sel, frontier("url") === sel("sel_url"), "left_outer")
       .withColumn("generate_time",

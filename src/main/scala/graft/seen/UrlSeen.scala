@@ -46,8 +46,8 @@ import graft.store.TableStore
   * (bitwise OR of equal-shaped filters) with a per-round bloom over the
   * merged frontier's bloom-missing hashes (a filter over the round's
   * checkpoint, not a rebuild). A round whose frontier was committed after
-  * the blob (inject, sitemaps, maintenance tools, `resetTo`) first merges
-  * that frontier's missing hashes in the same way. The filter is a SUPERSET
+  * the blob (inject, sitemaps, maintenance tools) first merges that
+  * frontier's missing hashes in the same way. The filter is a SUPERSET
   * of all URLs ever seen (purged rows stay in), which is exactly the
   * URL-seen semantics; a false positive or a stale superset entry only
   * routes a row through the exact join path, never drops it.
@@ -153,11 +153,13 @@ object UrlSeen {
     * start snapshot): the cached set when it matches the committed blob,
     * else the blob decoded, else a fresh build. A saturated set is rebuilt
     * from the frontier at 2× its inserted count. A blob committed before
-    * the frontier snapshot (inject, the sitemap stage, a maintenance tool
-    * or a `resetTo` wrote the frontier since; those writers know nothing of
-    * the bloom) first merges in the frontier's bloom-missing hashes —
-    * without that the merge would take their URLs, rediscovered as
-    * outlinks, for new ones and insert duplicate rows. The opened set
+    * the frontier snapshot (inject, the sitemap stage or a maintenance
+    * tool wrote the frontier since; those writers know nothing of the
+    * bloom) first merges in the frontier's bloom-missing hashes — without
+    * that the merge would take their URLs, rediscovered as outlinks, for
+    * new ones and insert duplicate rows. A `resetTo` needs no merge: the
+    * snapshot it makes current keeps its own commit time, and every blob
+    * committed after that time is a superset of its rows. The opened set
     * becomes the store's cached set; every broadcast it replaced is
     * destroyed. */
   def open(spark: SparkSession, store: TableStore, cfg: CrawlConfig,

@@ -11,18 +11,9 @@ case class Snapshot(table: String, round: Int, path: String, committedAtMs: Long
   * Iceberg or a fallback): immutable per-round parquet snapshots, an
   * atomically-swapped current pointer, retained history (time travel),
   * monotonic rounds with explicit rewind, opaque blobs under the same
-  * discipline, and an append-only metrics side table.
-  *
-  * Two implementations ship:
-  *  - [[SnapshotStore]] — parquet + single JSON manifest per table (the
-  *    default; minimal, fast, no extra metadata I/O per commit).
-  *  - [[IcebergStore]] — the Iceberg table-format metadata shape
-  *    (metadata/vN.metadata.json version chain + version-hint.text +
-  *    snapshot log), giving real snapshot-log time travel and
-  *    catalog-style discovery. (The environment ships no Iceberg runtime
-  *    jars, so this is the format's layout and commit protocol hand-rolled
-  *    over the same parquet data files — documented, not a runtime
-  *    catalog integration.)
+  * discipline, and an append-only metrics side table. [[SnapshotStore]]
+  * implements it with the Iceberg table format's snapshot log; the trait
+  * stays the seam that wrappers (a metering store, say) implement.
   */
 trait TableStore extends Serializable {
 

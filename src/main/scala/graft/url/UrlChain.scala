@@ -13,8 +13,6 @@ package graft.url
 final case class UrlChain(normalizers: Seq[UrlNormalizer], filters: Seq[UrlFilter]) {
   private val (pre, post) = normalizers.partition(_ == AjaxNormalizer)
 
-  def isEmpty: Boolean = normalizers.isEmpty && filters.isEmpty
-
   /** Raw → normalized URL; null when unparseable or a normalizer drops it. */
   def normalize(raw: String): String = {
     var u = raw

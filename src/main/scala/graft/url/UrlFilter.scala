@@ -312,11 +312,4 @@ object UrlFilters {
     }
     false
   }
-
-  /** The default canonicalize + filter (the empty [[UrlChain]]'s static
-    * form, called by the generated `url_canon_filter` code); null = dropped. */
-  def canonicalizeAndFilter(raw: String): String = {
-    val c = Urls.canonicalize(raw)
-    if (c != null && accept(c)) c else null
-  }
 }

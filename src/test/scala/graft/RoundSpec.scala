@@ -96,7 +96,7 @@ class RoundSpec extends AnyFunSuite with SparkSpecBase {
     val rootB = tmp()
     // uninterrupted: 2 rounds in one driver call
     val (sa, _) = CrawlRound.syntheticCrawl(spark, web, cfg, rounds = 2, rootA)
-    // interrupted: 1 round, then a "new process" resumes from the manifest
+    // interrupted: 1 round, then a "new process" resumes from the snapshot log
     val (sb, _) = CrawlRound.syntheticCrawl(spark, web, cfg, rounds = 1, rootB)
     val storeB2 = new graft.store.SnapshotStore(rootB)
     assert(storeB2.lastCompletedRound.contains(1))

@@ -270,7 +270,7 @@ class StoreAndGenerate2Spec extends AnyFunSuite with SparkSpecBase {
     import spark.implicits._
     val root = tmp()
     val (store, _) = CrawlRound.syntheticCrawl(spark, web, cfg, rounds = 3, root)
-    store.resetTo("frontier", 1) // rewind two rounds; seen_bloom manifest is at r3
+    store.resetTo("frontier", 1) // rewind two rounds; seen_bloom's current snapshot is at r3
     val fetcher = graft.fetch.SyntheticFetcher(web, 10)
     val stats = CrawlRound.crawl(spark, store, fetcher, cfg, 2, 1700000000000L)
     assert(stats.map(_.round) == Seq(2, 3))

@@ -78,6 +78,7 @@ class UpdateDbColumnarSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("columnar ≡ typed with the seen bloom + in-task redirects") {
+    // the columnar merge splits off bloom-missing links; the typed one merges unsplit
     assertSame(base.copy(useSeenBloom = true, redirectMax = 2))
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.url.{UrlFilters, Urls}
+import graft.url.{UrlChain, UrlFilters, Urls}
 
 /** ScalaCheck properties over the URL core (SURVEY.md §5 "property tests
   * we add"): idempotency, totality (never throws), hash stability. */
@@ -25,7 +25,7 @@ class UrlPropertySpec extends AnyFunSuite {
 
   test("canonicalize and filter are total (no exceptions) on arbitrary strings") {
     check("totality", Prop.forAll(garbageGen) { s =>
-      Urls.canonicalize(s); UrlFilters.accept(s); UrlFilters.canonicalizeAndFilter(s)
+      Urls.canonicalize(s); UrlFilters.accept(s); UrlChain.Empty(s)
       Urls.hostOf(s); Urls.hash64(s); Urls.interleaveHash(s); Urls.rollingHash64(s)
       true
     })

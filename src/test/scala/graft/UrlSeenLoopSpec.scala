@@ -39,8 +39,8 @@ class UrlSeenLoopSpec extends AnyFunSuite with SparkSpecBase {
     for ((u, row) <- on) assert(row == off(u), s"row mismatch for $u: $row vs ${off(u)}")
   }
 
-  test("bloom on ≡ bloom off with the typed updatedb and in-task redirects") {
-    val c = baseCfg.copy(columnarUpdateDb = false, redirectMax = 2)
+  test("bloom on ≡ bloom off with the columnar updatedb and in-task redirects") {
+    val c = baseCfg.copy(columnarUpdateDb = true, redirectMax = 2)
     val on = frontierRows(tmp(), c.copy(useSeenBloom = true))
     val off = frontierRows(tmp(), c.copy(useSeenBloom = false))
     assert(on.keySet == off.keySet)
