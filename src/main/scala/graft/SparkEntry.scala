@@ -97,10 +97,9 @@ object SparkEntry {
     "q_repetition" -> ((s, d) => TextOps.repetitionSignals(docs(s, d))),
     "q_lang_guess" -> ((s, d) => TextOps.langGuess(docs(s, d))),
     "q_doc_fingerprint" -> ((s, d) => TextOps.fingerprint(docs(s, d))),
-    "q_text_fingerprint64" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      docs(s, d).select(col("doc_id"), call_function("text_fingerprint64", col("text")).as("fp64"))
-    }),
+    "q_text_fingerprint64" -> ((s, d) =>
+      docs(s, d).select(col("doc_id"),
+        graft.functions.GraftFunctions.text_fingerprint64(col("text")).as("fp64"))),
     // --- deduplication suite ---
     "q_dedup_exact" -> ((s, d) => DedupOps.exactDups(docsAug(s, d))),
     // unigram: df cut DISABLED (1.0) — the synthetic ~30-word vocab makes

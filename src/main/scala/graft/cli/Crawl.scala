@@ -162,8 +162,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
       outlinks
     ))).toDF("url", "protocol_status", "content_type", "mime", "signature",
       "title", "text", "n_spans", "outlinks")
-    graft.functions.GraftFunctions.register(spark)
-    chain(row.withColumn("host", call_function("url_host", col("url"))))
+    chain(row.withColumn("host", graft.functions.GraftFunctions.url_host(col("url"))))
   }
 
   /** scoring-link's score refresh (reference bin/crawl's webgraph →
@@ -283,8 +282,7 @@ case class Crawl(spark: SparkSession, storeRoot: String, cfg: CrawlConfig, fetch
         element_at(textSpans, 1).getField("text").as("title"),
         concat_ws(" ", transform(textSpans, s => s.getField("text"))).as("text"),
         col("score"), hex(col("signature")).as("signature"), col("round"))
-      graft.functions.GraftFunctions.register(spark)
-      val indexed = chain(doc.withColumn("host", call_function("url_host", col("url"))))
+      val indexed = chain(doc.withColumn("host", graft.functions.GraftFunctions.url_host(col("url"))))
       // per-round derived output: re-exporting an older round after a newer
       // one is a normal operation (allowRewind, like fetched/parsed/host_stats)
       store.commit("index", indexed, roundNo, allowRewind = true)

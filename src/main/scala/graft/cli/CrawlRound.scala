@@ -7,6 +7,7 @@ import org.apache.spark.util.CollectionAccumulator
 import graft.fetch.{FetchPartitionMetrics, FetchedPage, Fetcher, PolitenessExecutor, SyntheticFetcher}
 import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.{CrawlConfig, Dedup, Inject, UpdateDb}
+import graft.functions.GraftFunctions
 import graft.generate.Generator
 import graft.parse.Parse
 import graft.schema._
@@ -140,7 +141,8 @@ object CrawlRound {
     // rows (null = default delay, filtered before the broadcast)
     val hostDelays: Option[org.apache.spark.sql.DataFrame] =
       cfg.fetchDelayExpr.flatMap(e => prevHostStats.map(
-        _.select(col("host"), expr(e).as("delay_ms")).filter(col("delay_ms").isNotNull)))
+        _.select(col("host"), GraftFunctions.sqlExpr(spark, e).as("delay_ms"))
+          .filter(col("delay_ms").isNotNull)))
 
     // domain mode's exactness-vs-skew lineage warning: count domains whose
     // eligible run exceeded the per-partition target (no extra job — the
@@ -271,13 +273,12 @@ object CrawlRound {
         // lazy: creating the checkpoint runs the head's exchange (generate's);
         // this write then fetches every page once and keeps it
         val pages = checkpoint(pages0, eager = false)
-        graft.functions.GraftFunctions.register(spark)
         store.commit("fetched",
           pages.toDF().observe(obsFetch, count(lit(1)).as("fetched"))
             .drop("spans")
             // resolved mime (header-normalized | by-extension | default) as a
             // first-class crawl_fetch column, like the reference's parse_data
-            .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url"))),
+            .withColumn("mime", GraftFunctions.mime_resolve(col("content_type"), col("url"))),
           round, allowRewind = true)
         (pages, dbIn)
       }
@@ -344,7 +345,6 @@ object CrawlRound {
       def layout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
         if (cfg.frontierBuckets <= 0) df
         else {
-          graft.functions.GraftFunctions.register(spark)
           df.repartition(cfg.frontierBuckets, pmod(col("url_hash"), lit(cfg.frontierBuckets)))
             .sortWithinPartitions(reverse(col("host")), col("url_hash"))
         }

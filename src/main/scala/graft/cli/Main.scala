@@ -52,7 +52,6 @@ object Main {
                  else builder.master(sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     val web = graft.fixtures.SyntheticWeb(graft.fixtures.WebConfig(
       nHosts = sys.env.getOrElse("GRAFT_WEB_HOSTS", "1000").toInt,

@@ -1,6 +1,6 @@
 package graft.fetch
 
-import graft.fixtures.{PageBehavior, RobotsPolicy, SyntheticWeb}
+import graft.fixtures.{PageBehavior, SyntheticWeb}
 import graft.schema.{Doc, Span}
 
 /** Protocol layer. The reference's Protocol plugin surface
@@ -30,20 +30,11 @@ trait Fetcher extends Serializable {
     * that serve pre-parsed single documents (the synthetic span path)
     * override to false. */
   def multiDoc: Boolean = true
-  /** Raw robots policy for a host (parsed robots.txt equivalent). */
-  def robots(host: String): RobotsPolicy
 
-  /** Full per-path robots rules for a host; None = robots endpoint 5xx
-    * (defer visits). The executor checks isAllowed(path) PER FETCH URL —
-    * the reference does this in FetcherThread per fetch item. Default
-    * implementation derives host-level rules from [[robots]], so simple
-    * fetchers only implement the policy form. */
-  def robotsRules(host: String): Option[Robots.RobotRules] = robots(host) match {
-    case RobotsPolicy.AllowAll       => Some(Robots.AllowAll)
-    case RobotsPolicy.DenyAll        => Some(Robots.DenyAll)
-    case RobotsPolicy.CrawlDelay(s)  => Some(Robots.RobotRules(Seq.empty, Some(s.toDouble)))
-    case RobotsPolicy.Unavailable5xx => None
-  }
+  /** Per-path robots rules for a host (its parsed robots.txt); None = robots
+    * endpoint 5xx (defer visits). The executor checks isAllowed(path) PER
+    * FETCH URL — the reference does this in FetcherThread per fetch item. */
+  def robotsRules(host: String): Option[Robots.RobotRules]
 }
 
 /** Serves the synthetic web as RAW HTML BYTES instead of pre-parsed spans:
@@ -61,7 +52,6 @@ case class HtmlSyntheticFetcher(web: SyntheticWeb, latencyMs: Long) extends Fetc
         content = web.renderHtml(url).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     else r
   }
-  override def robots(host: String): RobotsPolicy = inner.robots(host)
   override def robotsRules(host: String): Option[Robots.RobotRules] = inner.robotsRules(host)
 }
 
@@ -75,10 +65,6 @@ case class SyntheticFetcher(web: SyntheticWeb, latencyMs: Long) extends Fetcher 
     case RedirectTemp(to) => ProtocolResponse("TEMP_MOVED", to, null, null, latencyMs)
     case RedirectPerm(to) => ProtocolResponse("MOVED", to, null, null, latencyMs)
     case ServerError      => ProtocolResponse("RETRY", null, null, null, latencyMs)
-  }
-  override def robots(host: String): RobotsPolicy = web.robotsTxt(host) match {
-    case None       => RobotsPolicy.Unavailable5xx
-    case Some(body) => Robots.toPolicy(Robots.parse(body, "graftbot"))
   }
   /** Fetch + parse the host's real robots.txt body (5xx body → defer). */
   override def robotsRules(host: String): Option[Robots.RobotRules] = web.robotsTxt(host) match {

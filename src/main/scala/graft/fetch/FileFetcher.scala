@@ -2,8 +2,6 @@ package graft.fetch
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.fixtures.RobotsPolicy
-
 /** file:// protocol behind the [[Fetcher]] trait — the reference's
   * protocol-file plugin (reference/src/plugin/protocol-file File.java,
   * FileResponse.java): crawl a local or mounted corpus through the SAME
@@ -90,5 +88,5 @@ case class FileFetcher(maxContentBytes: Int = 4 * 1024 * 1024) extends Fetcher {
     }
   }
 
-  override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+  override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
 }

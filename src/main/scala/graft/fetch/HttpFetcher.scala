@@ -4,8 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
-import graft.fixtures.RobotsPolicy
-
 /** Real HTTP protocol behind the [[Fetcher]] trait (the reference's
   * protocol-http / protocol-okhttp plugins behind ProtocolFactory —
   * reference/src/java/org/apache/nutch/protocol/ProtocolFactory.java:243,
@@ -161,10 +159,5 @@ case class HttpFetcher(
       case _: InterruptedException => Thread.currentThread().interrupt(); None
       case scala.util.control.NonFatal(_) => None // unreachable robots → defer
     }
-  }
-
-  override def robots(host: String): RobotsPolicy = robotsRules(host) match {
-    case None => RobotsPolicy.Unavailable5xx
-    case Some(rules) => Robots.toPolicy(rules)
   }
 }

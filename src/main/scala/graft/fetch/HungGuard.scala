@@ -2,8 +2,6 @@ package graft.fetch
 
 import java.util.concurrent.{Executors, Future, ThreadFactory, TimeUnit, TimeoutException}
 
-import graft.fixtures.RobotsPolicy
-
 /** Hung-fetch guard (the reference's mapred.task.timeout protection,
   * Fetcher.java hung-thread reporting): wraps a real Fetcher so one stuck
   * network call cannot wedge the whole partition. The call runs on a
@@ -35,6 +33,5 @@ case class HungGuardFetcher(inner: Fetcher, timeoutMs: Long) extends Fetcher {
     }
   }
 
-  override def robots(host: String): RobotsPolicy = inner.robots(host)
   override def robotsRules(host: String): Option[Robots.RobotRules] = inner.robotsRules(host)
 }

@@ -2,8 +2,6 @@ package graft.fetch
 
 import java.util.Locale
 
-import graft.fixtures.RobotsPolicy
-
 /** Minimal RFC 9309 robots.txt parser — the subset the reference honors
   * (reference/src/java/org/apache/nutch/protocol/RobotRulesParser.java via
   * crawler-commons): user-agent group matching (longest-match, * fallback),
@@ -123,12 +121,4 @@ object Robots {
     else RobotRules(chosen.flatMap(_.rules).toSeq, chosen.flatMap(_.crawlDelay).headOption,
       sitemaps.toSeq)
   }
-
-  /** Classify parsed rules into the executor's gate policy. */
-  def toPolicy(rules: RobotRules): RobotsPolicy =
-    if (!rules.isAllowed("/")) RobotsPolicy.DenyAll
-    else rules.crawlDelay match {
-      case Some(d) => RobotsPolicy.CrawlDelay(math.ceil(d).toInt)
-      case None    => RobotsPolicy.AllowAll
-    }
 }

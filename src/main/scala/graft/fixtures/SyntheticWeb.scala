@@ -37,7 +37,7 @@ object PageBehavior {
   case object ServerError extends PageBehavior // transient → fetch_retry
 }
 
-/** Per-host robots policy. */
+/** Per-host robots policy of the fixture web (served as robots.txt bodies). */
 sealed trait RobotsPolicy extends Serializable
 object RobotsPolicy {
   case object AllowAll extends RobotsPolicy

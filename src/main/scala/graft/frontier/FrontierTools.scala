@@ -3,6 +3,8 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{url_canon_filter, url_domain, url_hash64, url_hash_interleave,
+  url_host}
 import graft.schema.FrontierEntry
 
 /** Frontier maintenance tools beyond the round loop. */
@@ -36,17 +38,16 @@ object FrontierTools {
                          purge404: Boolean): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = if (purge404)
       frontier.toDF().filter(col("status") =!= graft.schema.CrawlStatus.DB_GONE.toInt)
     else frontier.toDF()
     val cleaned = base
-      .withColumn("_canon", graft.functions.GraftFunctions.url_canon_filter(col("url"), cfg.urlChain))
+      .withColumn("_canon", url_canon_filter(col("url"), cfg.urlChain))
       .filter(col("_canon").isNotNull)
       .withColumn("url", col("_canon"))
-      .withColumn("url_hash", call_function("url_hash64", col("url")))
-      .withColumn("host", call_function("url_host", col("url")))
-      .withColumn("domain", call_function("url_domain", col("host")))
+      .withColumn("url_hash", url_hash64(col("url")))
+      .withColumn("host", url_host(col("url")))
+      .withColumn("domain", url_domain(col("host")))
       .drop("_canon")
       .as[FrontierEntry]
     if (cfg.urlChain.normalizers.isEmpty) cleaned else mergeDbs(Seq(cleaned))
@@ -119,7 +120,6 @@ object FrontierTools {
   ): Dataset[graft.schema.FetchTask] = {
     val spark = urlLines.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // normalize and filter are INDEPENDENT switches like the reference's
     // -normalize / -filter flags (FreeGenerator.java:85-93): the two halves
     // of the configured chain
@@ -136,9 +136,9 @@ object FrontierTools {
     urls.distinct()
       .select(
         col("value").as("url"),
-        call_function("url_hash64", col("value")).as("url_hash"),
-        call_function("url_host", col("value")).as("host"),
-        call_function("url_domain", call_function("url_host", col("value"))).as("domain"),
+        url_hash64(col("value")).as("url_hash"),
+        url_host(col("value")).as("host"),
+        url_domain(url_host(col("value"))).as("domain"),
         lit(graft.schema.CrawlStatus.DB_UNFETCHED).as("status"),
         lit(now).as("fetch_time"),
         lit(0).as("retries"),
@@ -149,7 +149,7 @@ object FrontierTools {
         lit(1).as("depth"))
       .repartition(cfg.numFetchPartitions,
         graft.generate.Generator.partitionKey(col("url"), col("host"), Map.empty))
-      .sortWithinPartitions(call_function("url_hash_interleave", col("url")))
+      .sortWithinPartitions(url_hash_interleave(col("url")))
       .as[graft.schema.FetchTask]
   }
 }

@@ -3,6 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{url_domain, url_hash64, url_host}
 import graft.schema.{CrawlStatus, FrontierEntry, FrontierUpdate}
 
 /** Whole-stage-codegen updatedb: the same state machine as UpdateDb.merge,
@@ -32,7 +33,6 @@ object UpdateDbColumnar {
   ): Dataset[FrontierEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     // URL-seen bloom prefilter (north rule): discovered links whose hash the
     // bloom has never seen are DEFINITELY new — they cannot match a frontier
@@ -53,7 +53,7 @@ object UpdateDbColumnar {
           // codegen'd membership probe (BloomMightContainLong) — the whole
           // 16M-row/round link split stays inside whole-stage codegen
           val withHash = linked0.toDF()
-            .withColumn("_h", call_function("url_hash64", col("url")))
+            .withColumn("_h", url_hash64(col("url")))
           val mightContain = graft.seen.UrlSeen.mightContainCol(spark, sf, col("_h"))
           val seenSide = withHash.filter(mightContain)
           val newCand = withHash.filter(!mightContain)
@@ -66,8 +66,8 @@ object UpdateDbColumnar {
           val direct = newRows.select(
             col("url"),
             col("_h").as("url_hash"),
-            call_function("url_host", col("url")).as("host"),
-            call_function("url_domain", call_function("url_host", col("url"))).as("domain"),
+            url_host(col("url")).as("host"),
+            url_domain(url_host(col("url"))).as("domain"),
             lit(DB_UNFETCHED).cast("byte").as("status"),
             lit(now).as("fetch_time"),
             lit(0).as("retries"),
@@ -323,8 +323,7 @@ object UpdateDbColumnar {
            .otherwise(newMeta))
       }
 
-    val host = call_function("url_host", url)
-    graft.functions.GraftFunctions.register(spark)
+    val host = url_host(url)
 
     val result = joined
       // drop: nothing at all, or link-only when additions are disallowed
@@ -333,9 +332,9 @@ object UpdateDbColumnar {
       .filter(if (cfg.purgeOrphans) orphanStatus =!= DB_ORPHAN else lit(true))
       .select(
         url.as("url"),
-        coalesce(col("url_hash"), call_function("url_hash64", url)).as("url_hash"),
+        coalesce(col("url_hash"), url_hash64(url)).as("url_hash"),
         coalesce(col("host"), host).as("host"),
-        coalesce(col("domain"), call_function("url_domain", host)).as("domain"),
+        coalesce(col("domain"), url_domain(host)).as("domain"),
         orphanStatus.cast("byte").as("status"),
         when(overflow, coalesce(col("f_time"), lit(now))).otherwise(newTime).as("fetch_time"),
         when(overflow, lit(0)).otherwise(newRetries).cast("int").as("retries"),

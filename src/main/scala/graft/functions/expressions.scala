@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.url.{UrlChain, Urls}
+import graft.url.{UrlChain, UrlFilter, Urls}
 
 /** Native Catalyst expressions for the URL hot path (SURVEY.md §4 "Custom
   * Catalyst inventory"). Each generates Java code calling the static
@@ -61,21 +61,15 @@ case class UrlCanonicalize(child: Expression) extends StaticStringExpr {
   override def prettyName: String = "url_canonicalize"
 }
 
-/** An expression over a [[UrlChain]]: the chain is attached to the
+/** Raw URL → crawl URL through `chain` (null = dropped); the empty chain is
+  * canonicalize + the default filters. The chain is attached to the
   * generated class as a reference object (one call per row on the final
   * UrlChain, inside whole-stage codegen, like [[BloomMightContainLong]]'s
   * broadcast). */
-trait UrlChainExpr extends UnaryExpression {
-  def chain: UrlChain
-  protected def chainRef(ctx: CodegenContext): String =
-    ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName)
-}
-
-/** Raw URL → crawl URL through `chain` (null = dropped); the empty chain is
-  * canonicalize + the default filters. */
 case class UrlCanonFilter(child: Expression, chain: UrlChain = UrlChain.Empty)
-    extends StringFnExpr with UrlChainExpr {
-  override protected def callee(ctx: CodegenContext): String = s"${chainRef(ctx)}.apply"
+    extends StringFnExpr {
+  override protected def callee(ctx: CodegenContext): String =
+    ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName) + ".apply"
   override def eval0(s: String): String = chain(s)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_canon_filter"
@@ -203,16 +197,18 @@ case class UrlSurt(child: Expression) extends StaticStringExpr {
   override def prettyName: String = "url_surt"
 }
 
-/** URL filter predicate through `chain`'s filters (true = keep); the empty
-  * chain is the default filters. */
-case class UrlAccept(child: Expression, chain: UrlChain = UrlChain.Empty) extends UrlChainExpr {
+/** URL filter predicate (true = keep); the empty chain is the default
+  * filters. The filter is a reference object, like [[UrlCanonFilter]]'s
+  * chain. */
+case class UrlAccept(child: Expression, urlFilter: UrlFilter = UrlChain.Empty)
+    extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
   override def nullSafeEval(v: Any): Any =
-    chain.accept(v.asInstanceOf[UTF8String].toString)
+    urlFilter.accept(v.asInstanceOf[UTF8String].toString)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val chainTerm = chainRef(ctx)
-    defineCodeGen(ctx, ev, c => s"$chainTerm.accept($c.toString())")
+    val filterTerm = ctx.addReferenceObj("urlFilter", urlFilter, classOf[UrlFilter].getName)
+    defineCodeGen(ctx, ev, c => s"$filterTerm.accept($c.toString())")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_accept"

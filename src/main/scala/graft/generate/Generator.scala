@@ -94,7 +94,8 @@ object Generator {
     // user predicate over frontier columns — the reference's JEXL expression
     // filter (CrawlDatum.execute), deliberately re-based on Spark SQL text so
     // Catalyst can push/reorder it
-    val filtered = cfg.generateExprFilter.fold(base)(e => base.filter(expr(e)))
+    val filtered = cfg.generateExprFilter.fold(base)(e => base.filter(
+      graft.functions.GraftFunctions.sqlExpr(frontier.sparkSession, e)))
     // hostdb exception throttle (reference generator hostdb checks): hosts
     // with too many cumulative fetch failures skipped this round. The bad-host
     // set is tiny by construction → broadcast anti-join, no frontier shuffle.
@@ -124,7 +125,6 @@ object Generator {
   ): (Dataset[FetchTask], Dataset[FrontierEntry]) = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     val p = cfg.numFetchPartitions
     val perPartitionLimit = math.max(1L, (cfg.topN + p - 1) / p)
@@ -240,7 +240,8 @@ object Generator {
       }
       // politeness interleave: segments contiguous, same-host URLs spread out
       // within each segment
-      .sortWithinPartitions(col("segment"), call_function("url_hash_interleave", col("url")))
+      .sortWithinPartitions(col("segment"),
+        graft.functions.GraftFunctions.url_hash_interleave(col("url")))
 
     // mark-back join (reference Generator.java:1002-1040): stamp _ngt_.
     // The selected set is ≤ topN×segments rows (tiny vs the frontier):

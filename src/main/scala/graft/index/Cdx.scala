@@ -44,11 +44,10 @@ object Cdx {
     * metadata/warcinfo records live in the shards but are not lookup keys,
     * like the reference writer). */
   def index(records: DataFrame, nFiles: Int = 16, filePrefix: String = "warc"): DataFrame = {
-    graft.functions.GraftFunctions.register(records.sparkSession)
     layout(records, nFiles, filePrefix)
       .filter(col("warc_type").isin("response", "revisit"))
       .select(
-        call_function("url_surt", col("target_uri")).as("urlkey"),
+        graft.functions.GraftFunctions.url_surt(col("target_uri")).as("urlkey"),
         date_format(timestamp_millis(col("date")), "yyyyMMddHHmmss").as("cdx_timestamp"),
         col("target_uri").as("url"),
         coalesce(col("identified_payload_type"), lit("unk")).as("mime"),

@@ -43,7 +43,8 @@ case class IndexWriterExchange(routes: Seq[(IndexWriter, Option[String])]) {
     // one upstream materialization, many sinks
     val cached = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try routes.foreach { case (w, pred) =>
-      val slice = pred.fold(cached)(p => cached.filter(org.apache.spark.sql.functions.expr(p)))
+      val slice = pred.fold(cached)(p => cached.filter(
+        graft.functions.GraftFunctions.sqlExpr(cached.sparkSession, p)))
       w.write(slice, round)
     } finally cached.unpersist()
   }

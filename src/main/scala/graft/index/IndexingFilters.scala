@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{mime_resolve, url_host, url_tld}
 
 /** The reference's IndexingFilter plugin chain (reference
   * src/java/org/apache/nutch/indexer/IndexingFilters.java), re-expressed as
@@ -34,10 +35,9 @@ case class BasicFieldsFilter(maxTitleLength: Int = 100, maxContentLength: Int = 
     extends IndexingFilter {
   override def name: String = "index-basic"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     var d = docs
     if (!IndexingFilter.hasCol(d, "host"))
-      d = d.withColumn("host", call_function("url_host", col("url")))
+      d = d.withColumn("host", url_host(col("url")))
     if (maxTitleLength > -1 && IndexingFilter.hasCol(d, "title"))
       d = d.withColumn("title", substring(col("title"), 1, maxTitleLength))
     if (maxContentLength > -1 && IndexingFilter.hasCol(d, "text"))
@@ -54,10 +54,9 @@ case class BasicFieldsFilter(maxTitleLength: Int = 100, maxContentLength: Int = 
 case class MoreFieldsFilter() extends IndexingFilter {
   override def name: String = "index-more"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val mime: Column =
       if (IndexingFilter.hasCol(docs, "mime")) col("mime")
-      else call_function("mime_resolve",
+      else mime_resolve(
         if (IndexingFilter.hasCol(docs, "content_type")) col("content_type")
         else lit(null).cast("string"),
         col("url"))
@@ -75,11 +74,10 @@ case class MoreFieldsFilter() extends IndexingFilter {
 case class TldFilter() extends IndexingFilter {
   override def name: String = "tld"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val host =
       if (IndexingFilter.hasCol(docs, "host")) col("host")
-      else call_function("url_host", col("url"))
-    docs.withColumn("tld", call_function("url_tld", host))
+      else url_host(col("url"))
+    docs.withColumn("tld", url_tld(host))
   }
 }
 
@@ -123,11 +121,10 @@ case class MimeTypeFilter(
     defaultAccept: Boolean = true) extends IndexingFilter {
   override def name: String = "mimetype-filter"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val mime: Column =
       if (IndexingFilter.hasCol(docs, "type")) col("type")
       else if (IndexingFilter.hasCol(docs, "mime")) col("mime")
-      else call_function("mime_resolve",
+      else mime_resolve(
         if (IndexingFilter.hasCol(docs, "content_type")) col("content_type")
         else lit(null).cast("string"),
         col("url"))
@@ -150,7 +147,6 @@ case class AnchorFilter(linkdb: DataFrame, deduplicateByHost: Boolean = false)
     extends IndexingFilter {
   override def name: String = "index-anchor"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val withText = filter(col("inlinks"),
       i => i.getField("anchor").isNotNull && i.getField("anchor") =!= "")
     val anchors: Column =
@@ -161,7 +157,7 @@ case class AnchorFilter(linkdb: DataFrame, deduplicateByHost: Boolean = false)
         val m = aggregate(withText,
           map_from_arrays(array().cast("array<string>"), array().cast("array<string>")),
           (acc, i) => {
-            val h = call_function("url_host", i.getField("from_url"))
+            val h = url_host(i.getField("from_url"))
             when(h.isNull || map_contains_key(acc, h), acc)
               .otherwise(map_concat(acc, map(h, i.getField("anchor"))))
           })
@@ -181,14 +177,13 @@ case class LinksFilter(
     ignoreInternal: Boolean = false) extends IndexingFilter {
   override def name: String = "index-links"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
-    val pageHost = call_function("url_host", col("url"))
+    val pageHost = url_host(col("url"))
     val kept =
       if (ignoreInternal)
-        filter(col("inlinks"), i => call_function("url_host", i.getField("from_url")) =!= pageHost)
+        filter(col("inlinks"), i => url_host(i.getField("from_url")) =!= pageHost)
       else col("inlinks")
     val vals = transform(kept, i =>
-      if (hostsOnly) call_function("url_host", i.getField("from_url")) else i.getField("from_url"))
+      if (hostsOnly) url_host(i.getField("from_url")) else i.getField("from_url"))
     val prepared = linkdb.select(col("url"), col("inlinks"))
     docs.join(prepared, Seq("url"), "left")
       .withColumn("inlinks", {
@@ -243,7 +238,7 @@ case class ArbitraryFieldsFilter(fields: Seq[(String, String, Boolean)]) extends
   override def name: String = "index-arbitrary"
   override def apply(docs: DataFrame): DataFrame =
     fields.foldLeft(docs) { case (d, (field, exprText, overwrite)) =>
-      val v = expr(exprText)
+      val v = GraftFunctions.sqlExpr(d.sparkSession, exprText)
       if (!IndexingFilter.hasCol(d, field) || overwrite) d.withColumn(field, v)
       else d.schema(field).dataType match {
         case _: org.apache.spark.sql.types.ArrayType =>
@@ -270,7 +265,6 @@ case class LanguageFilter(
     detectFromText: Boolean = true) extends IndexingFilter {
   override def name: String = "language-identifier"
   override def apply(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val candidates: Seq[Column] = Seq(
       if (IndexingFilter.hasCol(docs, "parse_meta"))
         Some(element_at(col("parse_meta"), "lang")) else None,
@@ -340,7 +334,7 @@ case class GeoIpFilter(ranges: DataFrame, ipCol: String = "ip") extends Indexing
   * as the generator's expression filter). */
 case class ExprIndexingFilter(predicate: String) extends IndexingFilter {
   override def name: String = "index-jexl-filter"
-  override def apply(docs: DataFrame): DataFrame = docs.filter(expr(predicate))
+  override def apply(docs: DataFrame): DataFrame = docs.filter(GraftFunctions.sqlExpr(docs.sparkSession, predicate))
 }
 
 /** One field replacement of the index-replace plugin: regex-replace
@@ -381,11 +375,10 @@ case class ReplaceScope(
 case class ReplaceFilter(scopes: Seq[ReplaceScope]) extends IndexingFilter {
   override def name: String = "index-replace"
   override def apply(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     scopes.foldLeft(docs) { (d0, scope) =>
       val hostCol: Column =
         if (IndexingFilter.hasCol(d0, "host")) col("host")
-        else call_function("url_host", col("url"))
+        else url_host(col("url"))
       val inScope: Column = Seq(
         scope.hostMatch.map(p => hostCol.rlike(p)),
         scope.urlMatch.map(p => col("url").rlike(p))

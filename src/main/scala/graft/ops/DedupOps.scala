@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{minhash_bands, sorted_intersect_size, text_hash_set,
+  text_shingles, text_simhash}
+
 /** Deduplication operators for training-data pipelines.
   *
   * Tiers, trading exactness for scale:
@@ -53,11 +56,9 @@ object DedupOps {
     * n-grams (n = 1: its non-empty whitespace tokens), persisted. The plan
     * is the same for every call with the same (docs, n), so the n-gram,
     * MinHash and cluster queries over one corpus share one cached set. */
-  def docHashSets(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def docHashSets(docs: DataFrame, n: Int): DataFrame =
     persistSpillable(docs.select(col("doc_id"),
-      call_function("text_hash_set", col("text"), lit(n)).as("set")))
-  }
+      text_hash_set(col("text"), lit(n)).as("set")))
 
   /** Document-frequency cut: drop terms present in more than
     * maxDfFraction × nDocs documents BEFORE the candidate self-join.
@@ -100,7 +101,7 @@ object DedupOps {
     def side(s: String) = sets.select(col("doc_id").as(s"id_$s"), col("set").as(s"set_$s"))
     cand.join(side("a"), "id_a").join(side("b"), "id_b")
       .select(col("id_a"), col("id_b"),
-        call_function("sorted_intersect_size", col("set_a"), col("set_b")).as("inter"),
+        sorted_intersect_size(col("set_a"), col("set_b")).as("inter"),
         (size(col("set_a")) + size(col("set_b"))).as("sz"))
       .filter(col("inter") > 0)
       .select(col("id_a"), col("id_b"),
@@ -140,12 +141,10 @@ object DedupOps {
 
   /** Exploded (doc_id, shingle-string) pairs WITHOUT the distinct, through
     * the codegen'd TextShingles kernel (one byte scan per doc). */
-  private def docShinglesExploded(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private def docShinglesExploded(docs: DataFrame, n: Int): DataFrame =
     docs
       .select(col("doc_id"),
-        explode(call_function("text_shingles", col("text"), lit(n))).as("shingle"))
-  }
+        explode(text_shingles(col("text"), lit(n))).as("shingle"))
 
   /** Distinct (doc_id, shingle-string) pairs. */
   def docShinglesRaw(docs: DataFrame, n: Int): DataFrame =
@@ -173,8 +172,8 @@ object DedupOps {
       seed: Long = 42L
   ): DataFrame = {
     val sets = docHashSets(docs, shingleN)
-    val buckets = sets.select(col("doc_id"), posexplode(call_function("minhash_bands",
-      col("set"), lit(numHashes), lit(bands), lit(seed))).as(Seq("band", "bucket")))
+    val buckets = sets.select(col("doc_id"), posexplode(
+      minhash_bands(col("set"), numHashes, bands, seed)).as(Seq("band", "bucket")))
     val cand = buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -194,12 +193,10 @@ object DedupOps {
     * VecExpressionsSpec); docs with no non-empty token emit no row, same as
     * the aggregation form. Assumes unique doc_id per row (true of every
     * corpus table; the aggregation form merged duplicate ids instead). */
-  def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def simhash(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), call_function("text_simhash", col("text")).as("simhash"))
+      .select(col("doc_id"), text_simhash(col("text")).as("simhash"))
       .filter(col("simhash").isNotNull)
-  }
 
   /** SimHash near-dup pairs with hamming distance ≤ maxDist, found via
     * 16-bit chunk banding (pigeonhole: ≤3 differing bits ⇒ ≥1 of 4 chunks

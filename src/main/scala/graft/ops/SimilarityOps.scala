@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.GraftFunctions.vec_dot
+
 /** Similarity search over an embedding column (array<float>).
   *
   *  - bruteTopK: exact cosine top-k for a (small, broadcast) query set —
@@ -16,17 +18,14 @@ import org.apache.spark.sql.expressions.Window
   */
 object SimilarityOps {
 
-  /** Strict left-to-right dot product of two array<float|double> columns (as
-    * double) — the codegen'd VecDot kernel, IEEE-identical to the former
-    * `aggregate(zip_with(...))` fold (HOFs are CodegenFallback: interpreted
-    * per element; inside an all-pairs join that tax multiplies by the match
-    * count). Callers must register GraftFunctions (every DataFrame-level
-    * entry point here does). */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  // dot products are the codegen'd VecDot kernel (`vec_dot`): a strict
+  // left-to-right sum as double, IEEE-identical to the former
+  // `aggregate(zip_with(...))` fold (HOFs are CodegenFallback: interpreted
+  // per element; inside an all-pairs join that tax multiplies by the match
+  // count)
+  def norm(a: Column): Column = sqrt(vec_dot(a, a))
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  def cosine(a: Column, b: Column): Column = vec_dot(a, b) / (norm(a) * norm(b))
 
   /** Cosine in floor-scaled basis points: floor(cos × 10⁴) of the identical
     * IEEE double — engine-neutral (no round() path divergence). */
@@ -44,7 +43,6 @@ object SimilarityOps {
   /** Exact cosine top-k of each query vector (vec_id ∈ queryIds) against the
     * whole corpus. The query side is broadcast — no corpus shuffle. */
   def bruteTopK(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val q = broadcast(
       emb.filter(col("vec_id").isin(queryIds: _*))
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -54,7 +52,7 @@ object SimilarityOps {
       .crossJoin(q)
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
-        cosineBpPre(dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
+        cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
     val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
     scored
       .withColumn("rnk", row_number().over(w))
@@ -64,12 +62,11 @@ object SimilarityOps {
 
   /** All pairs with cosine ≥ threshold among vec_id < maxId (exact, bounded). */
   def cosinePairs(emb: DataFrame, threshold: Double, maxId: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        cosineBpPre(dot(col("a.embedding"), col("b.embedding")),
+        cosineBpPre(vec_dot(col("a.embedding"), col("b.embedding")),
           col("a.nrm"), col("b.nrm")).as("cos_bp"))
       .filter(col("cos_bp") >= (threshold * 10000).toLong)
   }
@@ -95,7 +92,7 @@ object SimilarityOps {
     * dot/norm against a literal array — stays in codegen. */
   private def cosineToLit(embCol: Column, v: Array[Double]): Column = {
     val vn = math.sqrt(v.map(x => x * x).sum)
-    dot(embCol, typedLit(v.toSeq)) / (norm(embCol) * vn)
+    vec_dot(embCol, typedLit(v.toSeq)) / (norm(embCol) * vn)
   }
 
   /** cosineToLit with the row norm precomputed in `nrmCol` — identical IEEE
@@ -103,7 +100,7 @@ object SimilarityOps {
     * row instead of once per centroid. */
   private def cosineToLitPre(embCol: Column, nrmCol: Column, v: Array[Double]): Column = {
     val vn = math.sqrt(v.map(x => x * x).sum)
-    dot(embCol, typedLit(v.toSeq)) / (nrmCol * vn)
+    vec_dot(embCol, typedLit(v.toSeq)) / (nrmCol * vn)
   }
 
   /** Nearest-centroid id for every row (argmax over broadcast centroids).
@@ -156,7 +153,6 @@ object SimilarityOps {
     * driver-tiny). */
   def buildIvfIndex(emb: DataFrame, nCentroids: Int = 16, iterations: Int = 3,
                     seed: Long = 42L): IvfIndex = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     // the build makes iterations+2 passes over the corpus (seed pick, Lloyd
     // assignments, final assignment); persist so every pass after the first
     // reads cached columnar batches instead of re-scanning the source —
@@ -221,7 +217,6 @@ object SimilarityOps {
     * from the centroid matrix, exact re-rank inside those cells. Query cost
     * ∝ corpus/nCentroids × nProbe, not corpus. */
   def ivfProbe(index: IvfIndex, queryIds: Seq[Long], k: Int, nProbe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(index.assigned.sparkSession)
     val assigned = index.assigned
     val cellScores = index.centroids.zipWithIndex.map { case (c, i) =>
       struct(cosineToLit(col("qe"), c).as("cos"), lit(i).as("cid"))
@@ -236,7 +231,7 @@ object SimilarityOps {
       .withColumn("_n", norm(col("embedding")))
       .join(q, col("cell") === col("probe") && col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
-        cosineBpPre(dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
+        cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
     val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
     scored.select("qid", "vec_id", "cos_bp").distinct()
       .withColumn("rnk", row_number().over(w))
@@ -258,7 +253,6 @@ object SimilarityOps {
     * their own bucket (plus its hamming-1 neighbors for recall). */
   def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
               planes: Int = 6, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val bucketed = emb.withColumn("bucket", lshBucket(col("embedding"), planes, seed))
     val probes = (0 until planes).map(p => col("bucket").bitwiseXOR(shiftleft(lit(1L), p))) :+ col("bucket")
     val q = broadcast(
@@ -270,7 +264,7 @@ object SimilarityOps {
       .withColumn("_n", norm(col("embedding")))
       .join(q, col("bucket") === col("probe") && col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
-        cosineBpPre(dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
+        cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
     val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
     scored
       .select("qid", "vec_id", "cos_bp").distinct()

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{text_bpe_count, text_count_substr}
+
 /** Text-analysis operators for training-data pipelines over the `documents`
   * table (doc_id, text, lang, source, n_chars).
   *
@@ -18,10 +20,9 @@ object TextOps {
     * whole text once per needle per row; the scanner reads the text's bytes
     * in place and allocates nothing.
     * Same leftmost non-overlapping count, cast to the double the replace
-    * formula's division produced. Callers must have GraftFunctions
-    * registered (every DataFrame-level entry point here does). */
+    * formula's division produced. */
   private def occPlain(padded: Column, needle: String): Column =
-    call_function("text_count_substr", padded, lit(needle)).cast("double")
+    text_count_substr(padded, lit(needle)).cast("double")
 
   /** Token counting: whitespace tokens of the trimmed text. */
   def tokenCount(docs: DataFrame): DataFrame =
@@ -33,13 +34,12 @@ object TextOps {
 
   /** Quality scoring: length, word stats, stopword ratio, composite score. */
   def quality(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val padded = concat(lit(" "), col("text"), lit(" "))
     val words = size(split(trim(col("text")), " ")).cast("double")
     val stops = (occPlain(padded, " the ") + occPlain(padded, " a ") + occPlain(padded, " and ")).cast("double")
     // non-space char count = length − space count (the replace-based form
     // copied the text just to re-measure it)
-    val nonSpace = length(col("text")) - call_function("text_count_substr", col("text"), lit(" "))
+    val nonSpace = length(col("text")) - text_count_substr(col("text"), lit(" "))
     docs.select(
       col("doc_id"),
       length(col("text")).as("chars"),
@@ -70,14 +70,12 @@ object TextOps {
   /** Language-ID heuristic: marker-word scores, argmax with fixed priority.
     * (A real n-gram model would not be oracle-mirrorable; the marker-count
     * heuristic is the deterministic stand-in with identical SQL.) */
-  def langGuess(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def langGuess(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       col("lang").as("lang_labeled"),
       langGuessCol(col("text")).as("lang_guess")
     )
-  }
 
   /** BPE-ish token counting: alpha runs, digit runs, and single punctuation
     * marks each count as one token (the regex shape a byte-pair pre-tokenizer
@@ -94,11 +92,9 @@ object TextOps {
     * merging per word, via the codegen'd `text_bpe_count` expression —
     * the token-budget number an LLM-pipeline user actually wants (the
     * regex sibling above is the cheap approximation). */
-  def bpeTokenCount(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def bpeTokenCount(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      call_function("text_bpe_count", col("text")).as("n_bpe_tokens"))
-  }
+      text_bpe_count(col("text")).as("n_bpe_tokens"))
 
   /** Position-weighted character fingerprint: sum(ascii(c_i) * i) over the
     * 1-based character positions — deterministic, oracle-mirrorable.

@@ -46,7 +46,6 @@ object Parse {
                     registerCache: DataFrame => Unit = _ => ()): Dataset[FrontierUpdate] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark)
 
     // scoring-metadata page-sourced relay (reference MetadataScoringFilter
     // .distributeScoreToOutlinks with content/parse-stage keys): the PAGE's
@@ -57,7 +56,7 @@ object Parse {
     val pageKeys = cfg.pageRelayKeys
     def pageMetaValue(k: String): Column = k match {
       case "content_type" => col("content_type")
-      case "mime" => call_function("mime_resolve", col("content_type"), col("url"))
+      case "mime" => GraftFunctions.mime_resolve(col("content_type"), col("url"))
       case "n_spans" => size(col("spans")).cast("string")
       case "title" =>
         element_at(filter(col("spans"), s => s.getField("kind") === "text"), 1).getField("text")
@@ -131,20 +130,21 @@ object Parse {
       // filters) as one codegen'd expression
       .withColumn("to_url", GraftFunctions.url_canon_filter(col("l.media_ref"), cfg.urlChain))
       .filter(col("to_url").isNotNull && col("to_url") =!= col("from_url"))
-      .withColumn("to_host", call_function("url_host", col("to_url")))
+      .withColumn("to_host", GraftFunctions.url_host(col("to_url")))
       .withColumn("internal",
         if (cfg.ignoreExternalLinksMode == "byDomain")
-          call_function("url_domain", col("to_host")) === call_function("url_domain", col("from_host"))
+          GraftFunctions.url_domain(col("to_host")) === GraftFunctions.url_domain(col("from_host"))
         else col("to_host") === col("from_host"))
       // db.ignore.external.links: cross-host/domain targets dropped entirely;
       // redirect spans are exempt (the reference treats redirects as fetch
       // outcomes, not discovered links); urlfilter-ignoreexempt regex hits
-      // survive the ignore (to_url already passed the default filters)
+      // survive the ignore (to_url already passed the default filters, so
+      // only the exemption rules run)
       .transform { df =>
         val base = lit(!cfg.ignoreExternalLinks) || col("internal") || col("l.kind") === "redirect"
         if (cfg.ignoreExternalExemptions.isEmpty) df.filter(base)
         else df.filter(base || GraftFunctions.url_accept(col("to_url"),
-          graft.url.UrlChain(Nil, Seq(graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)))))
+          graft.url.RegexUrlFilter(cfg.ignoreExternalExemptions)))
       }
     val exploded = exploded0
       .withColumn("child_score",

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.frontier.{CrawlConfig, DefaultFetchSchedule, UpdateDb}
+import graft.functions.GraftFunctions.{mime_resolve, url_canon_filter, url_canonicalize, url_domain,
+  url_host}
 import graft.schema.FrontierUpdate
 
 /** Relational realizations of the crawl operator inventory (SURVEY.md §2)
@@ -417,14 +419,13 @@ object Relational {
 
   /** §2.7 canonicalization through the native Catalyst expression. */
   def urlCanonicalize(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     documents(s, dir)
       .select(col("doc_id"),
         concat(lit("HTTP://Host-"), (col("doc_id") % 50).cast("string"),
           lit(".Example.COM:80/"), col("source"), lit("/../"), col("source"),
           lit("/?id="), col("doc_id").cast("string"), lit("&PHPSESSID=zz#frag")).as("raw"))
-      .select(col("doc_id"), call_function("url_canonicalize", col("raw")).as("canon"),
-        call_function("url_host", call_function("url_canonicalize", col("raw"))).as("host"))
+      .select(col("doc_id"), url_canonicalize(col("raw")).as("canon"),
+        url_host(url_canonicalize(col("raw"))).as("host"))
   }
 
   /** §2.7 registered-domain extraction through the PSL rules engine: six
@@ -432,7 +433,6 @@ object Relational {
     * wildcard rule, exception rule) — the oracle states the EXPECTED
     * registered domain per class, so a PSL regression breaks the hash. */
   def registeredDomain(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val k = col("doc_id").cast("string")
     val host = when(col("doc_id") % 6 === 0, concat(lit("www.site"), k, lit(".com")))
       .when(col("doc_id") % 6 === 1, concat(lit("a.b.site"), k, lit(".co.uk")))
@@ -442,7 +442,7 @@ object Relational {
       .otherwise(lit("www.ck"))
     documents(s, dir)
       .select(col("doc_id"), host.as("host"))
-      .withColumn("domain", call_function("url_domain", col("host")))
+      .withColumn("domain", url_domain(col("host")))
   }
 
   /** §2.4 score-distribution quantiles (CrawlDbReader stats verb): exact
@@ -466,7 +466,6 @@ object Relational {
     * header with a typed extension, opaque header with a typed extension,
     * nothing usable → default. */
   def mimeResolve(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val k = col("doc_id").cast("string")
     val ct = when(col("doc_id") % 4 === 0, lit("text/HTML; charset=UTF-8"))
       .when(col("doc_id") % 4 === 2, lit("application/octet-stream"))
@@ -476,7 +475,7 @@ object Relational {
       .otherwise(concat(lit("http://h.example.com/page"), k))
     documents(s, dir)
       .select(col("doc_id"), ct.as("content_type"), url.as("url"))
-      .withColumn("mime", call_function("mime_resolve", col("content_type"), col("url")))
+      .withColumn("mime", mime_resolve(col("content_type"), col("url")))
   }
 
   /** §2.1 index-anchor + index-links over a linkdb built from lineitem
@@ -523,7 +522,7 @@ object Relational {
     documents(s, dir).select(col("doc_id"), raw.as("raw"))
       // the chain column; every class passes the default filters, so its
       // output is the normalizers' alone
-      .withColumn("normalized", graft.functions.GraftFunctions.url_canon_filter(col("raw"), chain))
+      .withColumn("normalized", url_canon_filter(col("raw"), chain))
   }
 
   /** §2.1 the IndexingFilter plugin chain (index-basic, index-more, tld,
@@ -532,7 +531,6 @@ object Relational {
     * subcollection blacklisted by prefix. The oracle re-states every
     * produced field. */
   def indexFields(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import graft.index._
     val k = col("doc_id").cast("string")
     val url = when(col("doc_id") % 3 === 0,

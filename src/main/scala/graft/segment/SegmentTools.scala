@@ -3,6 +3,7 @@ package graft.segment
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.store.TableStore
 
 /** Segment inspection + merge tools (reference segment/SegmentMerger.java,
@@ -29,7 +30,7 @@ object SegmentTools {
     val dfs = rounds.flatMap(r => store.loadRound(spark, table, r))
     if (dfs.isEmpty) return None
     val unioned0 = dfs.reduce(_ unionByName _)
-    val unioned = sliceExpr.fold(unioned0)(e => unioned0.filter(expr(e)))
+    val unioned = sliceExpr.fold(unioned0)(e => unioned0.filter(GraftFunctions.sqlExpr(spark, e)))
     val cols = unioned.columns
     val recency = if (cols.contains("fetch_time"))
       struct(col("round"), col("fetch_time")) else struct(col("round"))
@@ -44,7 +45,7 @@ object SegmentTools {
   def dump(spark: SparkSession, store: TableStore, table: String, round: Int,
            sliceExpr: Option[String] = None): Option[DataFrame] =
     store.loadRound(spark, table, round)
-      .map(df => sliceExpr.fold(df)(e => df.filter(expr(e))))
+      .map(df => sliceExpr.fold(df)(e => df.filter(GraftFunctions.sqlExpr(spark, e))))
 
   /** SegmentReader `-get` verb: point lookup across rounds (newest first). */
   def get(spark: SparkSession, store: TableStore, table: String,

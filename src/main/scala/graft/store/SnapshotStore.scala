@@ -149,9 +149,12 @@ class SnapshotStore(val root: String) extends TableStore {
   override def appendMetrics(df: DataFrame, round: Int, stage: String): Unit =
     df.write.mode("overwrite").parquet(tableDir("round_metrics").resolve(s"r$round-$stage").toString)
 
+  // the round+stage directories as paths: an `r*` glob is probed as a
+  // literal file first, which logs a FileNotFoundException stack trace
   override def metrics(spark: SparkSession): Option[DataFrame] = {
-    val dir = tableDir("round_metrics")
-    if (Files.exists(dir)) Some(spark.read.parquet(dir.toString + "/r*")) else None
+    val stages = Option(tableDir("round_metrics").toFile.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("r")).map(_.getPath).sorted
+    if (stages.isEmpty) None else Some(spark.read.parquet(stages: _*))
   }
 
   /** The full snapshot log of a table (Iceberg's `snapshots` metadata

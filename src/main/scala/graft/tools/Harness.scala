@@ -34,7 +34,6 @@ object Harness {
       .config("spark.sql.codegen.cache.maxEntries", graft.cli.Main.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     spark
   }
   def session(cpus: Int): SparkSession = session(cpus, partitions = cpus)

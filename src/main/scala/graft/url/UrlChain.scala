@@ -10,7 +10,8 @@ package graft.url
   * configured filter. A serializable value: closures capture it, and the
   * `url_canon_filter` / `url_accept` expressions hold it as a codegen
   * reference object. The empty chain is the default canonicalize + filter. */
-final case class UrlChain(normalizers: Seq[UrlNormalizer], filters: Seq[UrlFilter]) {
+final case class UrlChain(normalizers: Seq[UrlNormalizer], filters: Seq[UrlFilter])
+    extends UrlFilter {
   private val (pre, post) = normalizers.partition(_ == AjaxNormalizer)
 
   /** Raw → normalized URL; null when unparseable or a normalizer drops it. */
@@ -23,7 +24,7 @@ final case class UrlChain(normalizers: Seq[UrlNormalizer], filters: Seq[UrlFilte
   }
 
   /** All filters must pass (any plugin returning null drops the URL). */
-  def accept(url: String): Boolean = UrlFilters.accept(url) && filters.forall(_.accept(url))
+  override def accept(url: String): Boolean = UrlFilters.accept(url) && filters.forall(_.accept(url))
 
   /** Raw → crawl URL; null = dropped. */
   def apply(raw: String): String = {

@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Crawl
-import graft.fetch.{Fetcher, ProtocolResponse}
-import graft.fixtures.RobotsPolicy
+import graft.fetch.{Fetcher, ProtocolResponse, Robots}
 import graft.frontier.CrawlConfig
 import graft.schema.{CrawlStatus, Doc, Span}
 
@@ -16,7 +15,7 @@ private case class LinkWeb(links: Map[String, Seq[String]]) extends Fetcher {
       targets.zipWithIndex.map { case (t, i) => Span("link", s"l$i", t, i + 1) }
     ProtocolResponse("SUCCESS", null, Doc(url, spans), "text/html", 1)
   }
-  override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+  override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
 }
 
 /** scoring-depth (reference src/plugin/scoring-depth DepthScoringFilter):

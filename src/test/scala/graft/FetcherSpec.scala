@@ -26,14 +26,14 @@ class FetcherSpec extends AnyFunSuite {
   /** A fully scripted fetcher for exact assertions. */
   case class ScriptedFetcher(
       behaviors: Map[String, ProtocolResponse],
-      robotsMap: Map[String, RobotsPolicy],
+      robotsMap: Map[String, Option[Robots.RobotRules]],
       latency: Long = 10
   ) extends Fetcher {
     override def fetch(url: String): ProtocolResponse =
       behaviors.getOrElse(url, ProtocolResponse("SUCCESS", null,
         Doc(url, Seq(Span("text", "hello world content", null, 0))), "text/html", latency))
-    override def robots(host: String): RobotsPolicy =
-      robotsMap.getOrElse(host, RobotsPolicy.AllowAll)
+    override def robotsRules(host: String): Option[Robots.RobotRules] =
+      robotsMap.getOrElse(host, Some(Robots.AllowAll))
   }
 
   def run(tasks: Seq[FetchTask], fetcher: Fetcher, c: CrawlConfig = cfg): (Seq[FetchedPage], Seq[FetchPartitionMetrics]) = {
@@ -120,7 +120,7 @@ class FetcherSpec extends AnyFunSuite {
     // robots Crawl-delay still wins over the stamped delay
     val robots = (1 to 3).map(i => task(s"http://cd.fix.test/p$i").copy(fetch_delay_ms = 500L))
     val (out2, _) = run(robots, ScriptedFetcher(Map.empty,
-      Map("cd.fix.test" -> RobotsPolicy.CrawlDelay(6))))
+      Map("cd.fix.test" -> Some(Robots.RobotRules(Nil, Some(6.0))))))
     val t2 = out2.map(_.fetch_time).sorted
     assert(t2.zip(t2.tail).forall { case (a, b) => b - a >= 6000L },
       "robots Crawl-delay must override the variable delay")
@@ -151,7 +151,7 @@ class FetcherSpec extends AnyFunSuite {
 
   test("robots deny-all → fetch_gone ROBOTS_DENIED, no politeness wait") {
     val tasks = (1 to 5).map(i => task(s"http://deny.fix.test/p$i"))
-    val (out, m) = run(tasks, ScriptedFetcher(Map.empty, Map("deny.fix.test" -> RobotsPolicy.DenyAll)))
+    val (out, m) = run(tasks, ScriptedFetcher(Map.empty, Map("deny.fix.test" -> Some(Robots.DenyAll))))
     assert(out.size == 5)
     assert(out.forall(p => p.status == CrawlStatus.FETCH_GONE && p.protocol_status == "ROBOTS_DENIED"))
     assert(m.head.robots_denied == 5)
@@ -160,11 +160,11 @@ class FetcherSpec extends AnyFunSuite {
 
   test("crawl-delay above max → host skipped as gone; below max → clamped delay honored") {
     val over = (1 to 3).map(i => task(s"http://slow.fix.test/p$i"))
-    val (outOver, _) = run(over, ScriptedFetcher(Map.empty, Map("slow.fix.test" -> RobotsPolicy.CrawlDelay(120))))
+    val (outOver, _) = run(over, ScriptedFetcher(Map.empty, Map("slow.fix.test" -> Some(Robots.RobotRules(Nil, Some(120.0))))))
     assert(outOver.forall(p => p.protocol_status == "ROBOTS_DELAY_TOO_LONG"))
 
     val ok = (1 to 4).map(i => task(s"http://meh.fix.test/p$i"))
-    val (outOk, _) = run(ok, ScriptedFetcher(Map.empty, Map("meh.fix.test" -> RobotsPolicy.CrawlDelay(2))))
+    val (outOk, _) = run(ok, ScriptedFetcher(Map.empty, Map("meh.fix.test" -> Some(Robots.RobotRules(Nil, Some(2.0))))))
     val times = outOk.map(_.fetch_time).sorted
     val gaps = times.zip(times.tail).map { case (a, b) => b - a }
     assert(gaps.forall(_ >= 2000), s"crawl-delay 2s must be honored, gaps=$gaps")
@@ -172,7 +172,7 @@ class FetcherSpec extends AnyFunSuite {
 
   test("robots 5xx → visits deferred as fetch_retry") {
     val (out, m) = run(Seq(task("http://err.fix.test/")),
-      ScriptedFetcher(Map.empty, Map("err.fix.test" -> RobotsPolicy.Unavailable5xx)))
+      ScriptedFetcher(Map.empty, Map("err.fix.test" -> None)))
     assert(out.head.status == CrawlStatus.FETCH_RETRY)
     assert(out.head.protocol_status == "ROBOTS_DEFERRED")
     assert(m.head.robots_deferred == 1)

@@ -85,7 +85,7 @@ class FrontierToolsSpec extends AnyFunSuite with SparkSpecBase {
     val f = new graft.fetch.Fetcher {
       override def fetch(url: String) =
         graft.fetch.ProtocolResponse("SUCCESS", null, graft.schema.Doc(url, Seq.empty), "text/html", 10)
-      override def robots(host: String) = graft.fixtures.RobotsPolicy.AllowAll
+      override def robotsRules(host: String) = Some(graft.fetch.Robots.AllowAll)
     }
     val ms = mutable.ArrayBuffer.empty[graft.fetch.FetchPartitionMetrics]
     val out = graft.fetch.PolitenessExecutor.run(0, tasks.iterator, f, cfg, now, 1, ms += _).toSeq

@@ -297,7 +297,7 @@ class HtmlParseSpec extends AnyFunSuite {
       override def fetch(u: String): graft.fetch.ProtocolResponse =
         graft.fetch.ProtocolResponse("SUCCESS", null, null, "text/html; charset=utf-8", 5,
           content = html.getBytes("UTF-8"))
-      override def robots(host: String) = graft.fixtures.RobotsPolicy.AllowAll
+      override def robotsRules(host: String) = Some(graft.fetch.Robots.AllowAll)
     }
     val cfg = CrawlConfig(numFetchPartitions = 1, serverDelayMs = 10, fetchLatencyMs = 1)
     val tasks = Seq(graft.schema.FetchTask("http://h.test/p1.html",

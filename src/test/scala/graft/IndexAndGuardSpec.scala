@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cli.{Crawl, CrawlRound}
 import graft.fetch._
-import graft.fixtures.{RobotsPolicy, SyntheticWeb, WebConfig}
+import graft.fixtures.{SyntheticWeb, WebConfig}
 import graft.frontier.CrawlConfig
 import graft.index._
 import graft.schema.{Doc, Span}
@@ -44,7 +44,7 @@ class IndexAndGuardSpec extends AnyFunSuite with SparkSpecBase {
         if (url.contains("hang")) Thread.sleep(60000)
         ProtocolResponse("SUCCESS", null, Doc(url, Seq(Span("text", "ok", null, 0))), "text/html", 1)
       }
-      override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+      override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
     }
     val guarded = HungGuardFetcher(stuck, timeoutMs = 300)
     val ok = guarded.fetch("http://a.fix.test/fast")
@@ -54,6 +54,6 @@ class IndexAndGuardSpec extends AnyFunSuite with SparkSpecBase {
     val tookMs = (System.nanoTime() - t0) / 1000000
     assert(hung.code == "RETRY")
     assert(tookMs < 5000, s"guard must cut the call at ~300ms, took ${tookMs}ms")
-    assert(guarded.robots("a.fix.test") == RobotsPolicy.AllowAll)
+    assert(guarded.robotsRules("a.fix.test").contains(Robots.AllowAll))
   }
 }

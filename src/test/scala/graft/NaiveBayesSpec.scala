@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Crawl
-import graft.fetch.{Fetcher, ProtocolResponse}
-import graft.fixtures.RobotsPolicy
+import graft.fetch.{Fetcher, ProtocolResponse, Robots}
 import graft.frontier.CrawlConfig
 import graft.parse.NaiveBayes
 import graft.schema.{Doc, Span}
@@ -17,7 +16,7 @@ private case class TopicWeb(pages: Map[String, (String, Seq[String])]) extends F
       targets.zipWithIndex.map { case (t, i) => Span("link", s"l$i", t, i + 1) }
     ProtocolResponse("SUCCESS", null, Doc(url, spans), "text/html", 1)
   }
-  override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+  override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
 }
 
 /** parsefilter-naivebayes (reference src/plugin/parsefilter-naivebayes):

@@ -3,15 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fetch.Robots
-import graft.fixtures.RobotsPolicy
 
 /** RFC 9309 subset parser semantics. */
 class RobotsSpec extends AnyFunSuite {
 
   test("allow-all / deny-all / crawl-delay classification") {
-    assert(Robots.toPolicy(Robots.parse("User-agent: *\nDisallow:\n", "bot")) == RobotsPolicy.AllowAll)
-    assert(Robots.toPolicy(Robots.parse("User-agent: *\nDisallow: /\n", "bot")) == RobotsPolicy.DenyAll)
-    assert(Robots.toPolicy(Robots.parse("User-agent: *\nCrawl-delay: 2.5\n", "bot")) == RobotsPolicy.CrawlDelay(3))
+    assert(Robots.parse("User-agent: *\nDisallow:\n", "bot") == Robots.AllowAll)
+    val deny = Robots.parse("User-agent: *\nDisallow: /\n", "bot")
+    assert(deny == Robots.DenyAll && deny.deniesAll)
+    val delayed = Robots.parse("User-agent: *\nCrawl-delay: 2.5\n", "bot")
+    assert(delayed.isAllowed("/") && delayed.crawlDelay.contains(2.5))
   }
 
   test("agent group selection: named group beats *") {

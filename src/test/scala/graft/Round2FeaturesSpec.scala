@@ -33,11 +33,6 @@ class FetchRuntime2Spec extends AnyFunSuite {
     override def fetch(url: String): ProtocolResponse =
       behaviors.getOrElse(url, ProtocolResponse("SUCCESS", null,
         Doc(url, Seq(Span("text", "hello world", null, 0))), "text/html", latency))
-    override def robots(host: String): RobotsPolicy =
-      robotsRules(host) match {
-        case None => RobotsPolicy.Unavailable5xx
-        case Some(r) => Robots.toPolicy(r)
-      }
     override def robotsRules(host: String): Option[Robots.RobotRules] =
       bodies.get(host).map(Robots.parse(_, "graftbot")).orElse(Some(Robots.AllowAll))
   }

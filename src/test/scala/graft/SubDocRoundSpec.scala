@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Crawl
-import graft.fetch.{Fetcher, ProtocolResponse}
-import graft.fixtures.RobotsPolicy
+import graft.fetch.{Fetcher, ProtocolResponse, Robots}
 import graft.frontier.CrawlConfig
 import graft.schema.CrawlStatus
 
@@ -28,7 +27,7 @@ private case class TwoFeedFetcher() extends Fetcher {
         rss(url).getBytes("UTF-8"))
     case _ => ProtocolResponse("NOTFOUND", null, null, null, 5)
   }
-  override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+  override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
 }
 
 /** Regression: ParseResult sub-document fetch rows must produce exactly ONE

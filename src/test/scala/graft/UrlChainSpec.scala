@@ -10,7 +10,6 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fetch.{Fetcher, FetchedPage, ProtocolResponse, Robots}
-import graft.fixtures.RobotsPolicy
 import graft.frontier.{CrawlConfig, FrontierTools, Inject, LinkDb, Sitemaps}
 import graft.functions.{UrlAccept, UrlCanonFilter}
 import graft.schema.{CrawlStatus, Doc, FrontierEntry, Span}
@@ -179,7 +178,6 @@ object UrlChainSpec {
     override def fetch(url: String): ProtocolResponse =
       ProtocolResponse("SUCCESS", null,
         Doc(url, urls.zipWithIndex.map { case (u, i) => Span("link", "", u, i) }), "text/xml", 0)
-    override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
     override def robotsRules(host: String): Option[Robots.RobotRules] =
       Some(Robots.RobotRules(Nil, None, Seq(s"http://$host/sitemap.xml")))
   }

@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Crawl
 import graft.fetch.{Fetcher, PolitenessExecutor, ProtocolResponse, Robots}
-import graft.fixtures.RobotsPolicy
 import graft.frontier.CrawlConfig
 import graft.parse.{DocParsers, ZipDocParser}
 import graft.schema.{CrawlStatus, FetchTask}
@@ -22,7 +21,7 @@ private case class ZipFetcher(zipUrl: String, bytes: Array[Byte]) extends Fetche
     if (url == zipUrl)
       ProtocolResponse("SUCCESS", null, null, "application/zip", 5, bytes)
     else ProtocolResponse("NOTFOUND", null, null, null, 5)
-  override def robots(host: String): RobotsPolicy = RobotsPolicy.AllowAll
+  override def robotsRules(host: String): Option[Robots.RobotRules] = Some(Robots.AllowAll)
 }
 
 /** Container parsing (reference ParseResult.java multi-entry + parse-zip):
