@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 
+import graft.fetch.Fetcher
 import graft.frontier.CrawlConfig
 
 /** spark-submit entry point (the reference's bin/nutch verb dispatcher,
@@ -42,36 +43,24 @@ object Main {
     def arg2(what: String): String = args.lift(2).getOrElse {
       System.err.println(s"$verb: missing <$what> operand"); usage(); sys.exit(2)
     }
+    val cfg0 = CrawlConfig(
+      topN = args.lift(3).map(_.toLong)
+        .orElse(sys.env.get("GRAFT_TOPN").map(_.toLong)).getOrElse(50000L))
+    val (cfg, fetcher, fetcherConf) = fetcherChoice(sys.env, cfg0)
+    // the driver's own copy of the file-scheme opt-in
+    if (fetcherConf.contains(FileSchemeExecutorEnv)) graft.url.UrlFilters.allowFileScheme = true
     // master comes from spark-submit on a cluster; default to local[*] so
     // the CLI also runs standalone (sbt runMain / java -cp)
     val builder = SparkSession.builder()
       .appName(s"graft-$verb")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(fetcherConf)
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master(sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val web = graft.fixtures.SyntheticWeb(graft.fixtures.WebConfig(
-      nHosts = sys.env.getOrElse("GRAFT_WEB_HOSTS", "1000").toInt,
-      pagesPerHost = sys.env.getOrElse("GRAFT_WEB_PAGES", "100").toInt))
-    val cfg0 = CrawlConfig(
-      topN = args.lift(3).map(_.toLong)
-        .orElse(sys.env.get("GRAFT_TOPN").map(_.toLong)).getOrElse(50000L))
-    // GRAFT_FETCHER=http: the real java.net.http protocol stack (politeness
-    // waits become real sleeps); default stays the deterministic fixture web
-    val (cfg, fetcher) = sys.env.getOrElse("GRAFT_FETCHER", "synthetic") match {
-      case "http" => (cfg0.copy(realClock = true),
-        graft.fetch.HttpFetcher(
-          agent = sys.env.getOrElse("GRAFT_AGENT", "graftbot/1.0 (graft crawler)")))
-      case "file" =>
-        // protocol-file: crawl a local/mounted corpus; no remote server to
-        // be polite to, and file URLs must clear the scheme filter
-        graft.url.UrlFilters.allowFileScheme = true
-        (cfg0.copy(realClock = true, serverDelayMs = 0), graft.fetch.FileFetcher())
-      case _ => (cfg0, graft.fetch.SyntheticFetcher(web, cfg0.fetchLatencyMs))
-    }
     val crawl = Crawl(spark, storeRoot, cfg, fetcher)
 
     verb match {
@@ -109,6 +98,31 @@ object Main {
     }
     spark.stop()
   }
+
+  /** Executors read the file-scheme opt-in from their own environment
+    * (`UrlFilters.allowFileScheme`), not from the driver's flag. */
+  val FileSchemeExecutorEnv = "spark.executorEnv.GRAFT_ALLOW_FILE_SCHEME"
+
+  /** The crawl config, fetcher and session conf that `GRAFT_FETCHER` in
+    * `env` selects. `http`: the real java.net.http protocol stack
+    * (politeness waits become real sleeps). `file`: protocol-file over a
+    * local/mounted corpus, with no remote server to be polite to; its file
+    * URLs must clear the scheme filter on every executor. Default: the
+    * deterministic fixture web. */
+  def fetcherChoice(env: Map[String, String], cfg0: CrawlConfig)
+      : (CrawlConfig, Fetcher, Map[String, String]) =
+    env.getOrElse("GRAFT_FETCHER", "synthetic") match {
+      case "http" => (cfg0.copy(realClock = true),
+        graft.fetch.HttpFetcher(
+          agent = env.getOrElse("GRAFT_AGENT", "graftbot/1.0 (graft crawler)")), Map.empty)
+      case "file" => (cfg0.copy(realClock = true, serverDelayMs = 0), graft.fetch.FileFetcher(),
+        Map(FileSchemeExecutorEnv -> "true"))
+      case _ =>
+        val web = graft.fixtures.SyntheticWeb(graft.fixtures.WebConfig(
+          nHosts = env.getOrElse("GRAFT_WEB_HOSTS", "1000").toInt,
+          pagesPerHost = env.getOrElse("GRAFT_WEB_PAGES", "100").toInt))
+        (cfg0, graft.fetch.SyntheticFetcher(web, cfg0.fetchLatencyMs), Map.empty)
+    }
 
   private def usage(): Unit =
     System.err.println(

@@ -1,138 +1,121 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{Expression, IsNull, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
-import graft.url.{UrlChain, UrlFilter, Urls}
+import graft.url.{Mime, PublicSuffix, UrlChain, UrlFilter, Urls}
 
-/** Native Catalyst expressions for the URL hot path (SURVEY.md §4 "Custom
-  * Catalyst inventory"). Each generates Java code calling the static
-  * forwarders of the pure graft.url.Urls functions, so they participate in
-  * whole-stage codegen (no UDF serialization boundary).
+/** Native Catalyst expressions for the graft kernels (SURVEY.md §4 "Custom
+  * Catalyst inventory"). Each is a [[Kernel]]: it keeps its SQL name and
+  * children, and the optimizer replaces it with a StaticInvoke of a static
+  * function over Spark's types, so it runs inside whole-stage codegen (no
+  * UDF serialization boundary) and evaluates reflectively when interpreted.
   */
 
-/** Base for string → nullable-string expressions: the generated code calls
-  * `callee` on the input string, interpreted evaluation `eval0`. */
-abstract class StringFnExpr extends UnaryExpression {
-  def eval0(s: String): String
-  protected def callee(ctx: CodegenContext): String
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any): Any = {
-    val r = eval0(v.asInstanceOf[UTF8String].toString)
-    if (r == null) null else UTF8String.fromString(r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val resultTerm = ctx.freshName("graftStr")
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = true;
-      UTF8String ${ev.value} = null;
-      if (!${childGen.isNull}) {
-        String $resultTerm = ${callee(ctx)}(${childGen.value}.toString());
-        if ($resultTerm != null) {
-          ${ev.isNull} = false;
-          ${ev.value} = UTF8String.fromString($resultTerm);
-        }
-      }""")
-  }
+/** A kernel calling `target.fn` on `args` (the children by default), typed
+  * `resultType`. A null argument gives null without a call unless
+  * `propagateNull` is off; `returnNullable` says the call may return null. */
+abstract class Kernel(target: AnyRef, fn: String, resultType: DataType,
+    propagateNull: Boolean = true, returnNullable: Boolean = true)
+    extends RuntimeReplaceable {
+  protected def args: Seq[Expression] = children
+  override lazy val replacement: Expression = StaticInvoke(target.getClass, resultType, fn,
+    args, propagateNull = propagateNull, returnNullable = returnNullable)
 }
 
-/** A [[StringFnExpr]] backed by a static method. */
-abstract class StaticStringExpr extends StringFnExpr {
-  /** Fully-qualified static call, e.g. "graft.url.Urls.canonicalize". */
-  def staticFn: String
-  override protected def callee(ctx: CodegenContext): String = staticFn
+/** Static forwarders from Spark's types to the pure graft.url / graft.ops
+  * functions, one per kernel that needs a conversion. A value a kernel
+  * carries (a URL chain, a filter, a broadcast) arrives as an object literal,
+  * which codegen attaches to the generated class as one reference object. */
+object Kernels {
+  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+
+  def urlCanonicalize(s: UTF8String): UTF8String = utf8(Urls.canonicalize(s.toString))
+  def urlCanonFilter(chain: UrlChain, s: UTF8String): UTF8String = utf8(chain(s.toString))
+  def urlAccept(filter: UrlFilter, s: UTF8String): Boolean = filter.accept(s.toString)
+  def urlHost(s: UTF8String): UTF8String = utf8(Urls.hostOf(s.toString))
+  def urlDomain(host: UTF8String): UTF8String = utf8(Urls.registeredDomainOf(host.toString))
+  def urlTld(host: UTF8String): UTF8String = utf8(PublicSuffix.publicSuffixOf(host.toString))
+  def urlSurt(s: UTF8String): UTF8String = utf8(Urls.surt(s.toString))
+  def urlHash64(s: UTF8String): Long = Urls.hash64(s.toString)
+  def urlHashInterleave(s: UTF8String): Int = Urls.interleaveHash(s.toString)
+  def textFingerprint64(s: UTF8String): Long = Urls.rollingHash64(s.toString)
+  def textBpeCount(s: UTF8String): Long = graft.ops.Bpe.countTokens(s.toString)
+  def mimeResolve(ctNull: Boolean, ct: UTF8String, urlNull: Boolean, url: UTF8String): UTF8String =
+    UTF8String.fromString(Mime.resolve(if (ctNull) null else ct.toString,
+      if (urlNull) null else url.toString))
+  def bloomMightContain(bloom: Broadcast[BloomFilter], h: Long): Boolean =
+    bloom.value.mightContainLong(h)
 }
 
 /** Canonicalize a URL (null for unparseable). */
-case class UrlCanonicalize(child: Expression) extends StaticStringExpr {
-  override def staticFn: String = "graft.url.Urls.canonicalize"
-  override def eval0(s: String): String = Urls.canonicalize(s)
+case class UrlCanonicalize(child: Expression)
+    extends Kernel(Kernels, "urlCanonicalize", StringType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_canonicalize"
 }
 
 /** Raw URL → crawl URL through `chain` (null = dropped); the empty chain is
-  * canonicalize + the default filters. The chain is attached to the
-  * generated class as a reference object (one call per row on the final
-  * UrlChain, inside whole-stage codegen, like [[BloomMightContainLong]]'s
-  * broadcast). */
+  * canonicalize + the default filters. One call per row on the final
+  * UrlChain, a reference object of the generated class, like
+  * [[BloomMightContainLong]]'s broadcast. */
 case class UrlCanonFilter(child: Expression, chain: UrlChain = UrlChain.Empty)
-    extends StringFnExpr {
-  override protected def callee(ctx: CodegenContext): String =
-    ctx.addReferenceObj("urlChain", chain, classOf[UrlChain].getName) + ".apply"
-  override def eval0(s: String): String = chain(s)
+    extends Kernel(Kernels, "urlCanonFilter", StringType) with UnaryLike[Expression] {
+  override protected def args: Seq[Expression] =
+    Seq(Literal.fromObject(chain, ObjectType(classOf[UrlChain])), child)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_canon_filter"
 }
 
 /** Lowercase host of a URL. */
-case class HostOf(child: Expression) extends StaticStringExpr {
-  override def staticFn: String = "graft.url.Urls.hostOf"
-  override def eval0(s: String): String = Urls.hostOf(s)
+case class HostOf(child: Expression)
+    extends Kernel(Kernels, "urlHost", StringType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_host"
 }
 
 /** Registered domain of a host (public-suffix aware). */
-case class RegisteredDomainOf(child: Expression) extends StaticStringExpr {
-  override def staticFn: String = "graft.url.Urls.registeredDomainOf"
-  override def eval0(s: String): String = Urls.registeredDomainOf(s)
+case class RegisteredDomainOf(child: Expression)
+    extends Kernel(Kernels, "urlDomain", StringType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_domain"
 }
 
 /** Public suffix (effective TLD) of a host — the reference's tld plugin
   * (src/plugin/tld TLDIndexingFilter uses URLUtil.getTopLevelDomain). */
-case class PublicSuffixOf(child: Expression) extends StaticStringExpr {
-  override def staticFn: String = "graft.url.PublicSuffix.publicSuffixOf"
-  override def eval0(s: String): String = graft.url.PublicSuffix.publicSuffixOf(s)
+case class PublicSuffixOf(child: Expression)
+    extends Kernel(Kernels, "urlTld", StringType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_tld"
 }
 
 /** 64-bit URL-seen hash (MurmurHash2-64 of the canonical URL). */
-case class UrlHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    Urls.hash64(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.url.Urls.hash64($c.toString())")
+case class UrlHash64(child: Expression)
+    extends Kernel(Kernels, "urlHash64", LongType, returnNullable = false)
+    with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_hash64"
 }
 
 /** Position-weighted interleave hash (politeness spread sort key). */
-case class UrlHashInterleave(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    Urls.interleaveHash(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.url.Urls.interleaveHash($c.toString())")
+case class UrlHashInterleave(child: Expression)
+    extends Kernel(Kernels, "urlHashInterleave", IntegerType, returnNullable = false)
+    with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_hash_interleave"
 }
 
 /** 64-bit rolling-hash document fingerprint (h = 31*h + char), codegen'd.
   * The scale path for document fingerprinting: one pass, no tokenization. */
-case class TextFingerprint64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    graft.url.Urls.rollingHash64(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.url.Urls.rollingHash64($c.toString())")
+case class TextFingerprint64(child: Expression)
+    extends Kernel(Kernels, "textFingerprint64", LongType, returnNullable = false)
+    with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "text_fingerprint64"
 }
@@ -140,59 +123,35 @@ case class TextFingerprint64(child: Expression) extends UnaryExpression {
 /** Codegen'd bloom-membership probe over the broadcast URL-seen filter —
   * closes the last per-row UDF boundary on the update-sized hot paths
   * (UpdateDbColumnar link split, the round's bloom delta and stale-blob
-  * reconcile in UrlSeen). The broadcast handle is attached to the generated class
-  * as a reference object; each row costs one virtual call into the sketch,
-  * inside whole-stage codegen. */
-case class BloomMightContainLong(
-    child: Expression,
-    bloomBc: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]
-) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any = bloomBc.value.mightContainLong(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("seenBloomBc", bloomBc,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"((org.apache.spark.util.sketch.BloomFilter)$bcRef.value()).mightContainLong($c)")
-  }
+  * reconcile in UrlSeen). The broadcast handle is a reference object of the
+  * generated class; each row costs one virtual call into the sketch, inside
+  * whole-stage codegen. */
+case class BloomMightContainLong(child: Expression, bloomBc: Broadcast[BloomFilter])
+    extends Kernel(Kernels, "bloomMightContain", BooleanType, returnNullable = false)
+    with UnaryLike[Expression] {
+  override protected def args: Seq[Expression] =
+    Seq(Literal.fromObject(bloomBc, ObjectType(classOf[Broadcast[_]])), child)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "bloom_might_contain"
 }
 
 /** Content-type resolution: normalized header | by-URL-extension | default
-  * (reference MimeUtil.autoResolveContentType). Binary, codegen'd. */
+  * (reference MimeUtil.autoResolveContentType). Binary, codegen'd; null
+  * inputs resolve too, and the result is never null. Each input rides with
+  * its null flag: generated code leaves a null value undefined (a CASE WHEN
+  * with no ELSE keeps the last matched row's). */
 case class MimeResolve(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val ct = left.eval(input)
-    val url = right.eval(input)
-    UTF8String.fromString(graft.url.Mime.resolve(
-      if (ct == null) null else ct.asInstanceOf[UTF8String].toString,
-      if (url == null) null else url.asInstanceOf[UTF8String].toString))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code = code"""
-      ${l.code}
-      ${r.code}
-      boolean ${ev.isNull} = false;
-      UTF8String ${ev.value} = UTF8String.fromString(graft.url.Mime.resolve(
-        ${l.isNull} ? null : ${l.value}.toString(),
-        ${r.isNull} ? null : ${r.value}.toString()));""")
-  }
+    extends Kernel(Kernels, "mimeResolve", StringType, propagateNull = false,
+      returnNullable = false) with BinaryLike[Expression] {
+  override protected def args: Seq[Expression] = children.flatMap(c => Seq(IsNull(c), c))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "mime_resolve"
 }
 
 /** SURT-form CDX urlkey (WarcCdxWriter's urlkey column). */
-case class UrlSurt(child: Expression) extends StaticStringExpr {
-  override def staticFn: String = "graft.url.Urls.surt"
-  override def eval0(s: String): String = Urls.surt(s)
+case class UrlSurt(child: Expression)
+    extends Kernel(Kernels, "urlSurt", StringType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "url_surt"
 }
@@ -201,15 +160,10 @@ case class UrlSurt(child: Expression) extends StaticStringExpr {
   * filters. The filter is a reference object, like [[UrlCanonFilter]]'s
   * chain. */
 case class UrlAccept(child: Expression, urlFilter: UrlFilter = UrlChain.Empty)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    urlFilter.accept(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val filterTerm = ctx.addReferenceObj("urlFilter", urlFilter, classOf[UrlFilter].getName)
-    defineCodeGen(ctx, ev, c => s"$filterTerm.accept($c.toString())")
-  }
+    extends Kernel(Kernels, "urlAccept", BooleanType, returnNullable = false)
+    with UnaryLike[Expression] {
+  override protected def args: Seq[Expression] =
+    Seq(Literal.fromObject(urlFilter, ObjectType(classOf[UrlFilter])), child)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "url_accept"
 }
@@ -253,13 +207,8 @@ object TextNative {
 
 /** Codegen'd leftmost non-overlapping occurrence count (see [[TextNative]]). */
 case class TextCountSubstr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def nullSafeEval(s: Any, n: Any): Any =
-    TextNative.countSubstr(s.asInstanceOf[UTF8String], n.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, n) => s"graft.functions.TextNative.countSubstr($s, $n)")
+    extends Kernel(TextNative, "countSubstr", LongType, returnNullable = false)
+    with BinaryLike[Expression] {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "text_count_substr"
@@ -268,13 +217,9 @@ case class TextCountSubstr(left: Expression, right: Expression)
 /** Merge-table BPE token count (graft.ops.Bpe): real tiktoken-style greedy
   * pair merging, codegen'd via the static forwarder — token budgeting
   * stays inside whole-stage codegen, no UDF boundary. */
-case class TextBpeCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    graft.ops.Bpe.countTokens(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.Bpe.countTokens($c.toString())")
+case class TextBpeCount(child: Expression)
+    extends Kernel(Kernels, "textBpeCount", LongType, returnNullable = false)
+    with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "text_bpe_count"
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -239,49 +237,20 @@ object VecNative {
 
 /** Codegen'd strict left-to-right dot product of two float/double arrays
   * (see [[VecNative.dot]] for the exactness contract). */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) null
-    else VecNative.dot(a.asInstanceOf[ArrayData], isFloat(left),
-      b.asInstanceOf[ArrayData], isFloat(right))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    val box = ctx.freshName("vecDot")
-    ev.copy(code = code"""
-      ${l.code}
-      ${r.code}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = 0.0;
-      if (!${l.isNull} && !${r.isNull}) {
-        java.lang.Double $box = graft.functions.VecNative.dot(
-          ${l.value}, ${isFloat(left)}, ${r.value}, ${isFloat(right)});
-        if ($box != null) { ${ev.isNull} = false; ${ev.value} = $box.doubleValue(); }
-      }""")
-  }
+case class VecDot(left: Expression, right: Expression)
+    extends Kernel(VecNative, "dot", DoubleType) with BinaryLike[Expression] {
+  private def isFloat(e: Expression): Literal =
+    Literal(e.dataType.asInstanceOf[ArrayType].elementType == FloatType)
+  override protected def args: Seq[Expression] = Seq(left, isFloat(left), right, isFloat(right))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "vec_dot"
 }
 
 /** Codegen'd word n-gram shingling (see [[VecNative.shingles]]). */
-case class TextShingles(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def nullSafeEval(s: Any, n: Any): Any =
-    VecNative.shingles(s.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, n) => s"graft.functions.VecNative.shingles($s, $n)")
+case class TextShingles(left: Expression, right: Expression)
+    extends Kernel(VecNative, "shingles", ArrayType(StringType, containsNull = false),
+      returnNullable = false) with BinaryLike[Expression] {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "text_shingles"
@@ -289,37 +258,16 @@ case class TextShingles(left: Expression, right: Expression) extends BinaryExpre
 
 /** Codegen'd 64-bit token SimHash (see [[VecNative.simhash64]]); null when
   * the text has no non-empty token. */
-case class TextSimhash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else VecNative.simhash64(v.asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val box = ctx.freshName("simhash")
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = 0L;
-      if (!${c.isNull}) {
-        java.lang.Long $box = graft.functions.VecNative.simhash64(${c.value});
-        if ($box != null) { ${ev.isNull} = false; ${ev.value} = $box.longValue(); }
-      }""")
-  }
+case class TextSimhash(child: Expression)
+    extends Kernel(VecNative, "simhash64", LongType) with UnaryLike[Expression] {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "text_simhash"
 }
 
 /** Codegen'd sorted distinct n-gram hash set (see [[VecNative.hashSet]]). */
-case class TextHashSet(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def nullSafeEval(s: Any, n: Any): Any =
-    VecNative.hashSet(s.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, n) => s"graft.functions.VecNative.hashSet($s, $n)")
+case class TextHashSet(left: Expression, right: Expression)
+    extends Kernel(VecNative, "hashSet", ArrayType(LongType, containsNull = false),
+      returnNullable = false) with BinaryLike[Expression] {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "text_hash_set"
@@ -329,40 +277,21 @@ case class TextHashSet(left: Expression, right: Expression) extends BinaryExpres
   * [[VecNative.minhashBands]]); null for a null or empty set. The shape
   * arguments are constants, fixed when the expression is built. */
 case class MinhashBands(child: Expression, numHashes: Int, bands: Int, seed: Long)
-    extends UnaryExpression {
+    extends Kernel(VecNative, "minhashBands", ArrayType(LongType, containsNull = false))
+    with UnaryLike[Expression] {
   require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
     s"bands ($bands) must divide numHashes ($numHashes)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else VecNative.minhashBands(v.asInstanceOf[ArrayData], numHashes, bands, seed)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.VecNative.minhashBands(
-          ${c.value}, $numHashes, $bands, ${seed}L);
-      }
-      boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
+  override protected def args: Seq[Expression] =
+    Seq(child, Literal(numHashes), Literal(bands), Literal(seed))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "minhash_bands"
 }
 
 /** Codegen'd merge intersection size of two sorted distinct bigint arrays
   * (see [[VecNative.intersectSize]]). */
-case class SortedIntersectSize(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecNative.intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecNative.intersectSize($a, $b)")
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends Kernel(VecNative, "intersectSize", IntegerType, returnNullable = false)
+    with BinaryLike[Expression] {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "sorted_intersect_size"

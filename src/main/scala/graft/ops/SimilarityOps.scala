@@ -53,6 +53,12 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
         cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
+    topKPerQuery(scored, k)
+  }
+
+  /** Each query's k best candidates by (cos_bp desc, vec_id asc):
+    * qid, vec_id, cos_bp, rnk. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
     scored
       .withColumn("rnk", row_number().over(w))
@@ -232,10 +238,7 @@ object SimilarityOps {
       .join(q, col("cell") === col("probe") && col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
         cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
-    scored.select("qid", "vec_id", "cos_bp").distinct()
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topKPerQuery(scored.select("qid", "vec_id", "cos_bp").distinct(), k)
   }
 
   /** IVF ANN top-k, one-shot convenience: build + probe. The build's cache
@@ -265,10 +268,6 @@ object SimilarityOps {
       .join(q, col("bucket") === col("probe") && col("vec_id") =!= col("qid"))
       .withColumn("cos_bp",
         cosineBpPre(vec_dot(col("qe"), col("embedding")), col("_qn"), col("_n")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_bp"), asc("vec_id"))
-    scored
-      .select("qid", "vec_id", "cos_bp").distinct()
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topKPerQuery(scored.select("qid", "vec_id", "cos_bp").distinct(), k)
   }
 }

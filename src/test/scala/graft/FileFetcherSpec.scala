@@ -94,4 +94,15 @@ class FileFetcherSpec extends AnyFunSuite with SparkSpecBase {
       assert(frontier.contains(subPage), "b.html discovered via a.html's outlink")
     } finally UrlFilters.allowFileScheme = before
   }
+
+  test("GRAFT_FETCHER=file opts every executor into the file scheme through the session conf") {
+    val cfg = CrawlConfig()
+    val (fileCfg, fetcher, conf) = graft.cli.Main.fetcherChoice(Map("GRAFT_FETCHER" -> "file"), cfg)
+    assert(fetcher.isInstanceOf[FileFetcher] && fileCfg.serverDelayMs == 0)
+    val executorEnv = new org.apache.spark.SparkConf(false).setAll(conf).getExecutorEnv.toMap
+    assert(executorEnv.get("GRAFT_ALLOW_FILE_SCHEME").contains("true"))
+    for (other <- Seq(Map("GRAFT_FETCHER" -> "http"),
+        Map("GRAFT_WEB_HOSTS" -> "2", "GRAFT_WEB_PAGES" -> "2")))
+      assert(graft.cli.Main.fetcherChoice(other, cfg)._3.isEmpty, other)
+  }
 }

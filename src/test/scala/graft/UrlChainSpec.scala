@@ -137,7 +137,8 @@ class UrlChainSpec extends AnyFunSuite with SparkSpecBase {
       .apply(Gen.Parameters.default, Seed(42L)).get :+ null
     val in = BoundReference(0, StringType, nullable = true)
     for (chain <- chains) {
-      val exprs: Seq[Expression] = Seq(UrlCanonFilter(in, chain), UrlAccept(in, chain))
+      val exprs: Seq[Expression] =
+        Seq(UrlCanonFilter(in, chain).replacement, UrlAccept(in, chain).replacement)
       val compiled = GenerateUnsafeProjection.generate(exprs)
       for (s <- strings) {
         val row = InternalRow(if (s == null) null else UTF8String.fromString(s))
@@ -158,7 +159,8 @@ class UrlChainSpec extends AnyFunSuite with SparkSpecBase {
     }
     // the empty chain included: one reference object, and the same code for
     // every chain (one compiled class serves them all)
-    for (mk <- Seq[UrlChain => Expression](UrlCanonFilter(in, _), UrlAccept(in, _))) {
+    for (mk <- Seq[UrlChain => Expression](UrlCanonFilter(in, _).replacement,
+        UrlAccept(in, _).replacement)) {
       val codes = chains.map(c => generated(mk(c)))
       assert(codes.forall(_._2 == 1), codes.map(_._2))
       assert(codes.map(_._1).distinct.size == 1, codes.head._1)
